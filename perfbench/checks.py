@@ -1,8 +1,8 @@
 """Output checks. They run outside the timed region.
 
-- A registry query with a DuckDB oracle: equal row count and an equal
-  order-insensitive hash of the values (columns sorted by name; numbers
-  compared as float64, timestamps as int64 µs, everything else as text).
+- A registry query with a DuckDB oracle: `tools/check_oracle.compare`, the
+  repository's own correctness gate (row count, column names, dtypes and
+  exact order-insensitive values).
 - A registry query without an oracle: row count and Spark's
   `bit_xor(xxhash64(*))` must equal the values in `golden.json`.
 - synth_cycle: the written dataset has n_train × seq_len rows, and a fixed
@@ -14,9 +14,9 @@ import json
 import os
 
 import duckdb
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from tools.check_oracle import compare
 
 GOLDEN_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden.json")
 TABLES = ("events", "documents", "embeddings")
@@ -30,42 +30,6 @@ def duck(sf_dir: str | None = None) -> duckdb.DuckDBPyConnection:
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
-
-
-def _cell(v) -> str:
-    if isinstance(v, (list, tuple, np.ndarray)):
-        return repr([_cell(x) for x in v])
-    return str(v)
-
-
-def value_hash(pdf: pd.DataFrame) -> tuple[int, list[str], int]:
-    """(rows, sorted column names, order-insensitive uint64 hash)."""
-    cols = sorted(pdf.columns)
-    canon = {}
-    for c in cols:
-        s = pdf[c]
-        if pd.api.types.is_datetime64_any_dtype(s):
-            s = s.astype("int64").astype("float64")
-        elif pd.api.types.is_bool_dtype(s) or pd.api.types.is_numeric_dtype(s):
-            s = s.astype("float64")
-        else:
-            s = s.map(_cell)
-        canon[c] = s.reset_index(drop=True)
-    frame = pd.DataFrame(canon, columns=cols)
-    h = pd.util.hash_pandas_object(frame, index=False).to_numpy().sum(dtype=np.uint64)
-    return len(frame), cols, int(h)
-
-
-def compare_frames(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> str | None:
-    """None when equal, else a one-line reason."""
-    a, b = value_hash(spark_pdf), value_hash(oracle_pdf)
-    if a[0] != b[0]:
-        return f"rows spark={a[0]} oracle={b[0]}"
-    if a[1] != b[1]:
-        return f"columns spark={a[1]} oracle={b[1]}"
-    if a[2] != b[2]:
-        return "value hash differs"
-    return None
 
 
 def spark_checksum(df: DataFrame) -> list[int]:
@@ -90,7 +54,7 @@ def collect(df: DataFrame, has_oracle: bool):
 def verify(name: str, got, oracle_sql: str | None, con, golden: dict) -> str | None:
     """None when `got` (from `collect`) is correct, else a one-line reason."""
     if oracle_sql is not None:
-        return compare_frames(got, con.execute(oracle_sql).df())
+        return "; ".join(compare(name, got, con.execute(oracle_sql).df())) or None
     want = golden.get(name)
     if want is None:
         return f"no golden checksum (got {got})"
@@ -110,4 +74,4 @@ def check_synth(spark, run_dir: str, sizes: dict, family: str, lambda_decay: flo
     want = duck().execute(
         oracle.generate_sql(4, sizes["seq_len"], family, lambda_decay=lambda_decay)
     ).df()
-    return compare_frames(got, want)
+    return "; ".join(compare("synth slice", got, want)) or None

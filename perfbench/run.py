@@ -36,7 +36,7 @@ from pathlib import Path
 
 import numpy as np
 
-from tracing import peak_rss_mb
+from tracing import MemoryPeak
 
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
@@ -177,13 +177,14 @@ def end_to_end(bench: Bench, setup_s: float) -> dict:
         "setup_s": setup_s,
         "ops_per_s": len(lat) / wall,
         "latency_p50_s": statistics.median(lat),
-        "peak_rss_mb": peak_rss_mb(os.getpid()),
     }
     bench.final_check()
     return values
 
 
-def per_layer(bench: Bench, start_s: float, warm_s: float, spans_out: str | None) -> dict:
+def per_layer(
+    bench: Bench, start_s: float, warm_s: float, memory: MemoryPeak, spans_out: str | None
+) -> dict:
     import tracing
 
     wall_u, _, _ = bench.timed()
@@ -200,7 +201,7 @@ def per_layer(bench: Bench, start_s: float, warm_s: float, spans_out: str | None
     bench.final_check()
     cores = bench.spark.sparkContext.defaultParallelism
     v = dict.fromkeys(bench.declared, 0.0)
-    v.update({"session.start_s": start_s, "session.warm_s": warm_s})
+    v.update({"session.start_s": start_s, "session.warm_s": warm_s, "spark.peak_rss_mb": memory.mb()})
     v["trace.overhead_s"] = wall_t - wall_u
     v["trace.overhead_pct"] = 100.0 * (wall_t - wall_u) / wall_u
 
@@ -217,13 +218,13 @@ def per_layer(bench: Bench, start_s: float, warm_s: float, spans_out: str | None
             continue
         v["queries.build_s"] += r["build_s"]
         v["queries.exec_s"] += r["exec_s"]
-        touched = [
-            l for l in tracing.QUERY_LAYERS if any(
-                s.layer == l and s.op == r["group"] for s in tracer.spans
-            )
-        ]
+        touched = {
+            s.layer for s in tracer.spans if s.op == r["group"] and s.layer in tracing.QUERY_LAYERS
+        }
         for l in touched:
             v[f"{l}.exec_s"] += r["exec_s"] / len(touched)
+        if not touched:  # the query calls helpers of its own query module
+            v["queries.other_exec_s"] += r["exec_s"]
     v["spark.slot_util"] = v["spark.executor_run_s"] / (exec_wall * cores) if exec_wall else 0.0
     if v["queries.build_s"]:
         v["queries.build_share"] = v["queries.build_s"] / (v["queries.build_s"] + v["queries.exec_s"])
@@ -316,13 +317,14 @@ def run(args, tmp: str, t_proc0: float) -> int:
 
     spark = get_spark("perfbench")
     start_s = time.perf_counter() - t_proc0
+    memory = MemoryPeak(os.getpid()) if args.trace else None
     try:
         host["java"] = spark.sparkContext._jvm.System.getProperty("java.version")
         host["pyspark"] = pyspark.__version__
         bench = Bench(spark, cls(spark, args.scale, tmp), args, declared)
         warm_s = bench.warm_pass()
         if args.trace:
-            values = per_layer(bench, start_s, warm_s, args.spans)
+            values = per_layer(bench, start_s, warm_s, memory, args.spans)
         else:
             values = end_to_end(bench, start_s + warm_s)
         out = bench.result(values)

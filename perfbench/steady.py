@@ -4,7 +4,7 @@ metric's median, quartiles and spread against its bound in BENCHMARK.json.
     python3 perfbench/steady.py --workload synth_cycle --runs 10
     python3 perfbench/steady.py --workload synth_cycle --runs 10 --other ../parent
 
-Run i uses seed (--seed0 + i). Spread = (q3 - q1) / median, with quartiles
+Run i (from 1) uses seed i. Spread = (q3 - q1) / median, with quartiles
 from statistics.quantiles(values, n=4). With --other DIR (a second
 checkout), every seed runs on both checkouts, alternating which goes first,
 and the two medians are compared: `worse` is how much the other checkout's
@@ -46,16 +46,14 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--runs", type=int, default=10)
-    ap.add_argument("--seed0", type=int, default=1)
     ap.add_argument("--other", type=Path, help="second checkout to compare with")
     args = ap.parse_args()
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     metrics = {m["name"]: m for m in spec["end_to_end"]}
     sides = {"this": ROOT} if args.other is None else {"this": ROOT, "other": args.other.resolve()}
     runs: dict[str, list[dict]] = {s: [] for s in sides}
-    for i in range(args.runs):
-        seed = args.seed0 + i
-        order = list(sides) if i % 2 == 0 else list(reversed(sides))
+    for seed in range(1, args.runs + 1):
+        order = list(sides) if seed % 2 else list(reversed(sides))
         for side in order:
             r = run_once(sides[side], args.workload, seed, spec["run_seconds"])
             runs[side].append(r)

@@ -13,6 +13,7 @@ import functools
 import inspect
 import json
 import os
+import threading
 import time
 from dataclasses import asdict, dataclass, field
 
@@ -151,9 +152,6 @@ class Tracer:
                 out[s.layer] = out.get(s.layer, 0.0) + self.self_time(i)
         return out
 
-    def layers_of(self, op: str, start: float, end: float) -> set[str]:
-        return {s.layer for s in self.spans if s.op == op and start <= s.start <= end}
-
     def dump(self, path: str) -> None:
         with open(path, "w") as fh:
             for s in self.spans:
@@ -210,15 +208,52 @@ def descendants(pid: int) -> list[int]:
     return out
 
 
-def peak_rss_mb(pid: int) -> float:
-    """Sum of VmHWM (peak resident set) over the processes below `pid`."""
-    kb = 0
-    for p in descendants(pid):
-        try:
-            with open(f"/proc/{p}/status") as fh:
-                for line in fh:
-                    if line.startswith("VmHWM:"):
-                        kb += int(line.split()[1])
-        except OSError:
-            continue
-    return kb / 1024.0
+def _proc_kb(pid: int, name: str, field: str) -> int:
+    """A `field:  N kB` line of /proc/<pid>/<name>, or 0 once it exited."""
+    try:
+        with open(f"/proc/{pid}/{name}") as fh:
+            for line in fh:
+                if line.startswith(field):
+                    return int(line.split()[1])
+    except (OSError, ValueError):
+        pass
+    return 0
+
+
+def _is_python(pid: int) -> bool:
+    try:
+        with open(f"/proc/{pid}/comm") as fh:
+            return fh.read().startswith("python")
+    except OSError:
+        return False
+
+
+class MemoryPeak:
+    """Peak memory of the Spark JVM plus its Python workers.
+
+    The JVM's own peak resident set (VmHWM) is exact. Python workers are
+    forked from one daemon and share its pages, and they come and go, so
+    their share is sampled: the largest sum of their proportional set size
+    (Pss, shared pages split between the sharers) seen while the run goes."""
+
+    EVERY_S = 0.25
+
+    def __init__(self, pid: int) -> None:
+        self.pid, self.workers_kb = pid, 0
+        self._stop = threading.Event()
+        self._thread = threading.Thread(target=self._sample, daemon=True)
+        self._thread.start()
+
+    def _sample(self) -> None:
+        while not self._stop.wait(self.EVERY_S):
+            kb = sum(_proc_kb(p, "smaps_rollup", "Pss:")
+                     for p in descendants(self.pid) if _is_python(p))
+            self.workers_kb = max(self.workers_kb, kb)
+
+    def mb(self) -> float:
+        """Stop sampling; the JVM peak plus the sampled workers' peak, in MB."""
+        self._stop.set()
+        self._thread.join()
+        jvm_kb = sum(_proc_kb(p, "status", "VmHWM:")
+                     for p in descendants(self.pid) if not _is_python(p))
+        return (jvm_kb + self.workers_kb) / 1024.0

@@ -117,8 +117,7 @@ class SynthCycle:
 # the document / embedding corpora the LLM-data operators serve.
 SESSION_QUERIES = (
     # analytics / tsdb over events.parquet
-    "ev_rolling", "ev_sessionize", "ev_asof", "ev_tumbling", "ev_psi_drift",
-    "ts_sax", "ts_changepoint",
+    "ev_rolling", "ev_sessionize", "ev_asof", "ev_tumbling", "ts_changepoint",
     # dedup, similarity and text over documents / embeddings
     "minhash_lsh", "cosine_topk", "curation_funnel",
 )
