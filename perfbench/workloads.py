@@ -117,9 +117,9 @@ class SynthCycle:
 # the document / embedding corpora the LLM-data operators serve.
 SESSION_QUERIES = (
     # analytics / tsdb over events.parquet
-    "ev_rolling", "ev_sessionize", "ev_asof", "ev_tumbling", "ts_changepoint",
+    "ev_rolling", "ev_asof", "ev_tumbling", "ts_changepoint",
     # dedup, similarity and text over documents / embeddings
-    "minhash_lsh", "cosine_topk", "curation_funnel",
+    "minhash_lsh", "cosine_topk", "text_stats",
 )
 SESSION_SIZES = {
     "full": dict(events=20_000, documents=1_000, embeddings=500),
