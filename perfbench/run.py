@@ -100,8 +100,9 @@ class Bench:
         return t1 - t0, t2 - t1
 
     def warm_pass(self) -> float:
-        """Run every op once, collect and check its output. Returns the
-        Spark-side time (oracle queries and comparisons excluded)."""
+        """Run every op once, collect and check its output, then run
+        `warm_passes - 1` more unchecked passes. Returns the Spark-side time
+        (oracle queries and comparisons excluded)."""
         import checks
 
         spent = 0.0
@@ -124,6 +125,10 @@ class Bench:
                 err = checks.verify(op.name, got, oracles.get(op.name), con, golden)
                 if err:
                     self.fail(f"check {op.name}", err)
+        for k in range(1, self.wl.warm_passes):
+            for op in self.wl.pass_ops(np.random.default_rng([self.args.seed, 999, k])):
+                r = self.run_op(op, f"warm{k}.{op.name}")
+                spent += sum(r) if r else 0.0
         return spent
 
     def timed(self, tracer=None, tag: str = ""):
