@@ -2,9 +2,10 @@
 
 Cheap tests that catch whole classes of bookkeeping mistakes before a
 driver round does: a bench suite entry referring to a renamed registry
-query (the r10 dedup_incremental shadowing lesson), or an oracle SQL
+query (the r10 dedup_incremental shadowing lesson), an oracle SQL
 string that no longer parses after an edit (the full sweep would catch
-it too, but this runs in seconds inside pytest).
+it too, but this runs in seconds inside pytest), or a test module that
+defines one test name twice.
 """
 from __future__ import annotations
 
@@ -65,3 +66,18 @@ def test_all_oracles_parse_in_duckdb():
         except Exception as exc:  # noqa: BLE001 — collect all, report once
             bad.append(f"{name}: {type(exc).__name__}: {str(exc)[:120]}")
     assert not bad, "oracles failed to parse:\n" + "\n".join(bad)
+
+
+def test_no_shadowed_test_functions():
+    """A second top-level `def test_x` in one module silently replaces the
+    first, so pytest never runs it."""
+    dups = []
+    for path in sorted((ROOT / "tests").glob("*.py")):
+        seen: set[str] = set()
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if node.name.startswith("test") and node.name in seen:
+                dups.append(f"{path.name}::{node.name}")
+            seen.add(node.name)
+    assert not dups, dups

@@ -58,7 +58,7 @@ def test_bucketed_join_no_shuffle(spark):
         spark.sql("DROP TABLE bkt_b")
 
 
-def test_partitioned_write_prunes(spark, tmp_path):
+def test_partitioned_write_prunes_by_family(spark, tmp_path):
     # partition-by-family layout: a family filter must prune at the source
     a = generators.generate(spark, 8, 16, "sine").withColumn("family", F.lit("sine"))
     b = generators.generate(spark, 8, 16, "cosine").withColumn("family", F.lit("cosine"))

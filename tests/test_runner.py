@@ -86,3 +86,19 @@ def test_runner_dim3_decomposes_per_channel(spark):
         .pivot(index="t", columns="channel", values="noise")
     )
     assert (pdf[0] != pdf[1]).any() and (pdf[1] != pdf[2]).any()
+
+
+def test_runner_dim3_combined_loss_per_channel(spark):
+    # the spectral term transforms each (series, channel) on its own: one
+    # rfft per channel, not one over the interleaved channels of a series
+    from test_metrics import numpy_losses
+
+    from tsgen import diffusion
+
+    cfg = dict(REFERENCE_CONFIG, dim=3, seq_len=64, loss_type="combined")
+    res = runner.run_config(spark, cfg, scale=0.004)
+    got = res.losses.collect()[0].loss
+    pdf = diffusion.q_sample(res.val, res.schedule, 500, channel="channel").toPandas()
+    assert pdf["series_id"].nunique() == 4 and pdf["channel"].nunique() == 3
+    want = numpy_losses(pdf, "x_t", "value", ["series_id", "channel"])["combined_loss"]
+    assert abs(got - want) <= 1e-12 * want

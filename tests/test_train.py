@@ -24,11 +24,14 @@ def test_exact_linear_target_recovered(spark):
         + w_true[2] * pdf.sqrt_1m_ac
         + w_true[3] * pdf.x_t * pdf.sqrt_1m_ac
     )
-    out = train.fit_linear_denoiser(spark.createDataFrame(pdf)).collect()[0]
-    for i, w in enumerate(w_true):
-        assert abs(out[f"w{i}"] - w) < 1e-8
-    assert out.train_mse < 1e-15
-    assert out.n == 500
+    # at two partition counts, so a summation-order dependence shows
+    for n_parts in (1, 8):
+        df = spark.createDataFrame(pdf).repartition(n_parts)
+        out = train.fit_linear_denoiser(df).collect()[0]
+        for i, w in enumerate(w_true):
+            assert abs(out[f"w{i}"] - w) < 1e-8
+        assert out.train_mse < 1e-15
+        assert out.n == 500
 
 
 def test_fit_matches_numpy_lstsq(spark):

@@ -56,7 +56,7 @@ dedup_threshold_frontier minhash_band_frontier semdedup_eps_frontier
 ivf_cell_profile ann_dims_frontier ann_storage_frontier doc_bm25
 doc_ql_dirichlet doc_bm25_ndcg kmv_set_ops li_salted_join ev_benford ev_did
 ev_cuped ts_its ev_msprt ev_next_event_acc ev_power_analysis ev_qte ev_qini
-ev_shapley_attr loss_fourier loss_combined doc_heaps_law tfidf_top_terms
+ev_shapley_attr doc_heaps_law tfidf_top_terms
 doc_lm_score doc_filter_frontier doc_bigram_lm token_ppmi dsir_scores
 ann_lsh embed_trunc_recall cosine_topk embed_mmr ann_ivf_recall ann_ivf
 embed_map_at_k embed_abtt_recall ann_pq_recall ann_ivfpq_recall
@@ -70,7 +70,7 @@ ev_transition_entropy ts_crosscorr ev_wau ev_bootstrap_ci ts_dtw
 rfm_segments basket_rules li_abc_xyz li_eoq li_wagner_whitin ev_ewma_corr
 ev_time_travel orders_abc ev_funnel_latency stream_dd_quantiles ev_ks_test
 ev_chi_square stream_msprt idle_customers important_parts epoch_metrics
-train_epochs ev_retention_fit key_skew_profile hll_cardinality hll_set_ops
+ev_retention_fit key_skew_profile hll_cardinality hll_set_ops
 dd_quantiles dd_quantiles_by_type ev_value_deciles cms_join_size
 embed_pq graph_hits
 """.split())

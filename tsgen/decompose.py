@@ -24,7 +24,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .spectral import topk_filter_mask
+from .spectral import stack_by_length, topk_filter_mask
 
 DEFAULT_DEGREE = 3  # poly_degree, config.json:22
 DEFAULT_TOP_K = 4  # top_k_freq, config.json:21
@@ -78,17 +78,12 @@ def decompose(
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pinv_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         for pdf in batches:
-            if not len(pdf):
-                continue
-            lengths = pdf["vs"].map(len).to_numpy()
-            for n in np.unique(lengths):
-                sub = pdf[lengths == n]
-                X = np.stack(sub["vs"].to_numpy())
-                T = np.stack(sub["ts"].to_numpy())
+            for sub, (X, T) in stack_by_length(pdf, "vs", "ts"):
+                n = X.shape[1]
                 if n not in pinv_cache:
-                    A = _poly_design(int(n), degree)
-                    pinv_cache[int(n)] = (A, np.linalg.pinv(A))
-                A, Ainv = pinv_cache[int(n)]
+                    A = _poly_design(n, degree)
+                    pinv_cache[n] = (A, np.linalg.pinv(A))
+                A, Ainv = pinv_cache[n]
                 trend = (A @ (Ainv @ X.T)).T
                 det = X - trend
                 spec = np.fft.rfft(det, axis=1)
@@ -98,7 +93,7 @@ def decompose(
                 idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
                 mask = np.zeros_like(mag)
                 np.put_along_axis(mask, idx, 1.0, axis=1)
-                seas = np.fft.irfft(spec * mask, n=int(n), axis=1)
+                seas = np.fft.irfft(spec * mask, n=n, axis=1)
                 yield pd.DataFrame(
                     {
                         **{k: np.repeat(sub[k].to_numpy(), n) for k in keys},

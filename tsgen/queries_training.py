@@ -124,8 +124,9 @@ FROM events GROUP BY event_type
 # --- closed-form denoiser training step (I2/I3 analog) --------------------
 # One exact least-squares "epoch" of a linear noise predictor over q_sample
 # output (models/train_diffusion_ts.py:34-64): sufficient statistics via one
-# aggregation pass, Cramer 4x4 solve as shared SQL text, MSE with no second
-# data pass. See tsgen/train.py for the scale argument.
+# aggregation pass, Cramer 4x4 solve as shared SQL text, MSE from a residual
+# pass (the oracle uses the no-second-pass identity). See tsgen/train.py for
+# the scale argument.
 TD_N, TD_LEN, TD_T = 16, 64, 50
 
 

@@ -69,16 +69,17 @@ def run_config(spark: SparkSession, config: dict, scale: float = 1.0) -> RunResu
     # decomposition of a validation slice (entry point 3 contract); dim>1
     # decomposes each (series, channel) independently — the reference's
     # (batch, seq_len, input_dim) contract, diffusion_ts_model.py:472-487
-    dec_keys = ["series_id", "channel"] if dim != 1 else ["series_id"]
+    series_keys = ["series_id", "channel"] if dim != 1 else ["series_id"]
     dec = decompose.decompose(
-        val.filter(F.col("series_id") < 32).select(*dec_keys, "t", "value"),
+        val.filter(F.col("series_id") < 32).select(*series_keys, "t", "value"),
         degree=degree,
         top_k=top_k,
-        key=dec_keys,
+        key=series_keys,
     )
 
     # training-loss surface (q_sample → loss between x_t and clean signal);
-    # dim>1: one t_step per sample, independent noise per channel
+    # dim>1: one t_step per sample, independent noise per channel, and the
+    # spectral term transforms each (series, channel) on its own
     noisy = diffusion.q_sample(
         val, sched, timesteps, channel="channel" if dim != 1 else None
     )
@@ -86,11 +87,11 @@ def run_config(spark: SparkSession, config: dict, scale: float = 1.0) -> RunResu
     if loss_type == "mse":
         losses = metrics.mse(noisy, "x_t", "value", out="loss")
     elif loss_type == "fourier":
-        losses = metrics.fourier_loss(noisy, "x_t", "value", seq_len).select(
+        losses = metrics.fourier_loss(noisy, "x_t", "value", seq_len, key=series_keys).select(
             F.col("fourier_loss").alias("loss")
         )
     else:  # combined
-        losses = metrics.combined_loss(noisy, "x_t", "value", seq_len).select(
+        losses = metrics.combined_loss(noisy, "x_t", "value", seq_len, key=series_keys).select(
             F.col("combined_loss").alias("loss")
         )
     return RunResult(train, val, sched, dec, losses)

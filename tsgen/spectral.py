@@ -8,11 +8,15 @@ Scale notes:
   the work distributes evenly (series_id is dense → no skew).
 - Values are sorted by t INSIDE the UDF — never rely on input order after a
   shuffle.
-- Composites (top-k filter → inverse FFT) run in the SAME UDF pass where
-  possible (see decompose.py) so the whole spectral pipeline costs exactly
-  one shuffle.
+- Composites (top-k filter → inverse FFT, the time+Fourier loss) run in the
+  SAME UDF pass where possible (decompose.decompose, metrics.fourier_loss)
+  so the whole spectral pipeline costs exactly one shuffle. They use the
+  wide form: a groupBy collects each series into t-sorted arrays, and a
+  mapInPandas transforms a whole Arrow batch at once (stack_by_length).
 """
 from __future__ import annotations
+
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -59,6 +63,23 @@ def irfft(freq_df: DataFrame, seq_len: int, key: str = "series_id") -> DataFrame
         return pd.DataFrame({"series_id": pdf[key].iloc[0], "t": np.arange(seq_len), "value": x})
 
     return freq_df.groupBy(key).applyInPandas(fn, IRFFT_SCHEMA)
+
+
+def stack_by_length(
+    pdf: pd.DataFrame, *cols: str
+) -> Iterator[tuple[pd.DataFrame, list[np.ndarray]]]:
+    """Stack the list columns `cols` of one Arrow batch of wide rows (one
+    series per row, as built by a groupBy collect_list) into matrices.
+
+    Rows are split by series length; for each length n this yields the
+    rows of that length and one (n_rows, n) matrix per column, so a whole
+    batch of equal-length series is one vectorized numpy call (e.g.
+    np.fft.rfft(axis=1)) instead of one pandas call per series.
+    """
+    lengths = pdf[cols[0]].map(len).to_numpy()
+    for n in np.unique(lengths):
+        sub = pdf[lengths == n]
+        yield sub, [np.stack(sub[c].to_numpy()) for c in cols]
 
 
 def topk_filter_mask(spec: np.ndarray, k: int) -> np.ndarray:

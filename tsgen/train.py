@@ -15,11 +15,14 @@ EXACT least-squares solve, fully distributed and DuckDB-oracle-checkable:
    15 doubles).
 2. w = A⁻¹b via Cramer's rule as shared SQL text (decompose.cramer4_exprs —
    the identical expression tree runs in both engines).
-3. train MSE needs NO second data pass: Σ(ε−ε̂)² = Σε² − 2wᵀb + wᵀAw, all
-   from the same aggregates.
+3. train MSE comes from a second pass over the residuals ε − ε̂ with the
+   solved weights. The algebraic identity Σ(ε−ε̂)² = Σε² − 2wᵀb + wᵀAw
+   needs no second pass, but near an exact fit it cancels catastrophically
+   and its low bits follow the summation order; the DuckDB oracles still
+   use it (solver_exprs), rounded to 4 decimals.
 
 This is the idiomatic Spark shape for closed-form model fitting: the data
-never moves, only sufficient statistics do.
+never moves, only sufficient statistics and the four weights do.
 """
 from __future__ import annotations
 
@@ -42,7 +45,8 @@ _RHS_SYMS = ["b0", "b1", "b2", "b3"]
 
 def solver_exprs() -> dict[str, str]:
     """Shared Spark/DuckDB expression text: w0..w3 over the aggregate
-    aliases, plus the no-second-pass MSE over (syy, b*, a*, w*)."""
+    aliases, plus the no-second-pass MSE over (syy, b*, a*, w*) that the
+    oracle SQL uses."""
     e = cramer4_exprs(_A_SYMS, _RHS_SYMS)
     out = {f"w{i}": e[f"c{i}"] for i in range(4)}
     quad = (
@@ -97,35 +101,48 @@ def fourier_feats(timesteps: int) -> list[str]:
     return ["1.0e0", "x", f"(x*sin({w:.17e}*t_step))", f"(x*cos({w:.17e}*t_step))"]
 
 
+def _fit(
+    base: DataFrame, aggs: list[str], feats: list[str], group: list[str] | None
+) -> DataFrame:
+    """Solve the normal equations from the sufficient statistics `aggs`
+    (SQL select-list items over `base`), then take train_mse from a pass
+    over the residuals y − Σ wᵢφᵢ (module docstring, step 3)."""
+    group = group or []
+    # pinned: the solve and the residual pass both read base, and its
+    # lineage (generate → q_sample) would otherwise run once per pass
+    base = base.localCheckpoint(eager=False)
+    e = solver_exprs()
+    sums = [F.expr(a.rsplit(" AS ", 1)[0]).alias(a.rsplit(" AS ", 1)[1]) for a in aggs]
+    cols = ["n", "w0", "w1", "w2", "w3", "baseline_mse"]
+    w = base.groupBy(*group).agg(*sums).select(
+        *group,
+        F.col("a00").cast("bigint").alias("n"),
+        *[F.expr(e[f"w{i}"]).alias(f"w{i}") for i in range(4)],
+        F.expr(e["baseline_mse"]).alias("baseline_mse"),
+    )
+    if group:
+        rows = base.join(F.broadcast(w), group)
+    else:
+        # one row: read it as a scalar subquery, not a nested-loop join
+        ws = w.select(F.struct(*cols)).scalar()
+        rows = base.select("*", *[ws[c].alias(c) for c in cols])
+    terms = [F.col(f"w{i}") * F.expr(f) for i, f in enumerate(feats)]
+    resid = F.col("y") - sum(terms[1:], terms[0])
+    return (
+        rows.groupBy(*group, *cols)
+        .agg(F.avg(resid * resid).alias("train_mse"))
+        .select(*group, "n", "w0", "w1", "w2", "w3", "train_mse", "baseline_mse")
+    )
+
+
 def fit_feature_denoiser(
     base: DataFrame, feats: list[str], group: list[str] | None = None
 ) -> DataFrame:
     """Closed-form least-squares fit of ε̂ = Σ wᵢφᵢ for an arbitrary
     4-feature basis. `base` must expose every column the feature
     expressions reference (e.g. x, t_step) plus `y`; same
-    one-shuffle-of-sufficient-statistics shape as fit_linear_denoiser."""
-    aggs = sums_select_sql_feats(feats, "y").split(", ")
-    if group:
-        g = base.groupBy(*group).agg(
-            *[
-                F.expr(a.rsplit(" AS ", 1)[0]).alias(a.rsplit(" AS ", 1)[1])
-                for a in aggs
-            ]
-        )
-    else:
-        g = base.selectExpr(aggs)
-    e = solver_exprs()
-    w = g.select("*", *[F.expr(e[f"w{i}"]).alias(f"w{i}") for i in range(4)])
-    return w.select(
-        *(group or []),
-        F.col("a00").cast("bigint").alias("n"),
-        "w0",
-        "w1",
-        "w2",
-        "w3",
-        F.expr(e["train_mse"]).alias("train_mse"),
-        F.expr(e["baseline_mse"]).alias("baseline_mse"),
-    )
+    sufficient-statistics solve and residual pass as fit_linear_denoiser."""
+    return _fit(base, sums_select_sql_feats(feats, "y").split(", "), feats, group)
 
 
 def fit_linear_denoiser(noisy: DataFrame, group: list[str] | None = None) -> DataFrame:
@@ -136,31 +153,12 @@ def fit_linear_denoiser(noisy: DataFrame, group: list[str] | None = None) -> Dat
     baseline_mse is the 'loss went down' signal the reference checks
     (test_training.py:157-159).
 
-    With group=['epoch'] this is the whole multi-epoch training loop as ONE
-    aggregation: each epoch's 15 sums partial-aggregate in the same shuffle
-    and each output row solves its own normal equations."""
+    With group=['epoch'] this is the whole multi-epoch training loop as one
+    aggregation plus one residual pass: each epoch's 15 sums
+    partial-aggregate in the same shuffle and each output row solves its
+    own normal equations."""
     base = noisy.selectExpr(
         *(group or []), "x_t AS x", "sqrt_1m_ac AS s", "noise AS y"
     )
     aggs = sums_select_sql("x", "s", "y").split(", ")
-    if group:
-        g = base.groupBy(*group).agg(
-            *[
-                F.expr(a.rsplit(" AS ", 1)[0]).alias(a.rsplit(" AS ", 1)[1])
-                for a in aggs
-            ]
-        )
-    else:
-        g = base.selectExpr(aggs)
-    e = solver_exprs()
-    w = g.select("*", *[F.expr(e[f"w{i}"]).alias(f"w{i}") for i in range(4)])
-    return w.select(
-        *(group or []),
-        F.col("a00").cast("bigint").alias("n"),
-        "w0",
-        "w1",
-        "w2",
-        "w3",
-        F.expr(e["train_mse"]).alias("train_mse"),
-        F.expr(e["baseline_mse"]).alias("baseline_mse"),
-    )
+    return _fit(base, aggs, ["1.0e0", "x", "s", "(x*s)"], group)
