@@ -67,8 +67,9 @@ def test_qsample_t0_near_identity(spark):
 
 def test_sample_fused_equals_driver_loop(spark):
     # the fused single-pass loop must reproduce the driver-loop sampler
-    # (identical LCG noise; fp association in the trend projection differs
-    # at ~1e-13, amplified slightly over steps)
+    # (identical LCG noise and the same trend_seasonality kernel; libm in the
+    # JVM vs numpy and the BLAS batch shape differ at ~1e-15, amplified
+    # slightly over steps)
     a = (
         diffusion.sample(spark, 4, 32, timesteps=6, checkpoint_every=3)
         .toPandas()
@@ -82,6 +83,26 @@ def test_sample_fused_equals_driver_loop(spark):
         .reset_index(drop=True)
     )
     assert np.abs(a.x.to_numpy() - b.x.to_numpy()).max() < 1e-6
+
+
+def test_sample_fused_independent_of_arrow_batching(spark):
+    # one series per Arrow batch vs the default batching: the per-batch
+    # kernel must not couple series, so results agree to fp noise
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    def run():
+        out = diffusion.sample_fused(spark, 8, 64, timesteps=20).toPandas()
+        return out.sort_values(["series_id", "t"]).x.to_numpy()
+
+    default = run()
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        one_per_batch = run()
+    finally:
+        spark.conf.set(conf, before)
+    assert len(default) == 8 * 64
+    assert np.abs(default - one_per_batch).max() < 1e-12
 
 
 def test_sample_conditional_fused_equals_driver_loop(spark):

@@ -4,6 +4,7 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from tsgen import expr as E
+from tsgen.diffusion import SALT_INIT, SALT_PNOISE, _np_lcg3, _np_normal, step_salt
 
 
 def _lcg3(key: int, salt: int) -> int:
@@ -48,6 +49,41 @@ def test_normal_distribution():
     z = np.sqrt(-2 * np.log(1 - u1)) * np.cos(2 * np.pi * u2)
     assert abs(z.mean()) < 0.02
     assert abs(z.std() - 1.0) < 0.02
+
+
+# the largest salts the samplers draw with: the initial state, and the u2
+# stream of the last posterior step of a T=1000 loop
+_SAMPLER_SALTS = [SALT_INIT, step_salt(SALT_PNOISE, 999) + 7919]
+
+
+@given(
+    st.lists(st.integers(0, E.M31 - 1), min_size=1, max_size=64),
+    st.one_of(st.sampled_from(_SAMPLER_SALTS), st.integers(0, SALT_INIT)),
+)
+@settings(max_examples=200, deadline=None)
+def test_np_lcg3_bitmask_equals_mod_reference(keys, salt):
+    k = np.array(keys, dtype=np.int64)
+    h1 = [_lcg3(key, salt) for key in keys]
+    assert _np_lcg3(k, salt).tolist() == h1
+    u1 = np.array(h1) / E.M31
+    u2 = np.array([_lcg3(key, salt + 7919) for key in keys]) / E.M31
+    ref = np.sqrt(-2.0 * np.log(1.0 - u1)) * np.cos(E.TWO_PI * u2)
+    assert np.array_equal(_np_normal(k, salt), ref)
+
+
+def test_np_lcg3_equals_sql_lcg3(spark):
+    from pyspark.sql import functions as F
+
+    # a strided spread over [0, M31) plus both ends
+    keys = spark.range(500).select(
+        F.expr(f"(id * 4294967 + 12345) % {E.M31}").alias("k")
+    ).union(spark.createDataFrame([(0,), (1,), (E.M31 - 1,)], "k bigint"))
+    salts = [0, 7919, *_SAMPLER_SALTS]
+    pdf = keys.select(
+        "k", *[F.expr(E.lcg3("k", s)).alias(f"h{i}") for i, s in enumerate(salts)]
+    ).toPandas()
+    for i, s in enumerate(salts):
+        assert (_np_lcg3(pdf.k.to_numpy(), s) == pdf[f"h{i}"].to_numpy()).all()
 
 
 def test_approx_distinct_accuracy(spark):

@@ -82,10 +82,10 @@ embed_pq graph_hits
 # - graph_hits: the two final L2-norm scalars (1 row each) are
 #   broadcast-crossJoined onto the score tables; they existed before but
 #   were hidden behind the per-half-step localCheckpoint plan truncation
+#   that the deferred-normalization rewrite removed.
 # r14 pruning: ev_logreg / ev_poisson_glm / ev_hazard_glm left the census —
 # the fused IRLS pass pins each 1-row state table eagerly, so the
 # beta-broadcast crossJoin no longer prints as a BNLJ in the lazy plan tail.
-#   that the deferred-normalization rewrite removed.
 
 
 def max_base_scan_count(plan: str) -> tuple[int, str]:

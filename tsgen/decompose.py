@@ -15,10 +15,13 @@ model approximates this; the engine computes the closed-form analogs:
 - seasonality: FFT top-k of the detrended signal, one applyInPandas pass.
 - residual: remainder (G7).
 
-`decompose` runs trend+seasonality+residual in ONE applyInPandas pass
-(single shuffle on series_id) — the fast path used by the sampling loop.
+`decompose` runs trend+seasonality+residual in ONE mapInPandas pass after a
+single shuffle on the series key. Its per-batch kernel, `trend_seasonality`,
+is also the x̂₀ step of the fused samplers in diffusion.py.
 """
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -36,10 +39,38 @@ def _poly_design(n: int, degree: int) -> np.ndarray:
     return np.vander(c, degree + 1, increasing=True)
 
 
-def _fit_trend(x: np.ndarray, degree: int) -> np.ndarray:
-    A = _poly_design(len(x), degree)
-    coef, *_ = np.linalg.lstsq(A, x, rcond=None)
-    return A @ coef
+@functools.lru_cache(maxsize=None)
+def _trend_basis(n: int, degree: int) -> tuple[np.ndarray, np.ndarray]:
+    """(Aᵀ, pinv(A)ᵀ) of the length-n design, cached per worker process and
+    shared by every caller, so both are made read-only."""
+    A = _poly_design(n, degree)
+    basis = A.T, np.linalg.pinv(A).T
+    for b in basis:
+        b.setflags(write=False)
+    return basis
+
+
+def trend_seasonality(X: np.ndarray, degree: int, top_k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(trend, seasonality) of every row of a stacked (m, n) batch — the
+    x̂₀ = trend + seasonality estimate that `decompose` emits and the fused
+    samplers run at every reverse step.
+
+    trend: the least-squares polynomial fit, applied as the factored
+    rank-(degree+1) projection (X·pinv(A)ᵀ)·Aᵀ — 2·m·n·(degree+1) flops
+    instead of the m·n² of the dense n×n A·pinv(A).
+    seasonality: the top_k largest-|amplitude| rfft bins of the detrended
+    rows (per-row argpartition), inverted with irfft.
+    """
+    n = X.shape[1]
+    At, Ainv_t = _trend_basis(n, degree)
+    trend = (X @ Ainv_t) @ At
+    spec = np.fft.rfft(X - trend, axis=1)
+    mag = np.abs(spec)
+    kk = min(top_k, spec.shape[1])
+    idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
+    mask = np.zeros_like(mag)
+    np.put_along_axis(mask, idx, 1.0, axis=1)
+    return trend, np.fft.irfft(spec * mask, n=n, axis=1)
 
 
 def decompose(
@@ -59,10 +90,9 @@ def decompose(
 
     Physical plan: ONE shuffle (groupBy collect_list to wide form), then a
     narrow mapInPandas that processes a whole Arrow batch of series at once —
-    equal-length series are stacked into an (n_series, seq_len) matrix so the
-    polynomial fit is a single pinv matmul and the FFT a single
-    np.fft.rfft(axis=1). ~10-100x less Python/pandas overhead than the
-    per-group applyInPandas form (kept below as decompose_grouped).
+    equal-length series are stacked into an (n_series, seq_len) matrix and
+    handed to `trend_seasonality`, so the polynomial fit is two small matmuls
+    and the FFT a single np.fft.rfft(axis=1) — no per-series pandas call.
     """
     from collections.abc import Iterator
 
@@ -76,24 +106,10 @@ def decompose(
     # list<double> columns, so stacking below is pure numpy (no dict walks)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pinv_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         for pdf in batches:
             for sub, (X, T) in stack_by_length(pdf, "vs", "ts"):
                 n = X.shape[1]
-                if n not in pinv_cache:
-                    A = _poly_design(n, degree)
-                    pinv_cache[n] = (A, np.linalg.pinv(A))
-                A, Ainv = pinv_cache[n]
-                trend = (A @ (Ainv @ X.T)).T
-                det = X - trend
-                spec = np.fft.rfft(det, axis=1)
-                kk = min(top_k, spec.shape[1])
-                mag = np.abs(spec)
-                # per-row top-k mask (vectorized argpartition)
-                idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
-                mask = np.zeros_like(mag)
-                np.put_along_axis(mask, idx, 1.0, axis=1)
-                seas = np.fft.irfft(spec * mask, n=n, axis=1)
+                trend, seas = trend_seasonality(X, degree, top_k)
                 yield pd.DataFrame(
                     {
                         **{k: np.repeat(sub[k].to_numpy(), n) for k in keys},
@@ -106,37 +122,6 @@ def decompose(
                 )
 
     return wide.mapInPandas(fn, schema)
-
-
-def decompose_grouped(
-    df: DataFrame,
-    degree: int = DEFAULT_DEGREE,
-    top_k: int = DEFAULT_TOP_K,
-    value_col: str = "value",
-    key: str = "series_id",
-) -> DataFrame:
-    """Per-group reference implementation (one pandas call per series)."""
-    schema = f"{key} bigint, t bigint, {value_col} double, trend double, seasonality double, residual double"
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t")
-        x = pdf[value_col].to_numpy()
-        trend = _fit_trend(x, degree)
-        det = x - trend
-        spec = np.fft.rfft(det)
-        seas = np.fft.irfft(spec * topk_filter_mask(spec, top_k), n=len(x))
-        return pd.DataFrame(
-            {
-                key: pdf[key].iloc[0],
-                "t": pdf["t"].to_numpy(),
-                value_col: x,
-                "trend": trend,
-                "seasonality": seas,
-                "residual": x - trend - seas,
-            }
-        )
-
-    return df.select(key, "t", value_col).groupBy(key).applyInPandas(fn, schema)
 
 
 def extract_seasonality(

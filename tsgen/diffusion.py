@@ -18,9 +18,12 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import expr as E
+from .decompose import DEFAULT_DEGREE, DEFAULT_TOP_K, decomposition_denoiser, trend_seasonality
 from .schedules import schedule_table
 
 SALT_TSTEP = 31
@@ -153,8 +156,6 @@ def sample(
     from .generators import base_grid
 
     if denoiser is None:
-        from .decompose import decomposition_denoiser
-
         denoiser = decomposition_denoiser
     sched = schedule_table(spark, timesteps, kind).cache()
     sched.count()
@@ -177,105 +178,31 @@ def sample(
 
 
 def _np_lcg3(key, salt: int):
-    """Exact numpy replica of expr.lcg3 (int64-safe: all products < 2^62)."""
-    h = (key * E.LCG_A + E.LCG_C + salt) % E.M31
-    h = (h * h + E.LCG_A) % E.M31
-    h = (h * E.LCG_A + E.LCG_C) % E.M31
-    h = (h * h + E.LCG_C) % E.M31
+    """Exact numpy replica of expr.lcg3. Keys are non-negative and every
+    intermediate stays below 2^63 (all products < 2^62), and M31 = 2^31, so
+    masking with M31 - 1 gives SQL's `% M31` bit for bit without an int64
+    division."""
+    low = E.M31 - 1
+    h = (key * E.LCG_A + (E.LCG_C + salt)) & low
+    h = (h * h + E.LCG_A) & low
+    h = (h * E.LCG_A + E.LCG_C) & low
+    h = (h * h + E.LCG_C) & low
     return h
-
-
-def _np_normal(key, salt: int):
-    import numpy as np
-
-    u1 = _np_lcg3(key, salt) / E.M31
-    u2 = _np_lcg3(key, salt + 7919) / E.M31
-    return np.sqrt(-2.0 * np.log(1.0 - u1)) * np.cos(E.TWO_PI * u2)
-
-
-def sample_fused(
-    spark: SparkSession,
-    n_series: int,
-    seq_len: int,
-    timesteps: int = 50,
-    kind: str = "cosine",
-    degree: int | None = None,
-    top_k: int | None = None,
-) -> DataFrame:
-    """Reverse diffusion with the WHOLE T-step loop fused into one
-    mapInPandas pass.
-
-    Key insight: each series evolves independently (the denoiser and the
-    posterior step are per-series; noise is a pure function of
-    (series_id, t, step)), so the loop needs NO cross-series communication —
-    the driver-loop form (`sample`) pays T shuffles purely for Spark's
-    iteration mechanics. Fusing yields identical values (the numpy LCG is an
-    exact integer replica of the SQL one; asserted in tests) with exactly
-    ONE narrow pass: Range → mapInPandas. At T=500 (config.json:16) this is
-    the difference between 500 scheduled jobs and one.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from .decompose import DEFAULT_DEGREE, DEFAULT_TOP_K, _poly_design
-
-    degree = DEFAULT_DEGREE if degree is None else degree
-    top_k = DEFAULT_TOP_K if top_k is None else top_k
-    sched = {
-        r.t_step: r.asDict() for r in schedule_table(spark, timesteps, kind).collect()
-    }
-    A = _poly_design(seq_len, degree)
-    proj = A @ np.linalg.pinv(A)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            sids = pdf["series_id"].to_numpy()
-            m = len(sids)
-            ts = np.arange(seq_len, dtype=np.int64)
-            keys = (sids[:, None] * 131071 + ts[None, :]) % E.M31
-            X = _np_normal(keys, SALT_INIT)
-            for t in reversed(range(timesteps)):
-                trend = X @ proj.T
-                det = X - trend
-                spec = np.fft.rfft(det, axis=1)
-                mag = np.abs(spec)
-                kk = min(top_k, spec.shape[1])
-                idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
-                mask = np.zeros_like(mag)
-                np.put_along_axis(mask, idx, 1.0, axis=1)
-                x0 = trend + np.fft.irfft(spec * mask, n=seq_len, axis=1)
-                if t > 0:
-                    row = sched[t]
-                    mean = (
-                        row["alpha"] ** 0.5 * (1.0 - row["alpha_cumprod_prev"]) * X
-                        + row["alpha_cumprod_prev"] ** 0.5 * (1.0 - row["alpha"]) * x0
-                    ) / (1.0 - row["alpha_cumprod"])
-                    noise = _np_normal(keys, step_salt(SALT_PNOISE, t))
-                    X = mean + row["posterior_variance"] ** 0.5 * noise
-                else:
-                    X = x0
-            yield pd.DataFrame(
-                {
-                    "series_id": np.repeat(sids, seq_len),
-                    "t": np.tile(ts, m),
-                    "x": X.reshape(-1),
-                }
-            )
-
-    grid = spark.range(n_series).withColumnRenamed("id", "series_id")
-    return grid.mapInPandas(fn, "series_id bigint, t bigint, x double")
 
 
 def _np_u01(key, salt: int):
     return _np_lcg3(key, salt) / E.M31
 
 
+def _np_normal(key, salt: int):
+    u1 = _np_u01(key, salt)
+    u2 = _np_u01(key, salt + 7919)
+    return np.sqrt(-2.0 * np.log(1.0 - u1)) * np.cos(E.TWO_PI * u2)
+
+
 def _np_signal(family: str, sids, seq_len: int, lambda_decay: float = 0.5):
     """numpy replica of expr.signal_expr(family, seq_len) (libm-identical
     up to 1 ulp). sids: int64 array of series ids → (len(sids), seq_len)."""
-    import numpy as np
 
     def u(salt, lo, hi):
         return (lo + (hi - lo) * _np_u01(sids, salt))[:, None]
@@ -296,8 +223,76 @@ def _np_signal(family: str, sids, seq_len: int, lambda_decay: float = 0.5):
     raise ValueError(f"unknown family: {family}")
 
 
-def _np_mixed_signal(sids, seq_len: int):
-    return _np_signal("mixed", sids, seq_len)
+def _np_pt_keys(sids, seq_len: int):
+    """(t, noise key) grid of a batch of series — numpy twin of E.pt_key."""
+    ts = np.arange(seq_len, dtype=np.int64)
+    return ts, (sids[:, None] * 131071 + ts[None, :]) % E.M31
+
+
+def _np_posterior_step(X, x0, row: dict, keys, t: int):
+    """numpy twin of p_sample_step at t > 0 (same LCG noise stream)."""
+    mean = (
+        row["alpha"] ** 0.5 * (1.0 - row["alpha_cumprod_prev"]) * X
+        + row["alpha_cumprod_prev"] ** 0.5 * (1.0 - row["alpha"]) * x0
+    ) / (1.0 - row["alpha_cumprod"])
+    return mean + row["posterior_variance"] ** 0.5 * _np_normal(keys, step_salt(SALT_PNOISE, t))
+
+
+def _fused_map(
+    spark: SparkSession,
+    n_series: int,
+    timesteps: int,
+    kind: str,
+    schema: str,
+    batch: Callable[[dict, np.ndarray], pd.DataFrame],
+) -> DataFrame:
+    """Range(n_series) → one mapInPandas running `batch(sched, series_ids)`
+    once per Arrow batch; `sched` maps t_step to its schedule row."""
+    sched = {r.t_step: r.asDict() for r in schedule_table(spark, timesteps, kind).collect()}
+
+    def fn(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield batch(sched, pdf["series_id"].to_numpy())
+
+    return spark.range(n_series).withColumnRenamed("id", "series_id").mapInPandas(fn, schema)
+
+
+def sample_fused(
+    spark: SparkSession,
+    n_series: int,
+    seq_len: int,
+    timesteps: int = 50,
+    kind: str = "cosine",
+    degree: int = DEFAULT_DEGREE,
+    top_k: int = DEFAULT_TOP_K,
+) -> DataFrame:
+    """Reverse diffusion with the WHOLE T-step loop fused into one
+    mapInPandas pass.
+
+    Key insight: each series evolves independently (the denoiser and the
+    posterior step are per-series; noise is a pure function of
+    (series_id, t, step)), so the loop needs NO cross-series communication —
+    the driver-loop form (`sample`) pays T shuffles purely for Spark's
+    iteration mechanics. Fusing yields identical values (the numpy LCG is an
+    exact integer replica of the SQL one, and x̂₀ is decompose's own
+    `trend_seasonality` kernel; asserted in tests) with exactly ONE narrow
+    pass: Range → mapInPandas. At T=500 (config.json:16) this is the
+    difference between 500 scheduled jobs and one.
+    """
+
+    def batch(sched, sids):
+        ts, keys = _np_pt_keys(sids, seq_len)
+        X = _np_normal(keys, SALT_INIT)
+        for t in reversed(range(timesteps)):
+            trend, seas = trend_seasonality(X, degree, top_k)
+            x0 = trend + seas
+            X = _np_posterior_step(X, x0, sched[t], keys, t) if t > 0 else x0
+        return pd.DataFrame(
+            {"series_id": np.repeat(sids, seq_len), "t": np.tile(ts, len(sids)), "x": X.reshape(-1)}
+        )
+
+    return _fused_map(spark, n_series, timesteps, kind, "series_id bigint, t bigint, x double", batch)
 
 
 def sample_conditional_fused(
@@ -307,73 +302,42 @@ def sample_conditional_fused(
     timesteps: int = 10,
     history_len: int = 16,
     kind: str = "cosine",
-    degree: int | None = None,
-    top_k: int | None = None,
+    degree: int = DEFAULT_DEGREE,
+    top_k: int = DEFAULT_TOP_K,
 ) -> DataFrame:
     """Fused form of sample_conditional: the whole forecast-conditioned
     reverse-diffusion loop in one mapInPandas pass (same independence
     argument as sample_fused; equivalence tested)."""
-    import numpy as np
-    import pandas as pd
 
-    from .decompose import DEFAULT_DEGREE, DEFAULT_TOP_K, _poly_design
+    def batch(sched, sids):
+        ts, keys = _np_pt_keys(sids, seq_len)
+        observed = ts[None, :] < history_len
+        known = _np_signal("mixed", sids, seq_len)
+        X = _np_normal(keys, SALT_INIT)
+        for t in reversed(range(timesteps)):
+            trend, seas = trend_seasonality(X, degree, top_k)
+            x0 = trend + seas
+            if t > 0:
+                X = _np_posterior_step(X, x0, sched[t], keys, t)
+                prev = sched[t - 1]
+                noised_known = prev["sqrt_ac"] * known + prev["sqrt_1m_ac"] * _np_normal(
+                    keys, step_salt(SALT_QNOISE, t)
+                )
+                X = np.where(observed, noised_known, X)
+            else:
+                X = np.where(observed, known, x0)
+        m = len(sids)
+        return pd.DataFrame(
+            {
+                "series_id": np.repeat(sids, seq_len),
+                "t": np.tile(ts, m),
+                "observed": np.tile(observed[0], m),
+                "x": X.reshape(-1),
+            }
+        )
 
-    degree = DEFAULT_DEGREE if degree is None else degree
-    top_k = DEFAULT_TOP_K if top_k is None else top_k
-    sched = {
-        r.t_step: r.asDict() for r in schedule_table(spark, timesteps, kind).collect()
-    }
-    A = _poly_design(seq_len, degree)
-    proj = A @ np.linalg.pinv(A)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            sids = pdf["series_id"].to_numpy()
-            m = len(sids)
-            ts = np.arange(seq_len, dtype=np.int64)
-            keys = (sids[:, None] * 131071 + ts[None, :]) % E.M31
-            observed = ts[None, :] < history_len
-            known = _np_mixed_signal(sids, seq_len)
-            X = _np_normal(keys, SALT_INIT)
-            for t in reversed(range(timesteps)):
-                trend = X @ proj.T
-                det = X - trend
-                spec = np.fft.rfft(det, axis=1)
-                mag = np.abs(spec)
-                kk = min(top_k, spec.shape[1])
-                idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
-                mask = np.zeros_like(mag)
-                np.put_along_axis(mask, idx, 1.0, axis=1)
-                x0 = trend + np.fft.irfft(spec * mask, n=seq_len, axis=1)
-                if t > 0:
-                    row = sched[t]
-                    mean = (
-                        row["alpha"] ** 0.5 * (1.0 - row["alpha_cumprod_prev"]) * X
-                        + row["alpha_cumprod_prev"] ** 0.5 * (1.0 - row["alpha"]) * x0
-                    ) / (1.0 - row["alpha_cumprod"])
-                    X = mean + row["posterior_variance"] ** 0.5 * _np_normal(
-                        keys, step_salt(SALT_PNOISE, t)
-                    )
-                    prev = sched[t - 1]
-                    noised_known = prev["sqrt_ac"] * known + prev["sqrt_1m_ac"] * _np_normal(
-                        keys, step_salt(SALT_QNOISE, t)
-                    )
-                    X = np.where(observed, noised_known, X)
-                else:
-                    X = np.where(observed, known, x0)
-            yield pd.DataFrame(
-                {
-                    "series_id": np.repeat(sids, seq_len),
-                    "t": np.tile(ts, m),
-                    "observed": np.tile(observed[0], m),
-                    "x": X.reshape(-1),
-                }
-            )
-
-    grid = spark.range(n_series).withColumnRenamed("id", "series_id")
-    return grid.mapInPandas(fn, "series_id bigint, t bigint, observed boolean, x double")
+    schema = "series_id bigint, t bigint, observed boolean, x double"
+    return _fused_map(spark, n_series, timesteps, kind, schema, batch)
 
 
 def sample_conditional(
@@ -404,8 +368,6 @@ def sample_conditional(
     df = forecast_mask(known, history_len).withColumn(
         "x", F.expr(_E.normal(_E.pt_key(), SALT_INIT))
     )
-    from .decompose import decomposition_denoiser
-
     for i, t in enumerate(reversed(range(timesteps))):
         dec = decomposition_denoiser(df.select("series_id", "t", "x"), t)
         df = df.drop("x").join(dec, ["series_id", "t"])
@@ -432,8 +394,8 @@ def sample_conditional_label(
     kind: str = "cosine",
     families: tuple[str, ...] = ("sine", "cosine", "mixed", "exponential_decay"),
     guidance: float = 1.0,
-    degree: int | None = None,
-    top_k: int | None = None,
+    degree: int = DEFAULT_DEGREE,
+    top_k: int = DEFAULT_TOP_K,
 ) -> DataFrame:
     """Label-conditional reverse diffusion with classifier-free-guidance-style
     blending — the deterministic analog of the reference's class-conditioned
@@ -455,67 +417,33 @@ def sample_conditional_label(
     → (series_id, label, t, x); with guidance=1 the t=0 replace makes the
     final x exactly the labeled family signal (property-tested).
     """
-    import numpy as np
-    import pandas as pd
-
-    from .decompose import DEFAULT_DEGREE, DEFAULT_TOP_K, _poly_design
-
-    degree = DEFAULT_DEGREE if degree is None else degree
-    top_k = DEFAULT_TOP_K if top_k is None else top_k
     n_fam = len(families)
-    sched = {
-        r.t_step: r.asDict() for r in schedule_table(spark, timesteps, kind).collect()
-    }
-    A = _poly_design(seq_len, degree)
-    proj = A @ np.linalg.pinv(A)
 
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            sids = pdf["series_id"].to_numpy()
-            m = len(sids)
-            ts = np.arange(seq_len, dtype=np.int64)
-            keys = (sids[:, None] * 131071 + ts[None, :]) % E.M31
-            labels = np.floor(_np_u01(sids, E.SALT_LABEL) * n_fam).astype(np.int64)
-            # per-label family dispatch: evaluate each family's signal for the
-            # batch, select rows by label (n_fam small → negligible overhead)
-            cond = np.zeros((m, seq_len))
-            for li, fam in enumerate(families):
-                sel = labels == li
-                if sel.any():
-                    cond[sel] = _np_signal(fam, sids[sel], seq_len)
-            X = _np_normal(keys, SALT_INIT)
-            for t in reversed(range(timesteps)):
-                trend = X @ proj.T
-                det = X - trend
-                spec = np.fft.rfft(det, axis=1)
-                mag = np.abs(spec)
-                kk = min(top_k, spec.shape[1])
-                idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
-                mask = np.zeros_like(mag)
-                np.put_along_axis(mask, idx, 1.0, axis=1)
-                uncond = trend + np.fft.irfft(spec * mask, n=seq_len, axis=1)
-                x0 = uncond + guidance * (cond - uncond)
-                if t > 0:
-                    row = sched[t]
-                    mean = (
-                        row["alpha"] ** 0.5 * (1.0 - row["alpha_cumprod_prev"]) * X
-                        + row["alpha_cumprod_prev"] ** 0.5 * (1.0 - row["alpha"]) * x0
-                    ) / (1.0 - row["alpha_cumprod"])
-                    X = mean + row["posterior_variance"] ** 0.5 * _np_normal(
-                        keys, step_salt(SALT_PNOISE, t)
-                    )
-                else:
-                    X = x0
-            yield pd.DataFrame(
-                {
-                    "series_id": np.repeat(sids, seq_len),
-                    "label": np.repeat(labels, seq_len),
-                    "t": np.tile(ts, m),
-                    "x": X.reshape(-1),
-                }
-            )
+    def batch(sched, sids):
+        m = len(sids)
+        ts, keys = _np_pt_keys(sids, seq_len)
+        labels = np.floor(_np_u01(sids, E.SALT_LABEL) * n_fam).astype(np.int64)
+        # per-label family dispatch: evaluate each family's signal for the
+        # batch, select rows by label (n_fam small → negligible overhead)
+        cond = np.zeros((m, seq_len))
+        for li, fam in enumerate(families):
+            sel = labels == li
+            if sel.any():
+                cond[sel] = _np_signal(fam, sids[sel], seq_len)
+        X = _np_normal(keys, SALT_INIT)
+        for t in reversed(range(timesteps)):
+            trend, seas = trend_seasonality(X, degree, top_k)
+            uncond = trend + seas
+            x0 = uncond + guidance * (cond - uncond)
+            X = _np_posterior_step(X, x0, sched[t], keys, t) if t > 0 else x0
+        return pd.DataFrame(
+            {
+                "series_id": np.repeat(sids, seq_len),
+                "label": np.repeat(labels, seq_len),
+                "t": np.tile(ts, m),
+                "x": X.reshape(-1),
+            }
+        )
 
-    grid = spark.range(n_series).withColumnRenamed("id", "series_id")
-    return grid.mapInPandas(fn, "series_id bigint, label bigint, t bigint, x double")
+    schema = "series_id bigint, label bigint, t bigint, x double"
+    return _fused_map(spark, n_series, timesteps, kind, schema, batch)

@@ -24,6 +24,8 @@ def get_spark(app_name: str = "tsgen", shuffle_partitions: int | None = None) ->
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("TSGEN_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # stage progress bars would interleave with callers' stderr lines
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.warehouse.dir", "/tmp/tsgen-warehouse")
         # events.parquet is TIMESTAMP(NANOS), which the vectorized reader
         # rejects; read nanos as long everywhere (the _events helper converts
