@@ -1,10 +1,10 @@
-"""Structural guards for the driver contract and the bench suite.
+"""Structural guards for the driver contract and the benchmark.
 
-Cheap tests that catch whole classes of bookkeeping mistakes before a
-driver round does: a bench suite entry referring to a renamed registry
-query (the r10 dedup_incremental shadowing lesson), an oracle SQL
-string that no longer parses after an edit (the full sweep would catch
-it too, but this runs in seconds inside pytest), or a test module that
+Cheap tests that catch whole classes of bookkeeping mistakes: a benchmark
+session query referring to a renamed registry query, a second registration
+silently replacing a query (the r10 dedup_incremental shadowing lesson), an
+oracle SQL string that no longer parses after an edit (the full sweep would
+catch it too, but this runs in seconds inside pytest), or a test module that
 defines one test name twice.
 """
 from __future__ import annotations
@@ -20,29 +20,62 @@ TABLES = (
 )
 
 
-def _bench_suite_names() -> list[str]:
-    """String constants of the `suite = [...]` literal in bench.py."""
-    tree = ast.parse((ROOT / "bench.py").read_text())
-    for node in ast.walk(tree):
+def _session_query_names() -> list[str]:
+    """The SESSION_QUERIES tuple of perfbench/workloads.py, read without
+    importing it (the module imports the benchmark's data generator)."""
+    tree = ast.parse((ROOT / "perfbench" / "workloads.py").read_text())
+    for node in tree.body:
         if isinstance(node, ast.Assign) and any(
-            isinstance(t, ast.Name) and t.id == "suite" for t in node.targets
+            isinstance(t, ast.Name) and t.id == "SESSION_QUERIES" for t in node.targets
         ):
-            return [
-                c.value
-                for c in ast.walk(node.value)
-                if isinstance(c, ast.Constant) and isinstance(c.value, str)
-            ]
-    raise AssertionError("no `suite = [...]` assignment found in bench.py")
+            return list(ast.literal_eval(node.value))
+    raise AssertionError("no `SESSION_QUERIES = (...)` in perfbench/workloads.py")
 
 
-def test_bench_suite_names_are_registered():
+def test_perfbench_session_queries_are_registered():
     from tsgen.queries import registry
 
     reg = registry()
-    suite = _bench_suite_names()
-    assert len(suite) > 100  # the registry-backed block, not a stub
-    missing = [n for n in suite if n not in reg]
-    assert not missing, f"bench.py suite names not in registry: {missing}"
+    names = _session_query_names()
+    assert names
+    missing = [n for n in names if n not in reg]
+    assert not missing, f"SESSION_QUERIES names not in registry: {missing}"
+
+
+def test_duplicate_registry_name_raises():
+    import pytest
+
+    from tsgen.queries import _REGISTRY, Query, register, registry
+
+    before = registry()
+    name = next(iter(before))
+    other = Query(name, lambda spark, sf_dir: None)
+    with pytest.raises(ValueError, match=name):
+        register(name)(other.spark_fn)
+    with pytest.raises(ValueError, match=name):
+        _REGISTRY[name] = other
+    with pytest.raises(ValueError, match=name):
+        _REGISTRY.update({"not_a_registered_query": other, name: other})
+    after = registry()
+    assert list(after) == list(before)
+    assert all(after[n] is before[n] for n in before)
+
+
+def test_registry_starts_with_generator_queries():
+    """The generator queries register when tsgen.queries is imported, so they
+    lead the registry even when a stage module is imported first."""
+    import subprocess
+    import sys
+
+    code = (
+        "import tsgen.queries_statemodels\n"
+        "from tsgen import expr\n"
+        "from tsgen.queries import registry\n"
+        "gens = [f'gen_{f}' for f in expr.FAMILIES]\n"
+        "gens += ['gen_labeled', 'series_stats', 'sample_data_mixed']\n"
+        "assert list(registry())[:len(gens)] == gens, list(registry())[:len(gens)]\n"
+    )
+    subprocess.run([sys.executable, "-c", code], cwd=ROOT, check=True)
 
 
 def test_all_oracles_parse_in_duckdb():

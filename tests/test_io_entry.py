@@ -180,26 +180,3 @@ def test_doc_counts_match_registry():
     m = re.search(r"(\d+) registry queries — (\d+) oracle-checked, (\d+)\s*rows-only", cov)
     assert m, "COVERAGE totals line missing"
     assert tuple(map(int, m.groups())) == (total, oracled, rows_only)
-
-
-def test_driver_window_composition_derived():
-    """The driver hashes the FIRST 50 registry entries. The window is rotated
-    each round via _WINDOW_PRIORITY (VERDICT r02 item 1); derive the expected
-    composition from that tuple + registration order (VERDICT r04 item 1: a
-    hand-pinned snapshot desynced from a deliberate rotation in r4), so the
-    invariants hold under every rotation:
-      - _WINDOW_PRIORITY has >= 50 names, no duplicates, all registered
-      - the first 50 registry entries are exactly _WINDOW_PRIORITY[:50]
-      - every windowed query has a DuckDB oracle (rows-only entries would
-        waste a certification slot)"""
-    from tsgen.queries import _WINDOW_PRIORITY, registry
-
-    reg = registry()
-    assert len(_WINDOW_PRIORITY) >= 50
-    assert len(set(_WINDOW_PRIORITY)) == len(_WINDOW_PRIORITY)
-    missing = [n for n in _WINDOW_PRIORITY if n not in reg]
-    assert not missing, f"window names not in registry: {missing}"
-    first50 = list(reg)[:50]
-    assert first50 == list(_WINDOW_PRIORITY[:50])
-    no_oracle = [n for n in first50 if not reg[n].oracle]
-    assert not no_oracle, f"windowed queries without oracle: {no_oracle}"

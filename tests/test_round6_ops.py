@@ -464,50 +464,6 @@ def test_new_evals_partition_invariant(spark):
         assert a == b, f"{fn.__name__} changed under repartition({parts})"
 
 
-def test_rotate_window_pads_with_stale_certs_when_backlog_short():
-    # r10 will exercise the padding path for the first time: when the
-    # never-certified backlog is < 47, the window must still be exactly 50
-    # unique oracle-bearing names, backlog first, then the LEAST-recently-
-    # certified names (oldest driver round first).
-    import importlib.util
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    spec = importlib.util.spec_from_file_location(
-        "rotate_window_padtest", root / "tools" / "rotate_window.py"
-    )
-    rw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rw)
-    from tsgen.queries import registry
-
-    reg = registry()
-    oracle_names = [n for n in reg if reg[n].oracle]
-    # Synthesize the 10-name backlog instead of slicing the LIVE
-    # rw.backlog(): once cumulative certification completes (the r11 gate
-    # emptied the real backlog) a live slice degenerates to [] and the
-    # window[3:13] assertion can never hold (VERDICT r11). Stub backlog()
-    # too so the test is independent of the repo's certification state.
-    fake_backlog = [n for n in oracle_names if n not in rw.CANARIES][:10]
-    fake_rounds = {
-        n: 1 + (i % 8)
-        for i, n in enumerate(oracle_names)
-        if n not in fake_backlog
-    }
-    rw.certified_by_round = lambda: dict(fake_rounds)
-    rw.certified = lambda: set(fake_rounds)
-    rw.backlog = lambda: list(fake_backlog)
-    window = rw.build_window()
-    assert len(window) == 50 and len(set(window)) == 50
-    assert window[:3] == rw.CANARIES
-    assert window[3:13] == fake_backlog
-    pad = window[13:]
-    # pad is drawn oldest-certified-first and every pad name is certified
-    pad_rounds = [fake_rounds[n] for n in pad if n in fake_rounds]
-    assert pad_rounds == sorted(pad_rounds)
-    for n in window:
-        assert n in reg and (reg[n].oracle or n in rw.CANARIES), n
-
-
 def test_plan_lint_core_queries_clean(spark):
     # fast subset of tools/plan_lint.py: the heavy/flagship queries must
     # never regress to a row-at-a-time Python UDF or an unbounded
@@ -556,110 +512,6 @@ def test_recompute_census_floor_holds(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         n, src = max_base_scan_count(plan)
         assert n <= 3, f"{name}: base {src} scanned {n}x"
-
-
-def test_rotate_window_tool_emits_valid_window(spark):
-    import subprocess
-    import sys
-    from pathlib import Path
-
-    from tsgen.queries import registry
-
-    root = Path(__file__).resolve().parent.parent
-    out = subprocess.run(
-        [sys.executable, "tools/rotate_window.py", "--names"],
-        capture_output=True, text=True, cwd=root, check=True,
-    )
-    names = out.stdout.split()
-    reg = registry()
-    assert len(names) == 50 and len(set(names)) == 50
-    assert names[:3] == ["gen_sine", "series_stats", "sample_data_mixed"]
-    for n in names:
-        assert n in reg and reg[n].oracle, n
-
-
-def test_rotate_window_invalidation_reenters_backlog():
-    # ADVICE r08: a behavior-affecting change to an already-certified query
-    # must re-enter the rotation — a green row OLDER than the invalidation
-    # round no longer counts as certified, while a green row at-or-after
-    # the invalidation round does.
-    import importlib.util
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    spec = importlib.util.spec_from_file_location(
-        "rotate_window", root / "tools" / "rotate_window.py"
-    )
-    rw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rw)
-    for name in ("ann_ivf", "ann_ivf_recall", "embed_kmeans", "embed_pq"):
-        assert name in rw.INVALIDATED, name
-    by_round = rw.certified_by_round()
-    for name, rnd in rw.INVALIDATED.items():
-        got = by_round.get(name)
-        assert got is None or got >= rnd, (
-            f"{name}: certified round {got} predates invalidation round {rnd} "
-            "but was not dropped from the certified set"
-        )
-
-
-def test_rotate_window_audit_ancestry():
-    # ADVICE r10: the INVALIDATED round mapping is only trustworthy if
-    # every rewire landed strictly before the corresponding driver round's
-    # gate ran. audit() asserts REWIRE_LANDED[N] is an ancestor of the
-    # parent of the commit that added CORRECTNESS_r{N}.json; keep that
-    # assertion green as history grows.
-    import importlib.util
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    if not (root / ".git").exists():
-        import pytest
-
-        pytest.skip("not a git checkout")
-    spec = importlib.util.spec_from_file_location(
-        "rotate_window_audittest", root / "tools" / "rotate_window.py"
-    )
-    rw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rw)
-    # every invalidation round must have a recorded rewire boundary
-    assert set(rw.REWIRE_LANDED) == set(rw.INVALIDATED.values())
-    rw.audit()  # raises AssertionError on any ancestry violation
-
-
-def test_certification_freshness_lag_bounded():
-    # VERDICT r11 item 6: with cumulative certification complete, every
-    # window is stale-refresh — staleness must be a RED TEST, not a
-    # judgment call. The 47 refresh slots per round cycle the ~400-name
-    # registry in ceil(399/46) ~ 9 rounds, so steady-state oldest lag is
-    # ~9; a lag > 10 means a round skipped its rotation ritual.
-    import glob
-    import importlib.util
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    spec = importlib.util.spec_from_file_location(
-        "rotate_window_freshtest", root / "tools" / "rotate_window.py"
-    )
-    rw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rw)
-    rounds = [
-        int("".join(ch for ch in Path(f).name if ch.isdigit()) or 0)
-        for f in glob.glob(str(root / "CORRECTNESS_r*.json"))
-    ]
-    current = max(rounds)
-    by_round = rw.certified_by_round()
-    oldest = min(by_round.values())
-    # NOTE deliberately the ONLY assertion: anything comparing the committed
-    # window against live certification state goes red the moment the driver
-    # commits the next CORRECTNESS file (the r11 pad-test lesson). The lag
-    # bound alone survives a gate commit and tolerates one skipped rotation
-    # (steady-state lag ~9) before going red.
-    assert oldest >= current - 10, (
-        f"stalest certification is round {oldest} but the driver is at "
-        f"round {current} — the rotation ritual fell behind; rotate and "
-        f"replay the window (tools/rotate_window.py)"
-    )
 
 
 def test_interval_join_plan_is_hash_not_nested_loop(spark):

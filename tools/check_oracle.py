@@ -4,11 +4,6 @@ Runs every queries() entry on Spark and its oracle_sql() on DuckDB over the
 same sf dir, compares row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [name_filter...]
-           [--first=N]      check only the first N registry entries
-                            (replicates the driver's 50-name window)
-           [--json=PATH]    persist a CORRECTNESS_r*.json-shaped result
-                            map (rows/schema/hash match per query) so a
-                            local gate can be diffed against the driver's
 """
 from __future__ import annotations
 
@@ -95,15 +90,6 @@ def compare(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> lis
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     filters = sys.argv[2:]
-    first_n = None  # --first=N replicates the driver's first-N window
-    json_out = None  # --json=PATH persists a CORRECTNESS-style result map
-    for f in list(filters):
-        if f.startswith("--first="):
-            first_n = int(f.split("=", 1)[1])
-            filters.remove(f)
-        elif f.startswith("--json="):
-            json_out = f.split("=", 1)[1]
-            filters.remove(f)
     import __spark_entry__ as entry_mod
     from tsgen.session import get_spark
 
@@ -112,10 +98,7 @@ def main() -> int:
     qs = entry_mod.queries()
     osql = entry_mod.oracle_sql()
     n_pass = n_fail = n_noracle = 0
-    results: dict[str, dict] = {}
-    for i, (name, fn) in enumerate(qs.items()):
-        if first_n is not None and i >= first_n:
-            break
+    for name, fn in qs.items():
         if filters and not any(f in name for f in filters):
             continue
         t0 = time.time()
@@ -124,29 +107,18 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {exc}")
             n_fail += 1
-            results[name] = {"err": f"spark: {exc}"[:300]}
             continue
         if name not in osql:
             print(f"—     {name}: no oracle ({len(spdf)} rows, {time.time()-t0:.1f}s)")
             n_noracle += 1
-            results[name] = {"spark_rows": len(spdf), "oracle_rows": None, "err": None}
             continue
         try:
             opdf = con.execute(osql[name]).df()
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL  {name}: oracle error: {exc}")
             n_fail += 1
-            results[name] = {"err": f"oracle: {exc}"[:300]}
             continue
         problems = compare(name, spdf, opdf)
-        results[name] = {
-            "rows_match": len(spdf) == len(opdf),
-            "schema_match": sorted(spdf.columns) == sorted(opdf.columns),
-            "hash_match": not problems,
-            "spark_rows": len(spdf),
-            "oracle_rows": len(opdf),
-            "err": None,
-        }
         if problems:
             n_fail += 1
             print(f"FAIL  {name} ({time.time()-t0:.1f}s)")
@@ -156,12 +128,6 @@ def main() -> int:
             n_pass += 1
             print(f"pass  {name} ({len(spdf)} rows, {time.time()-t0:.1f}s)")
     print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} rows-only")
-    if json_out:
-        import json
-
-        with open(json_out, "w") as fh:
-            json.dump(results, fh, indent=1)
-        print(f"wrote {json_out} ({len(results)} entries)")
     return 1 if n_fail else 0
 
 

@@ -33,7 +33,7 @@ Usage:
 Exit code 1 iff any ERROR (BatchEvalPython) is found; WARN/INFO are
 reported for human review (bounded-broadcast truth baselines are the
 expected BroadcastNestedLoopJoin population — compare the census against
-the list in NEXT.md when it grows).
+BNLJ_ADJUDICATED below when it grows).
 """
 from __future__ import annotations
 
@@ -46,11 +46,11 @@ sys.path.insert(0, ".")
 
 # Every BroadcastNestedLoopJoin site adjudicated through round 11 — each is
 # an all-pairs join against a BOUNDED broadcast side (≤64-query truth sets,
-# ≤16-row frontier dims, scalar totals), reviewed plan-by-plan in the round
-# NEXT.md/VERDICT records. The standing alarm is "a new NON-adjudicated
-# site", not the raw count: the tool prints the delta so a new site can't
-# hide inside a stable-looking total. When a new site IS adjudicated
-# (bounded dim, documented in NEXT.md), add it here in the same commit.
+# ≤16-row frontier dims, scalar totals), reviewed plan-by-plan. The standing
+# alarm is "a new NON-adjudicated site", not the raw count: the tool prints
+# the delta so a new site can't hide inside a stable-looking total. When a
+# new site IS adjudicated (bounded dim, with the reason written next to the
+# query), add it here in the same commit.
 BNLJ_ADJUDICATED = frozenset("""
 dedup_threshold_frontier minhash_band_frontier semdedup_eps_frontier
 ivf_cell_profile ann_dims_frontier ann_storage_frontier doc_bm25
@@ -78,7 +78,7 @@ embed_pq graph_hits
 # - embed_pq: the PQ nearest-code assign folds the bounded codebook
 #   (n_sub·n_cent rows) into a single-row array and broadcast-crossJoins it
 #   onto the subvector table (replaces the old exchange+sort+row_number
-#   assign — OPTIMIZATION_r13.md, ANN family).
+#   assign).
 # - graph_hits: the two final L2-norm scalars (1 row each) are
 #   broadcast-crossJoined onto the score tables; they existed before but
 #   were hidden behind the per-half-step localCheckpoint plan truncation

@@ -203,21 +203,6 @@ def _signatures_from_shingled(sh_table: DataFrame, n_hashes: int) -> DataFrame:
     return g.select("doc_id", F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig"))
 
 
-def minhash_signatures(
-    df: DataFrame, n_hashes: int = 32, text: str = "text", k: int = 3
-) -> DataFrame:
-    """MinHash signatures: h_i(d) = min over shingles of (a_i·x + b_i mod p),
-    x = xxhash64(shingle). One explode + one groupBy (partial-aggregated min)
-    — the shuffle carries n_hashes longs per doc.
-
-    → (doc_id, sig ARRAY<BIGINT>[n_hashes])
-    """
-    sh = shingles(df, text, k).select("doc_id", F.explode_outer("shingles").alias("shingle"))
-    sh = sh.withColumn("x", F.pmod(F.xxhash64("shingle"), F.lit(HASH_P)))
-    g = sh.groupBy("doc_id").agg(*_min_exprs(n_hashes))
-    return g.select("doc_id", F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig"))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     n_hashes: int = 32,

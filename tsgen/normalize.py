@@ -9,12 +9,12 @@ window, because the window needs a full sort of every row within each
 partition while the join only hashes. When the stats side is small enough
 Spark/AQE turns the join into a broadcast and the BIG side is never
 shuffled at all — the whole generator+znorm pipeline then has exactly one
-tiny shuffle (the 3-doubles-per-series aggregate). The window variant is
-kept for callers that already have the right partitioning.
+tiny shuffle (the 3-doubles-per-series aggregate). The oracle's
+znorm_sql uses the window form, which has the same semantics.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 EPS = 1e-8
 
@@ -27,7 +27,7 @@ def znorm(
 ) -> DataFrame:
     """broadcast_stats=False for corpora whose per-key stats table is itself
     too large to broadcast (>~100M keys) — falls back to a shuffle hash join
-    on the key, which is the same single shuffle the window variant costs."""
+    on the key, which is the same single shuffle a window form would cost."""
     keys = [key] if isinstance(key, str) else list(key)
     stats = df.groupBy(*keys).agg(
         F.avg(value_col).alias("_mu"), F.stddev_samp(value_col).alias("_sd")
@@ -39,15 +39,6 @@ def znorm(
         .withColumn(value_col, (F.col(value_col) - F.col("_mu")) / (F.col("_sd") + F.lit(EPS)))
         .drop("_mu", "_sd")
     )
-
-
-def znorm_window(df: DataFrame, value_col: str = "value", key: str = "series_id") -> DataFrame:
-    """Window-based variant: use when the per-key stats table would be too
-    large to broadcast AND the data is already partitioned by key."""
-    w = Window.partitionBy(key)
-    mean = F.avg(value_col).over(w)
-    std = F.stddev_samp(value_col).over(w)
-    return df.withColumn(value_col, (F.col(value_col) - mean) / (std + F.lit(EPS)))
 
 
 # SQL fragment for the DuckDB oracle (identical semantics)

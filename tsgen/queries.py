@@ -24,7 +24,24 @@ class Query:
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
-_REGISTRY: dict[str, Query] = {}
+class _Registry(dict):
+    """A name -> Query map that refuses to overwrite a name: a second module
+    registering the same name would otherwise silently replace the first."""
+
+    def __setitem__(self, name: str, q: Query) -> None:
+        if name in self:
+            raise ValueError(f"query {name!r} is already registered")
+        super().__setitem__(name, q)
+
+    def update(self, *args, **kwargs) -> None:
+        new = dict(*args, **kwargs)
+        dup = sorted(new.keys() & self.keys())
+        if dup:
+            raise ValueError(f"queries already registered: {dup}")
+        super().update(new)
+
+
+_REGISTRY: dict[str, Query] = _Registry()
 
 
 def register(name: str, oracle_sql: str | None = None, tags: tuple[str, ...] = ()):
@@ -35,94 +52,10 @@ def register(name: str, oracle_sql: str | None = None, tags: tuple[str, ...] = (
     return deco
 
 
-# The driver's correctness gate hashes only the FIRST 50 entries of queries()
-# in dict order. Rotate this list each round so every oracle-bearing query
-# eventually gets a driver-green row on record (VERDICT r02 item 1). Names
-# listed here are moved to the front of the registry in this order; everything
-# else follows in registration order. Keep the 9 generator queries first as
-# cheap cross-round canaries.
-#
-# Round-6 window: 3 canaries + 47 never-driver-checked oracle queries.
-# Cumulative certified through r05: 181 unique (CORRECTNESS_r01..r05.json);
-# every non-canary name below is from the 181 oracle-bearing never-certified
-# set. Front-loaded: the four ADVICE-r05-fixed queries (ev_qini,
-# ev_retention_fit, doc_heaps_law, forecast_combo — certify the fixes
-# same-round), the round-5 ops registered after the r5 window froze, then
-# the forecast family, ts diagnostics, and sketches.
-# Driver-certification window: the driver checks the FIRST 50 registry
-# entries each round; this tuple pins that order. Rotation plan to exhaust
-# the never-certified backlog (148 after r6):
-#   r7 (this window): 14 round-6 registrations + 20 TPC-H warehouse batch
-#      + 9 streams + 4 skew/diagnostics.
-#   r8: the text family (bpe_merge_step, doc_split, doc_entropy,
-#      doc_keyphrases, doc_lm_score, doc_bigram_lm, doc_feature_hash,
-#      doc_readability, repetition_stats, token_count_bpe, doc_zipf,
-#      doc_ppl_holdout, doc_contamination, doc_woe, doc_pareto), the tsdb
-#      family (ev_interpolate, ev_lttb, ts_period, ev_technical,
-#      ev_gap_stats, ev_seasonal_profile, ts_welch_psd, ev_peak_detect,
-#      ev_m4_downsample, ev_drawdown, ev_ewma_chart, ev_ewma_corr,
-#      ts_isotonic, ts_segmentation, ts_haar_energy, ev_rate_anomaly,
-#      ev_counter_rate, ts_lombscargle), and the analytics long tail
-#      (ev_transition_entropy, ev_transitions, ev_user_paths, ev_cusum,
-#      ev_streaks, ts_delta_stats, ev_wau, ev_outliers_mad, ev_apdex,
-#      ev_ks_test, ev_chi_square, ev_benford, ts_spectral_entropy,
-#      ev_winsorize).
-#   r9: pipeline/scale (split_assign, ev_gbm_stumps, name_match_jw,
-#      name_match_snm, ann_rrf, global_row_ids, stratified_sample,
-#      weighted_sample), warehouse (ev_mview_merge, ev_merge_upsert,
-#      ev_time_travel, li_zone_map, ev_retract_merge, ev_cdc_apply,
-#      ev_scd2, ev_ffill, table_profile, key_skew_profile, zorder_cluster,
-#      orders_checksum, snapshot_diff), product/experiment (ab_experiment,
-#      user_survival, revenue_gini, ev_funnel_latency, ev_cohort_ltv,
-#      ev_msprt_by_type, ev_power_analysis), decompose/forecast extras
-#      (ts_prophet_forecast, trend_theilsen, ts_anomalies,
-#      ts_robust_decompose, classical_decompose), events/tsdb leftovers
-#      (ev_percentiles, ev_funnel, ev_retention, ev_funnel_stages,
-#      ev_running_balance, ev_ohlc, ev_twap, ev_time_features,
-#      ev_interval_union), similarity/sketch (embed_centroids, embed_drift,
-#      dd_quantiles_by_type, ev_value_deciles, cms_join_size), plus
-#      dq_checks, ev_k_anonymity, basket_rules, li_supplier_hhi,
-#      train_denoiser_fourier — any spillover rolls into r10.
-_WINDOW_PRIORITY: tuple[str, ...] = (
-    # Driver-round-13 window (exact rotate_window.py output). The r12 gate
-    # kept cumulative certification complete (backlog 0), so the backlog
-    # holds exactly TWO never-certified names — this round's baseline-JPEG
-    # decode queries (pixel corpus + AC/coefficient corpus) — and the
-    # remaining 44 slots are the stale-refresh pad, least-recently-
-    # certified first (the r3-era streaming/analytics rows the r12 pad
-    # displaced).
-    # canaries (green r01–r12)
-    "gen_sine", "series_stats", "sample_data_mixed",
-    # never-certified: this round's JPEG / DoReMi / cross-codec /
-    # streaming-JPEG / unigram-tokenizer queries
-    "multimodal_decode_jpeg", "multimodal_decode_jpeg_ac", "mix_doremi",
-    "media_cross_codec_dedup", "stream_jpeg_stats", "tok_unigram_em",
-    # stale-refresh pad: oldest-certified rows
-    "stream_join", "stream_ohlc", "stream_hll", "stream_scd2",
-    "stream_dd_quantiles", "stream_cms_topk", "epoch_metrics", "gen_cosine",
-    "gen_mixed", "gen_exponential_decay", "gen_linear_sum", "gen_custom_decay",
-    "gen_labeled", "ev_cuped", "ts_its", "ev_ab_holm",
-    "ev_msprt", "ev_srm", "ev_next_event_acc", "doc_lsh_recall",
-    "doc_prefix_jaccard", "minhash_lsh_portable", "simhash_portable",
-    "embed_map_at_k", "embed_pca_power", "ev_attribution_markov",
-    "graph_modularity", "ts_prophet_lite", "sample_forecast",
-    "sample_conditional_label", "forecast_garch", "ev_mutual_info",
-    "ev_calibration", "part_entity_clusters", "ev_bootstrap_ci", "ts_sax",
-    "ts_matrix_profile", "ts_changepoint", "ts_dtw", "rfm_segments",
-    "orders_abc",
-)
-
-
 def registry() -> dict[str, Query]:
+    """Every query in registration order; the generator queries come first."""
     _ensure_populated()
-    ordered: dict[str, Query] = {}
-    for name in _WINDOW_PRIORITY:
-        if name in _REGISTRY:
-            ordered[name] = _REGISTRY[name]
-    for name, q in _REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = q
-    return ordered
+    return dict(_REGISTRY)
 
 
 def canon_types(df: DataFrame) -> DataFrame:
@@ -215,6 +148,10 @@ def _register_generators() -> None:
     )
 
 
+# At import, not in _ensure_populated: any stage module imports this one
+# first, so the generator queries lead the registry however the stages load.
+_register_generators()
+
 _POPULATED = False
 
 
@@ -223,7 +160,6 @@ def _ensure_populated() -> None:
     if _POPULATED:
         return
     _POPULATED = True
-    _register_generators()
     # later stages register themselves here
     from . import (  # noqa: F401
         queries_analytics,

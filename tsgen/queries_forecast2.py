@@ -2,11 +2,13 @@
 the SES/Holt/Holt-Winters/theta/Kalman family in tsgen/forecast.py with the
 remaining M-competition classics):
 
-- forecast_ar2: per-series AR(2) autoregression — OLS fit on the centered
+- ar2_forecast: per-series AR(2) autoregression — OLS fit on the centered
   series via the 2x2 normal equations (Cramer), then an h-step recursive
   forecast. Entirely Catalyst: one shuffle fits every series at once; the
   h-step recurrence is unrolled as nested column expressions over the tiny
-  per-series coefficient table (no driver loop over data).
+  per-series coefficient table (no driver loop over data). A library
+  function only: the registered `forecast_ar2` query is the Yule–Walker fit
+  in tsgen/queries_statemodels.py.
 - forecast_accuracy: the M-competition benchmark harness — naive /
   seasonal-naive / drift forecasts on a train/test split, scored with
   MAE / RMSE / sMAPE / MASE per (series, method). This is the query a
@@ -100,50 +102,6 @@ def ar2_forecast(
     return out.select(
         key, (F.col("h0") + 1).alias("h"), "forecast", "phi1", "phi2"
     )
-
-
-def _q_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = generators.generate(spark, 8, 64, "mixed")
-    return roundn(ar2_forecast(df), 6, "forecast", "phi1", "phi2")
-
-
-def _ar2_sql(horizon: int = AR2_H) -> str:
-    gen = oracle.generate_sql(8, 64, "mixed", rounded=False)
-    return f"""
-WITH RECURSIVE src AS ({gen}),
-d AS (
-  SELECT series_id, t, value,
-         avg(value) OVER (PARTITION BY series_id) AS mu,
-         max(t) OVER (PARTITION BY series_id) AS t_max,
-         lag(value, 1) OVER wa AS p1,
-         lag(value, 2) OVER wa AS p2
-  FROM src WINDOW wa AS (PARTITION BY series_id ORDER BY t)),
-coef0 AS (
-  SELECT series_id, max(mu) AS mu,
-         sum(CASE WHEN p2 IS NOT NULL THEN (p1 - mu) * (p1 - mu) END) AS s11,
-         sum(CASE WHEN p2 IS NOT NULL THEN (p2 - mu) * (p2 - mu) END) AS s22,
-         sum(CASE WHEN p2 IS NOT NULL THEN (p1 - mu) * (p2 - mu) END) AS s12,
-         sum(CASE WHEN p2 IS NOT NULL THEN (value - mu) * (p1 - mu) END) AS sy1,
-         sum(CASE WHEN p2 IS NOT NULL THEN (value - mu) * (p2 - mu) END) AS sy2,
-         max(CASE WHEN t = t_max THEN value - mu END) AS f1,
-         max(CASE WHEN t = t_max - 1 THEN value - mu END) AS f2
-  FROM d GROUP BY series_id),
-coef AS (
-  SELECT series_id, mu, f1, f2,
-         (sy1 * s22 - sy2 * s12) / (s11 * s22 - s12 * s12) AS phi1,
-         (s11 * sy2 - s12 * sy1) / (s11 * s22 - s12 * s12) AS phi2
-  FROM coef0),
-rec AS (
-  SELECT series_id, 1 AS h, phi1 * f1 + phi2 * f2 AS f, f1 AS fp,
-         mu, phi1, phi2
-  FROM coef
-  UNION ALL
-  SELECT series_id, h + 1, phi1 * f + phi2 * fp, f, mu, phi1, phi2
-  FROM rec WHERE h < {horizon})
-SELECT series_id, h, {E.round6('f + mu')} AS forecast,
-       {E.round6('phi1')} AS phi1, {E.round6('phi2')} AS phi2
-FROM rec
-"""
 
 
 # --- benchmark accuracy harness -------------------------------------------
@@ -512,7 +470,6 @@ FROM tot CROSS JOIN bu
 
 _REGISTRY.update(
     {
-        "forecast_ar2": Query("forecast_ar2", _q_ar2, _ar2_sql(), ("forecast",)),
         "forecast_accuracy": Query(
             "forecast_accuracy", _q_accuracy, _accuracy_sql(), ("forecast",)
         ),

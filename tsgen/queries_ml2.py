@@ -19,7 +19,7 @@ mandate, part 4 — "train a simple model ON the cluster, not beside it"):
   value) — the calibration audit you run on any quality-classifier
   score before thresholding it into a data filter.
 
-Exact cross-engine replay (the sharp-edge ledger, NEXT.md):
+Exact cross-engine replay:
 - The IRLS recursion rounds its INPUTS: the five sufficient statistics
   are rounded to 4dp (engine fp-association drift on a 1e5-row sum is
   ~1e-8, four orders below the boundary), and the updated betas to 12dp

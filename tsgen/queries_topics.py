@@ -9,7 +9,7 @@ bit-for-bit in SQL, the same argument as ev_logreg's IRLS).
     E-step: r(d,w,z) ∝ θ_d(z)·φ_z(w)
     M-step: φ_z(w) ∝ Σ_d n(d,w)·r(d,w,z);  θ_d(z) ∝ Σ_w n(d,w)·r(d,w,z)
 
-Cross-engine determinism (NEXT.md sharp-edge 3): the M-step sufficient
+Cross-engine determinism: the M-step sufficient
 statistics are rounded to 4dp and the normalized probabilities to 12dp
 (+1e-15 nudge) each iteration, so exp/ulp noise cannot compound across
 iterations; final report rounds to 4dp.

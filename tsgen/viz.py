@@ -23,19 +23,6 @@ def _require_mpl() -> None:
         raise NotImplementedError("matplotlib not available in this environment")
 
 
-def visualize_samples(df: DataFrame, path: str, n_series: int = 6) -> None:
-    """Sample-series grid (visualisation.py:32-61)."""
-    _require_mpl()
-    pdf = df.filter(df.series_id < n_series).toPandas().sort_values(["series_id", "t"])
-    fig, axes = plt.subplots(n_series, 1, figsize=(10, 2 * n_series), squeeze=False)
-    for i, (sid, g) in enumerate(pdf.groupby("series_id")):
-        axes[i][0].plot(g.t, g.value)
-        axes[i][0].set_title(f"series {sid}")
-    fig.tight_layout()
-    fig.savefig(path)
-    plt.close(fig)
-
-
 def visualize_diffusion_process(
     intermediates: list[tuple[int, DataFrame]], path: str, n_samples: int = 5
 ) -> None:
