@@ -55,10 +55,10 @@ def test_asof_join_no_prior_is_null(spark):
 
 
 def test_sql_surface(spark):
-    from tsgen import catalog
+    from tsgen import generators, sqlapi
 
-    catalog.register_testdata(spark, "/root/testdata/sf0.001")
-    catalog.register_generated(spark, "syn", 4, 16, "sine")
+    sqlapi.register_tables(spark, "/root/testdata/sf0.001")
+    generators.generate(spark, 4, 16, "sine").createOrReplaceTempView("syn")
     out = spark.sql(
         """
         SELECT (SELECT count(*) FROM events) AS n_events,

@@ -4,12 +4,18 @@ Each frontier must (a) agree exactly with its certified single-point
 sibling at the shared operating point and (b) be monotone along its
 axis — the two invariants the oracle gate alone can't phrase. Values
 are certified by tools/check_oracle.py against the DuckDB twins.
+
+The last test gates the exact string-keyed path (hash_key=False) of the
+substring dedup ops, which no registry query runs, against their oracles.
 """
 from __future__ import annotations
+
+from pathlib import Path
 
 import pytest
 
 SF = "/root/testdata/sf0.001"
+SF_GATE = str(Path(SF).with_name("sf0.01"))  # the oracle gate's scale
 
 
 @pytest.fixture(scope="module")
@@ -282,3 +288,20 @@ def test_frontiers_partition_invariant(spark, docs, emb):
     a = rows(dedup_incremental_lsh(docs))
     b = rows(dedup_incremental_lsh(docs.repartition(9)))
     assert a == b, "dedup_incremental_lsh changed under repartition(9)"
+
+
+@pytest.mark.parametrize("fn_name", ["substring_cut_keepfirst", "substring_contamination"])
+def test_exact_key_substring_dedup_matches_oracle(spark, fn_name):
+    # the registry queries run the default xxhash64-keyed plans; the exact
+    # string-keyed one must reproduce the same string-keyed DuckDB oracle
+    from tools.check_oracle import compare, duck_con
+    from tsgen import queries_exactdup
+    from tsgen.io import fanout_scan
+    from tsgen.queries import canon_types
+
+    docs = fanout_scan(spark, f"{SF_GATE}/documents.parquet")
+    fn = getattr(queries_exactdup, fn_name)
+    got = canon_types(fn(docs, hash_key=False)).toPandas()
+    want = duck_con(SF_GATE).execute(getattr(queries_exactdup, f"{fn_name}_sql")()).df()
+    assert len(got) > 0
+    assert compare(fn_name, got, want) == []

@@ -8,11 +8,13 @@ c = arange(seq_len)/seq_len at :219-221) and seasonality = top-k Fourier
 modes (FourierSynthesisLayer, :242-289). The learned projections are HOW the
 model approximates this; the engine computes the closed-form analogs:
 
-- trend: per-series least-squares polynomial fit. Implemented as *moment
-  aggregation* (sums of t^i and t^i·x — a partial-aggregated groupBy, the
-  cheapest possible distributed form) followed by a tiny per-series normal-
-  equation solve in a pandas UDF, then a co-partitioned join back.
-- seasonality: FFT top-k of the detrended signal, one applyInPandas pass.
+- trend: per-series least-squares polynomial fit. Inside `decompose` it is
+  a projection onto the cached polynomial basis; as coefficients it is
+  *moment aggregation* (sums of c^i and c^i·x — a partial-aggregated
+  groupBy, the cheapest distributed form) solved in closed form by Cramer's
+  rule (`trend_linear`, `trend_quadratic`, `trend_cubic`), the same SQL
+  text the DuckDB oracle runs.
+- seasonality: FFT top-k of the detrended signal.
 - residual: remainder (G7).
 
 `decompose` runs trend+seasonality+residual in ONE mapInPandas pass after a
@@ -175,16 +177,10 @@ def quad_trend_sql_exprs() -> dict[str, str]:
     A = [[m0,m1,m2],[m1,m2,m3],[m2,m3,m4]], rhs = [b0,b1,b2];
     c_i = det(A with column i replaced by rhs) / det(A).
     """
-
-    def det3(a, b, c, d, e, f, g, h, i):
-        return (
-            f"({a}*({e}*{i} - {f}*{h}) - {b}*({d}*{i} - {f}*{g}) + {c}*({d}*{h} - {e}*{g}))"
-        )
-
-    D = det3("m0", "m1", "m2", "m1", "m2", "m3", "m2", "m3", "m4")
-    D0 = det3("b0", "m1", "m2", "b1", "m2", "m3", "b2", "m3", "m4")
-    D1 = det3("m0", "b0", "m2", "m1", "b1", "m3", "m2", "b2", "m4")
-    D2 = det3("m0", "m1", "b0", "m1", "m2", "b1", "m2", "m3", "b2")
+    D = det3_expr("m0", "m1", "m2", "m1", "m2", "m3", "m2", "m3", "m4")
+    D0 = det3_expr("b0", "m1", "m2", "b1", "m2", "m3", "b2", "m3", "m4")
+    D1 = det3_expr("m0", "b0", "m2", "m1", "b1", "m3", "m2", "b2", "m4")
+    D2 = det3_expr("m0", "m1", "b0", "m1", "m2", "b1", "m2", "m3", "b2")
     return {"det": D, "c0": f"({D0} / {D})", "c1": f"({D1} / {D})", "c2": f"({D2} / {D})"}
 
 
@@ -277,68 +273,6 @@ def trend_cubic(df: DataFrame, value_col: str = "value", key: str = "series_id")
     g = j.groupBy(key).agg(*aggs)
     e = cubic_trend_sql_exprs()
     return g.select(key, *[F.expr(e[f"c{i}"]).alias(f"c{i}") for i in range(4)])
-
-
-def trend_poly(
-    df: DataFrame, degree: int = DEFAULT_DEGREE, value_col: str = "value", key: str = "series_id"
-) -> DataFrame:
-    """Arbitrary-degree trend via distributed moment aggregation + per-series
-    normal-equation solve.
-
-    The groupBy computes Σ c^i (i ≤ 2·degree) and Σ c^i·x (i ≤ degree) with
-    map-side partial aggregation — the shuffle carries ~(3·degree+2) doubles
-    per series no matter how long the series is. The 4×4 solve runs in a
-    pandas UDF over the tiny aggregate table.
-
-    Returns (series_id, t, trend).
-    """
-    aggs = [F.count("*").alias("m0")]
-    cexpr = F.col("t").cast("double") / F.col("_n")
-    # window count for _n (no join-back), and pin: `joined` feeds both the
-    # moment aggregation and the final trend projection
-    joined = df.withColumn(
-        "_n", F.count("*").over(Window.partitionBy(key))
-    ).localCheckpoint(eager=False)
-    for i in range(1, 2 * degree + 1):
-        aggs.append(F.sum(F.pow(cexpr, i)).alias(f"m{i}"))
-    for i in range(degree + 1):
-        aggs.append(F.sum(F.pow(cexpr, i) * F.col(value_col)).alias(f"b{i}"))
-    moments = joined.groupBy(key).agg(*aggs)
-
-    coef_schema = f"{key} bigint, " + ", ".join(f"c{i} double" for i in range(degree + 1))
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, r in pdf.iterrows():
-            m = [r[f"m{i}"] for i in range(2 * degree + 1)]
-            A = np.array([[m[i + j] for j in range(degree + 1)] for i in range(degree + 1)])
-            b = np.array([r[f"b{i}"] for i in range(degree + 1)])
-            coef = np.linalg.solve(A, b)
-            out.append([r[key], *coef])
-        return pd.DataFrame(out, columns=[key] + [f"c{i}" for i in range(degree + 1)])
-
-    coefs = moments.groupBy(key).applyInPandas(solve, coef_schema)
-    trend = sum(
-        (F.col(f"c{i}") * F.pow(F.col("t").cast("double") / F.col("_n"), i) for i in range(1, degree + 1)),
-        F.col("c0"),
-    )
-    return (
-        joined.join(coefs, key)
-        .withColumn("trend", trend)
-        .select(key, "t", value_col, "trend")
-    )
-
-
-def decomposition_denoiser(df: DataFrame, t: int) -> DataFrame:
-    """Engine-default denoiser for diffusion.sample: x̂₀ = trend + seasonality
-    of the current state (the reference model's decomposition contract,
-    diffusion_ts_model.py:538-542)."""
-    dec = decompose(df.withColumnRenamed("x", "value"))
-    return (
-        dec.withColumn("x0_pred", F.col("trend") + F.col("seasonality"))
-        .withColumnRenamed("value", "x")
-        .select("series_id", "t", "x", "x0_pred")
-    )
 
 
 def trend_theilsen(

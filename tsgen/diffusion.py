@@ -10,9 +10,10 @@ Scale design:
   (we hint F.broadcast explicitly; verified BroadcastHashJoin in .explain).
 - Noise is a pure function of (series_id, t, salt) so the sampling loop is
   reproducible regardless of partitioning/retries.
-- The reverse loop (I1) is driver-sequential by nature (T data-dependent
-  steps); lineage is cut with localCheckpoint every `checkpoint_every`
-  iterations to keep plans bounded (SURVEY §4).
+- The reverse loop (I1) has T data-dependent steps, but each series
+  evolves independently, so the whole loop runs inside one mapInPandas
+  pass (`sample_fused` and its conditional siblings): one Spark job, not
+  one per step. The DuckDB oracle unrolls the same loop in SQL.
 """
 from __future__ import annotations
 
@@ -23,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import expr as E
-from .decompose import DEFAULT_DEGREE, DEFAULT_TOP_K, decomposition_denoiser, trend_seasonality
+from .decompose import DEFAULT_DEGREE, DEFAULT_TOP_K, trend_seasonality
 from .schedules import schedule_table
 
 SALT_TSTEP = 31
@@ -128,55 +129,6 @@ def p_sample_step(
     return df.withColumn(out_col, mean + F.lit(post_var**0.5) * noise)
 
 
-def sample(
-    spark: SparkSession,
-    n_series: int,
-    seq_len: int,
-    timesteps: int = 50,
-    kind: str = "cosine",
-    denoiser: Callable[[DataFrame, int], DataFrame] | None = None,
-    checkpoint_every: int = 10,
-    return_intermediates: bool = False,
-    n_intermediates: int = 5,
-) -> DataFrame | tuple[DataFrame, list[tuple[int, DataFrame]]]:
-    """Reverse-diffusion sampling loop (diffusion_ts_model.py:736-772).
-
-    Starts from x ~ N(0,1) on the (series, t) grid and runs T sequential
-    posterior steps. `denoiser(df, t)` must add/replace column `x0_pred`
-    given current `x` (the reference uses the learned model here; the
-    engine's deterministic default — trend+seasonality decomposition — is
-    wired in decompose.decomposition_denoiser).
-
-    With `return_intermediates` (the reference sample()'s flag, consumed by
-    visualize_diffusion_process, utils/visualisation.py:62-95) also returns
-    [(step_number, snapshot_df), ...] captured every max(1, T//n_intermediates)-th
-    step — the SURVEY §2 F3 stride filter. Snapshots are localCheckpoint-pinned
-    so capturing doesn't re-run the prefix of the loop per snapshot.
-    """
-    from .generators import base_grid
-
-    if denoiser is None:
-        denoiser = decomposition_denoiser
-    sched = schedule_table(spark, timesteps, kind).cache()
-    sched.count()
-    df = base_grid(spark, n_series, seq_len).withColumn(
-        "x", F.expr(E.normal(E.pt_key(), SALT_INIT))
-    )
-    stride = max(1, timesteps // n_intermediates)
-    captures: list[tuple[int, DataFrame]] = []
-    for i, t in enumerate(reversed(range(timesteps))):
-        df = denoiser(df, t)
-        df = p_sample_step(df, sched, t).drop("x0_pred")
-        if (i + 1) % checkpoint_every == 0:
-            df = df.localCheckpoint(eager=True)
-        if return_intermediates and (i + 1) % stride == 0:
-            df = df.localCheckpoint(eager=True)
-            captures.append((i + 1, df))
-    if return_intermediates:
-        return df, captures
-    return df
-
-
 def _np_lcg3(key, salt: int):
     """Exact numpy replica of expr.lcg3. Keys are non-negative and every
     intermediate stays below 2^63 (all products < 2^62), and M31 = 2^31, so
@@ -266,33 +218,60 @@ def sample_fused(
     kind: str = "cosine",
     degree: int = DEFAULT_DEGREE,
     top_k: int = DEFAULT_TOP_K,
-) -> DataFrame:
-    """Reverse diffusion with the WHOLE T-step loop fused into one
-    mapInPandas pass.
+    return_intermediates: bool = False,
+    n_intermediates: int = 5,
+) -> DataFrame | tuple[DataFrame, list[tuple[int, DataFrame]]]:
+    """Reverse-diffusion sampling loop (diffusion_ts_model.py:736-772) with
+    the WHOLE T-step loop fused into one mapInPandas pass.
 
-    Key insight: each series evolves independently (the denoiser and the
-    posterior step are per-series; noise is a pure function of
-    (series_id, t, step)), so the loop needs NO cross-series communication —
-    the driver-loop form (`sample`) pays T shuffles purely for Spark's
-    iteration mechanics. Fusing yields identical values (the numpy LCG is an
-    exact integer replica of the SQL one, and x̂₀ is decompose's own
-    `trend_seasonality` kernel; asserted in tests) with exactly ONE narrow
+    Starts from x ~ N(0,1) on the (series, t) grid and runs T posterior
+    steps; x̂₀ at each step is decompose's own `trend_seasonality` kernel
+    (the engine's deterministic stand-in for the learned model). Each series
+    evolves independently (the denoiser and the posterior step are
+    per-series; noise is a pure function of (series_id, t, step)), so the
+    loop needs NO cross-series communication and runs as exactly ONE narrow
     pass: Range → mapInPandas. At T=500 (config.json:16) this is the
-    difference between 500 scheduled jobs and one.
+    difference between 500 scheduled jobs and one. The DuckDB oracle
+    (queries_decompose._sample_loop_sql) unrolls the same loop in SQL.
+
+    With `return_intermediates` (the reference sample()'s flag, consumed by
+    viz.visualize_diffusion_process, utils/visualisation.py:62-95) also
+    returns [(step_number, snapshot_df), ...] captured every
+    max(1, T//n_intermediates)-th step — the SURVEY §2 F3 stride filter.
+    The same pass emits each snapshot as (step, series_id, t, x) rows; the
+    result is localCheckpoint-pinned once and split by step, so no snapshot
+    re-runs the loop.
     """
+    stride = max(1, timesteps // n_intermediates)
+
+    def frame(sids, ts, X, **lead):
+        return pd.DataFrame(
+            {**lead, "series_id": np.repeat(sids, seq_len), "t": np.tile(ts, len(sids)), "x": X.reshape(-1)}
+        )
 
     def batch(sched, sids):
         ts, keys = _np_pt_keys(sids, seq_len)
         X = _np_normal(keys, SALT_INIT)
+        snaps = []
         for t in reversed(range(timesteps)):
             trend, seas = trend_seasonality(X, degree, top_k)
             x0 = trend + seas
             X = _np_posterior_step(X, x0, sched[t], keys, t) if t > 0 else x0
-        return pd.DataFrame(
-            {"series_id": np.repeat(sids, seq_len), "t": np.tile(ts, len(sids)), "x": X.reshape(-1)}
-        )
+            step = timesteps - t
+            if return_intermediates and (step % stride == 0 or t == 0):
+                snaps.append(frame(sids, ts, X, step=step))
+        return pd.concat(snaps) if return_intermediates else frame(sids, ts, X)
 
-    return _fused_map(spark, n_series, timesteps, kind, "series_id bigint, t bigint, x double", batch)
+    schema = "series_id bigint, t bigint, x double"
+    if not return_intermediates:
+        return _fused_map(spark, n_series, timesteps, kind, schema, batch)
+    out = _fused_map(spark, n_series, timesteps, kind, "step bigint, " + schema, batch)
+    out = out.localCheckpoint(eager=True)
+
+    def at(step: int) -> DataFrame:
+        return out.filter(F.col("step") == step).drop("step")
+
+    return at(timesteps), [(s, at(s)) for s in range(stride, timesteps + 1, stride)]
 
 
 def sample_conditional_fused(
@@ -305,9 +284,13 @@ def sample_conditional_fused(
     degree: int = DEFAULT_DEGREE,
     top_k: int = DEFAULT_TOP_K,
 ) -> DataFrame:
-    """Fused form of sample_conditional: the whole forecast-conditioned
-    reverse-diffusion loop in one mapInPandas pass (same independence
-    argument as sample_fused; equivalence tested)."""
+    """Forecast-conditional sampling (mask path, diffusion_ts_model.py:482,
+    493-500; README.md:247-279): observed positions (t < history_len) are
+    re-imposed after every posterior step at their q_sample(t)-noised level,
+    so generation is conditioned on the known history — the replace-based
+    imputation sampler. The whole loop runs in one mapInPandas pass (same
+    independence argument as sample_fused); the `sample_forecast` query
+    checks it against the unrolled-loop DuckDB oracle."""
 
     def batch(sched, sids):
         ts, keys = _np_pt_keys(sids, seq_len)
@@ -338,52 +321,6 @@ def sample_conditional_fused(
 
     schema = "series_id bigint, t bigint, observed boolean, x double"
     return _fused_map(spark, n_series, timesteps, kind, schema, batch)
-
-
-def sample_conditional(
-    spark: SparkSession,
-    n_series: int,
-    seq_len: int,
-    timesteps: int = 10,
-    history_len: int = 16,
-    kind: str = "cosine",
-    checkpoint_every: int = 5,
-) -> DataFrame:
-    """Forecast-conditional sampling (mask path, diffusion_ts_model.py:482,
-    493-500; README.md:247-279): observed positions (t < history_len) are
-    re-imposed after every posterior step at their q_sample(t)-noised level,
-    so generation is conditioned on the known history — the replace-based
-    imputation sampler expressed over DataFrames.
-    """
-    from .generators import base_grid
-    from .masking import forecast_mask
-
-    from . import expr as _E
-
-    sched = schedule_table(spark, timesteps, kind).cache()
-    sched.count()
-    known = base_grid(spark, n_series, seq_len).withColumn(
-        "x_known", F.expr(_E.signal_expr("mixed", seq_len))
-    )
-    df = forecast_mask(known, history_len).withColumn(
-        "x", F.expr(_E.normal(_E.pt_key(), SALT_INIT))
-    )
-    for i, t in enumerate(reversed(range(timesteps))):
-        dec = decomposition_denoiser(df.select("series_id", "t", "x"), t)
-        df = df.drop("x").join(dec, ["series_id", "t"])
-        df = p_sample_step(df, sched, t).drop("x0_pred")
-        if t > 0:
-            # re-impose observed history, noised to the current level
-            row = sched.filter(F.col("t_step") == t - 1).collect()[0]
-            noised_known = F.lit(row.sqrt_ac) * F.col("x_known") + F.lit(
-                row.sqrt_1m_ac
-            ) * F.expr(_E.normal(_E.pt_key(), step_salt(SALT_QNOISE, t)))
-            df = df.withColumn("x", F.when(F.col("observed"), noised_known).otherwise(F.col("x")))
-        else:
-            df = df.withColumn("x", F.when(F.col("observed"), F.col("x_known")).otherwise(F.col("x")))
-        if (i + 1) % checkpoint_every == 0:
-            df = df.localCheckpoint(eager=True)
-    return df
 
 
 def sample_conditional_label(

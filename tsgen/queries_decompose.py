@@ -40,8 +40,8 @@ def _trend_linear_sql() -> str:
 def _q_trend_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # closed-form degree-3 fit (Cramer, no UDF) evaluated per point — the
     # identical expression text runs in the DuckDB oracle, turning the last
-    # G5 entry from rows-only to hash-checked. Equivalence of the closed
-    # form to the normal-equation UDF solve (trend_poly) is unit-tested.
+    # G5 entry from rows-only to hash-checked. Agreement of the closed
+    # form with a numpy least-squares fit is unit-tested.
     # pin: the coefficient fit and the per-point evaluation both read df
     df = generators.generate(spark, N_D, LEN_D, "linear_sum").localCheckpoint(eager=False)
     coeffs = decompose.trend_cubic(df)
@@ -326,8 +326,9 @@ def _sample_loop_sql(
     decompose-denoiser + DDPM-posterior stages (each stage = the same
     Cramer-trend + brute-DFT-seasonality chain as decompose_full, then the
     posterior mean/noise step with schedule constants as scalar subqueries).
-    ~8 CTEs per step — mechanical to generate, and it hash-checks the
-    iterative sampler end-to-end against pure SQL."""
+    ~8 CTEs per step — mechanical to generate, and it hash-checks the fused
+    samplers (sample_fused, sample_forecast, sample_conditional_label)
+    end-to-end against pure SQL."""
     from . import diffusion
     from .schedules import duckdb_from_clause, schedule_sql
 
@@ -430,17 +431,9 @@ def _sample_loop_sql(
     return "WITH " + ",\n".join(ctes) + "\n" + final
 
 
-def _q_sample_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # I1: reverse-diffusion sampling, decomposition denoiser, T=10
-    from . import diffusion
-
-    out = diffusion.sample(spark, 4, 32, timesteps=10, checkpoint_every=5)
-    return round6(out.select("series_id", "t", "x"), "x")
-
-
 def _q_sample_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # I1 fused: whole T-step loop in one mapInPandas pass (equivalence to
-    # the driver loop asserted in tests/test_diffusion.py)
+    # I1: reverse-diffusion sampling, decomposition denoiser, T=20; the
+    # whole T-step loop runs in one mapInPandas pass
     from . import diffusion
 
     out = diffusion.sample_fused(spark, 8, 64, timesteps=20)
@@ -517,9 +510,6 @@ _REGISTRY.update(
         "loss_fourier": Query("loss_fourier", _q_loss_fourier, _loss_fourier_sql(), ("loss",)),
         "loss_combined": Query(
             "loss_combined", _q_loss_combined, _loss_combined_sql(), ("loss",)
-        ),
-        "sample_loop": Query(
-            "sample_loop", _q_sample_loop, _sample_loop_sql(4, 32, 10), ("diffusion",)
         ),
         "sample_fused": Query(
             "sample_fused", _q_sample_fused, _sample_loop_sql(8, 64, 20), ("diffusion",)

@@ -241,10 +241,9 @@ def _multichannel_sql() -> str:
     return f"SELECT series_id, channel, t, {E.round6('value')} AS value FROM ({normed})"
 
 
-# --- I1 + B19: conditional (forecast) sampling — rows-only ----------------
+# --- I1 + B19: conditional (forecast) sampling ---------------------------
 def _q_sample_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused form (equivalence to the driver-loop sampler is tested); the
-    # step-per-job form remains available as diffusion.sample_conditional
+    # the whole conditioned T-step loop in one mapInPandas pass
     from . import diffusion
 
     out = diffusion.sample_conditional_fused(spark, 4, 32, timesteps=6, history_len=16)

@@ -18,8 +18,8 @@ Scale shape (100 TB): φ is K×V — broadcast every iteration (vocab is
 top-V capped in any real topic model); θ is doc-keyed and stays
 partitioned by doc_id — the E-step join and the θ M-step groupBy reuse
 the same doc_id partitioning, φ's M-step is a tiny (K×V) aggregate.
-Per-iteration lineage is pinned with localCheckpoint (the sample_loop
-pattern) so the plan does not double per EM round.
+Per-iteration lineage is pinned with localCheckpoint so the plan does not
+double per EM round.
 """
 from __future__ import annotations
 

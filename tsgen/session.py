@@ -11,7 +11,8 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "tsgen", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # SPARK_GRAFT_CPUS overrides; otherwise use the cores this process may run on
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (

@@ -13,6 +13,10 @@ Scale notes:
   so the whole spectral pipeline costs exactly one shuffle. They use the
   wide form: a groupBy collects each series into t-sorted arrays, and a
   mapInPandas transforms a whole Arrow batch at once (stack_by_length).
+- The grouped `rfft` stays beside the wide form because its output has a
+  different shape: one row per frequency bin, which `fft_spectrum` returns
+  as is, `fft_topk` ranks with a window and `ts_spectral_entropy`
+  aggregates. No benchmark workload runs it.
 """
 from __future__ import annotations
 
@@ -45,24 +49,6 @@ def rfft(df: DataFrame, value_col: str = "value", key: str = "series_id", t_col:
         )
 
     return df.select(key, t_col, value_col).groupBy(key).applyInPandas(fn, RFFT_SCHEMA)
-
-
-IRFFT_SCHEMA = "series_id bigint, t bigint, value double"
-
-
-def irfft(freq_df: DataFrame, seq_len: int, key: str = "series_id") -> DataFrame:
-    """Inverse real FFT (torch.fft.irfft, diffusion_ts_model.py:287).
-
-    Input: (series_id, freq_idx, re, im) → (series_id, t, value).
-    """
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("freq_idx")
-        spec = pdf["re"].to_numpy() + 1j * pdf["im"].to_numpy()
-        x = np.fft.irfft(spec, n=seq_len)
-        return pd.DataFrame({"series_id": pdf[key].iloc[0], "t": np.arange(seq_len), "value": x})
-
-    return freq_df.groupBy(key).applyInPandas(fn, IRFFT_SCHEMA)
 
 
 def stack_by_length(

@@ -28,7 +28,8 @@ def visualize_diffusion_process(
 ) -> None:
     """Denoising-progress grid (visualisation.py:62-95): one row per sample
     series, one column per captured intermediate step — the reference's
-    n_samples × 5 panel over `sample(..., return_intermediates=True)`.
+    n_samples × 5 panel over `diffusion.sample_fused(...,
+    return_intermediates=True)`.
 
     Only `n_samples` series of each bounded snapshot are pulled to the
     driver (n_samples × seq_len rows per panel column)."""
