@@ -18,14 +18,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F
 
 from tsgen import queries_paths as qp
-from tsgen.queries_analytics import _events
+from tsgen.io import read_table
 from tsgen.session import get_spark
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("events-analytics-demo")
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
 
     wau = qp.wau(ev).orderBy("day_s")
     print("== engagement (first 5 days) ==")

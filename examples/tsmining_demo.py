@@ -18,7 +18,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from tsgen import forecast, generators
-from tsgen.queries_analytics import _events
+from tsgen.io import read_table
 from tsgen.queries_tsmining import (
     gap_stats,
     hurst_rs,
@@ -38,7 +38,7 @@ from tsgen.session import get_spark
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("tsmining-demo")
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
 
     print("== Lomb-Scargle periodogram (top period per type) ==")
     ls = lombscargle(ev)

@@ -17,7 +17,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tsgen.queries_analytics import _events, _t
+from tsgen.io import read_table
 from tsgen.queries_quality import dq_checks
 from tsgen.queries_warehouse import (
     key_skew,
@@ -33,7 +33,7 @@ def main() -> None:
     spark = get_spark("warehouse-demo")
 
     print("== SCD2 user-state dimension (first 5 closed intervals) ==")
-    scd2 = scd2_intervals(_events(spark, sf_dir))
+    scd2 = scd2_intervals(read_table(spark, sf_dir, "events"))
     scd2.filter("NOT is_current").orderBy("user_id", "version").show(5)
     n_users = scd2.filter("is_current").count()
     print(f"open intervals (one per active user): {n_users}")
@@ -44,7 +44,7 @@ def main() -> None:
     _q_table_profile(spark, sf_dir).show(truncate=False)
 
     print("== content checksums per order status ==")
-    table_checksum(_t(spark, sf_dir, "orders")).show(truncate=False)
+    table_checksum(read_table(spark, sf_dir, "orders")).show(truncate=False)
 
     print("== snapshot diff (synthetic yesterday vs today) ==")
     from tsgen.queries_warehouse import _q_snapshot_diff
@@ -52,11 +52,11 @@ def main() -> None:
     _q_snapshot_diff(spark, sf_dir).show()
 
     print("== lineitem join-key skew (top 5 partkeys) ==")
-    key_skew(_t(spark, sf_dir, "lineitem"), "l_partkey", top_n=5).show()
+    key_skew(read_table(spark, sf_dir, "lineitem"), "l_partkey", top_n=5).show()
 
     print("== Z-order bucket locality (partkey x suppkey) ==")
     st = zorder_cluster_stats(
-        _t(spark, sf_dir, "lineitem"), "l_partkey", "l_suppkey"
+        read_table(spark, sf_dir, "lineitem"), "l_partkey", "l_suppkey"
     ).orderBy("bucket")
     st.show(8)
 

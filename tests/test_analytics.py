@@ -155,7 +155,7 @@ def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS od_bkt")
 
 
-def test_rank_funcs_two_phase_matches_direct_window(spark):
+def test_rank_funcs_two_phase_matches_direct_window(spark, tmp_path):
     # the r9 scale-true rank family (two-phase top-k + arithmetic on
     # per-stratum totals) must be bit-identical to the direct window form,
     # including edge strata: n=1 (percent_rank=0), n<10 (ntile degenerate),
@@ -170,13 +170,9 @@ def test_rank_funcs_two_phase_matches_direct_window(spark):
     )
     df = spark.createDataFrame(rows).withColumn("ts", F.timestamp_seconds(F.col("event_id")))
 
-    # reuse the query body by monkeypatching its events loader
-    orig = qa._events
-    qa._events = lambda s, d: df
-    try:
-        got = qa._q_rank_funcs(spark, "unused").toPandas()
-    finally:
-        qa._events = orig
+    # run the query body over the fixture, written where it reads events
+    df.write.parquet(str(tmp_path / "events.parquet"))
+    got = qa._q_rank_funcs(spark, str(tmp_path)).toPandas()
 
     w = Window.partitionBy("event_type").orderBy(F.desc("value"), F.asc("event_id"))
     want = (

@@ -4,12 +4,14 @@ Cheap tests that catch whole classes of bookkeeping mistakes: a benchmark
 session query referring to a renamed registry query, a second registration
 silently replacing a query (the r10 dedup_incremental shadowing lesson), an
 oracle SQL string that no longer parses after an edit (the full sweep would
-catch it too, but this runs in seconds inside pytest), or a test module that
-defines one test name twice.
+catch it too, but this runs in seconds inside pytest), a test module that
+defines one test name twice, or a module that reads a testdata table past
+`io.read_table`.
 """
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -114,3 +116,29 @@ def test_no_shadowed_test_functions():
                 dups.append(f"{path.name}::{node.name}")
             seen.add(node.name)
     assert not dups, dups
+
+
+# The file-stream sources take the on-disk schema of the table they replay;
+# `io.read_table` would hand them the normalized one (events_stream docstring).
+RAW_SCHEMA_READS = {
+    ("streaming.py", 'schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema'),
+    ("streaming.py", 'schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema'),
+}
+
+
+def test_testdata_tables_are_read_through_read_table():
+    """Path layout, the events `ts` policy and the fan-out choice live in
+    `io.read_table`; a module that reads `{sf_dir}/<name>.parquet` itself or
+    flips the nanos conf at run time bypasses them."""
+    bad = []
+    for path in sorted((ROOT / "tsgen").glob("*.py")):
+        text = path.read_text()
+        if re.search(r"conf\.set\([^)]*nanosAsLong", text):
+            bad.append(f"{path.name}: runtime conf.set of nanosAsLong")
+        if path.name == "io.py":
+            continue
+        for n, line in enumerate(text.splitlines(), 1):
+            line = line.strip()
+            if 'read.parquet(f"{sf_dir}' in line and (path.name, line) not in RAW_SCHEMA_READS:
+                bad.append(f"{path.name}:{n}: {line}")
+    assert not bad, "\n".join(bad)

@@ -1,36 +1,8 @@
 """Scalar-reference tests for the forecasting toolkit part 2
-(tsgen/queries_forecast2.py): AR(2), benchmark accuracy, Croston."""
+(tsgen/queries_forecast2.py): benchmark accuracy, Croston."""
 import numpy as np
 
-from tsgen.queries_forecast2 import ar2_forecast, croston_forecast, forecast_accuracy
-
-
-def test_ar2_recovers_exact_process(spark):
-    # noiseless AR(2) around a mean: OLS must recover phi exactly and the
-    # forecast must equal the recurrence continued forward.
-    phi1, phi2, mu = 1.2, -0.5, 3.0
-    y = [mu + 1.0, mu - 0.4]
-    for _ in range(60):
-        y.append(mu + phi1 * (y[-1] - mu) + phi2 * (y[-2] - mu))
-    rows = [(1, t, float(v)) for t, v in enumerate(y)]
-    df = spark.createDataFrame(rows, "series_id long, t long, value double")
-    out = sorted(ar2_forecast(df, horizon=5).collect(), key=lambda r: r.h)
-    assert len(out) == 5
-    # numpy replica of the same estimator: OLS on the sample-mean-centered
-    # series (centering on mu-hat, not the true mu, biases phi slightly on a
-    # finite transient — so compare against the estimator, and only loosely
-    # against the true process parameters)
-    c = np.asarray(y) - np.mean(y)
-    X = np.column_stack([c[1:-1], c[:-2]])
-    ref = np.linalg.solve(X.T @ X, X.T @ c[2:])
-    assert abs(out[0].phi1 - ref[0]) < 1e-9 and abs(out[0].phi2 - ref[1]) < 1e-9
-    assert abs(out[0].phi1 - phi1) < 0.05 and abs(out[0].phi2 - phi2) < 0.05
-    m = float(np.mean(y))
-    f2, f1 = y[-2] - m, y[-1] - m
-    for r in out:
-        fn = ref[0] * f1 + ref[1] * f2
-        assert abs(r.forecast - (fn + m)) < 1e-9, r.h
-        f2, f1 = f1, fn
+from tsgen.queries_forecast2 import croston_forecast, forecast_accuracy
 
 
 def test_accuracy_scalar_reference(spark):

@@ -160,6 +160,21 @@ def test_incremental_agg_state_equals_full_recompute(spark):
         assert abs(r.total - want[r.k].total) < 1e-6
 
 
+def test_fanout_scan_rechecks_a_rewritten_table(spark, tmp_path):
+    # the fan-out verdict follows the files on disk at each call: a table
+    # rewritten at the same path with more files than cores is not fanned out
+    cpus = spark.sparkContext.defaultParallelism
+    p = str(tmp_path / "t.parquet")
+
+    def plan() -> str:
+        return io.fanout_scan(spark, p)._jdf.queryExecution().executedPlan().toString()
+
+    spark.range(100).coalesce(1).write.parquet(p)
+    assert "RoundRobinPartitioning" in plan()
+    spark.range(100 * (cpus + 1)).repartition(cpus + 1).write.mode("overwrite").parquet(p)
+    assert len(list((tmp_path / "t.parquet").glob("*.parquet"))) == cpus + 1
+    assert "RoundRobinPartitioning" not in plan()
+
 
 def test_doc_counts_match_registry():
     """README/COVERAGE query counts are generated claims — keep them equal to

@@ -980,9 +980,11 @@ def test_phash_finds_planted_media_neardup(spark):
 
 def test_pii_scrub_finds_and_removes_planted_pii(spark):
     from tsgen import text as T
-    from tsgen.queries_pipeline import _plant_pii, _docs
+    from tsgen.io import read_table
+    from tsgen.queries_pipeline import _plant_pii
 
-    out = T.pii_scrub(_plant_pii(_docs(spark, "/root/testdata/sf0.001"))).collect()
+    docs = read_table(spark, "/root/testdata/sf0.001", "documents", fanout=True)
+    out = T.pii_scrub(_plant_pii(docs)).collect()
     assert sum(r.n_emails for r in out) > 0
     assert sum(r.n_phones for r in out) > 0
     assert all(r.residual_pii == 0 for r in out)  # redaction is complete

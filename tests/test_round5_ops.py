@@ -8,7 +8,7 @@ from tsgen.queries_exactdup import substring_dup_spans
 from tsgen.queries_tokenizer import bm25_ndcg
 
 
-def _docs(spark, rows):
+def _docs_df(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
@@ -20,7 +20,7 @@ def test_substr_dup_basic(spark):
         (2, "qq" + shared + "zz"),
         (3, "entirely unique text!"),
     ]
-    out = substring_dup_spans(_docs(spark, rows), min_len=12).collect()
+    out = substring_dup_spans(_docs_df(spark, rows), min_len=12).collect()
     got = {r.doc_id: r for r in out}
     assert set(got) == {1, 2}
     # the shared run is 12 chars at offset 3..14; only the aligned L-gram
@@ -35,7 +35,7 @@ def test_substr_dup_merges_overlapping_spans(spark):
     # must merge into ONE maximal span covering all 16 chars
     shared = "abcdefghijklmnop"  # 16 chars
     rows = [(1, shared + "##"), (2, "##" + shared)]
-    out = {r.doc_id: r for r in substring_dup_spans(_docs(spark, rows), min_len=12).collect()}
+    out = {r.doc_id: r for r in substring_dup_spans(_docs_df(spark, rows), min_len=12).collect()}
     assert out[1].n_dup_spans == 1 and out[1].dup_chars == 16
     assert out[2].n_dup_spans == 1 and out[2].dup_chars == 16
 
@@ -44,7 +44,7 @@ def test_substr_dup_within_one_doc(spark):
     # Lee et al. count ANY repeat, including within a single document
     rep = "0123456789ab"  # 12 chars
     rows = [(7, rep + "-----" + rep)]
-    out = substring_dup_spans(_docs(spark, rows), min_len=12).collect()
+    out = substring_dup_spans(_docs_df(spark, rows), min_len=12).collect()
     assert len(out) == 1
     assert out[0].n_dup_spans == 2
     assert out[0].dup_chars == 24
@@ -52,7 +52,7 @@ def test_substr_dup_within_one_doc(spark):
 
 def test_substr_dup_short_docs_skipped(spark):
     rows = [(1, "tiny"), (2, "tiny")]
-    assert substring_dup_spans(_docs(spark, rows), min_len=12).count() == 0
+    assert substring_dup_spans(_docs_df(spark, rows), min_len=12).count() == 0
 
 
 def test_bm25_ndcg_hand_computed(spark):
@@ -62,7 +62,7 @@ def test_bm25_ndcg_hand_computed(spark):
         (20, "join other words here"),
         (30, "nothing relevant at all"),
     ]
-    out = bm25_ndcg(_docs(spark, rows), queries=((1, "spark join"),), k=5).collect()
+    out = bm25_ndcg(_docs_df(spark, rows), queries=((1, "spark join"),), k=5).collect()
     assert len(out) == 1
     r = out[0]
     # ideal ordering IS rel-desc = (2, 1): idcg = 3/log2(2) + 1/log2(3)
@@ -251,7 +251,7 @@ def test_bpe_encode_compresses_repetitive_corpus(spark):
     from tsgen.queries_tokenizer import bpe_encode
 
     rows = [(1, "hello hello hello world"), (2, "hello world world")]
-    docs = _docs(spark, rows)
+    docs = _docs_df(spark, rows)
     # zero merges: every word costs len(word)+1 symbols (chars + </w>)
     base = {r.doc_id: r for r in bpe_encode(docs, iters=0).collect()}
     assert base[1].n_words == 4 and base[1].n_tokens == 3 * 6 + 6
@@ -465,11 +465,11 @@ def test_heaps_law_bounds(spark):
 
     # closed vocabulary (every doc reuses 3 words) => beta near 0;
     # all-unique tokens => beta = 1 exactly (V(n) = n)
-    closed = _docs(spark, [(i, "a b c a b c a b c") for i in range(30)])
+    closed = _docs_df(spark, [(i, "a b c a b c a b c") for i in range(30)])
     out_c = heaps_law(closed).collect()[0]
     assert out_c.vocab == 3
     assert out_c.beta < 0.2
-    uniq = _docs(spark, [(i, f"w{i}a w{i}b w{i}c") for i in range(30)])
+    uniq = _docs_df(spark, [(i, f"w{i}a w{i}b w{i}c") for i in range(30)])
     out_u = heaps_law(uniq).collect()[0]
     assert out_u.vocab == 90
     assert abs(out_u.beta - 1.0) < 1e-6
@@ -484,7 +484,7 @@ def test_bpe_train_strips_marker_bytes(spark):
         (1, "aa ab aa ab aa \x01bad\x02 we</w>ird"),
         (2, "aa ab aa aa ab"),
     ]
-    out = bpe_train(_docs(spark, rows), iters=1).collect()
+    out = bpe_train(_docs_df(spark, rows), iters=1).collect()
     assert len(out) == 1
     # over the CLEAN words only: aa×6 ab×4 → 'a a'=6 ties 'a </w>'=6,
     # tie-break by pair text ('<' sorts before 'a') → ('a </w>', 6).

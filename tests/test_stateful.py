@@ -15,9 +15,9 @@ def test_ewma_stateful_matches_pandas(spark):
         .sort_index()
     )
 
-    from tsgen.queries_analytics import _events
+    from tsgen.io import read_table
 
-    pdf = _events(spark, SF).toPandas().sort_values(["user_id", "ts", "event_id"])
+    pdf = read_table(spark, SF, "events").toPandas().sort_values(["user_id", "ts", "event_id"])
     for uid, g in pdf.groupby("user_id"):
         ewma = None
         for v in g.value:
@@ -27,9 +27,9 @@ def test_ewma_stateful_matches_pandas(spark):
 
 
 def test_bucketed_range_join_matches_naive(spark):
-    from tsgen.queries_analytics import _events
+    from tsgen.io import read_table
 
-    ev = _events(spark, SF)
+    ev = read_table(spark, SF, "events")
     intervals = (
         ev.filter(F.col("event_type") == "error")
         .groupBy(F.date_trunc("hour", "ts").alias("w_start"))

@@ -10,9 +10,9 @@ def test_stream_tumbling_equals_batch(spark):
     s = streaming.events_stream(spark, SF)
     got = streaming.run_to_completion(streaming.tumbling_counts(s)).toPandas()
 
-    from tsgen.queries_analytics import _events
+    from tsgen.io import read_table
 
-    ev = _events(spark, SF)
+    ev = read_table(spark, SF, "events")
     want = (
         analytics.tumbling(ev, "ts", "hour", ["event_type"], "value")
         .select(
@@ -34,9 +34,9 @@ def test_stream_session_counts_match_batch_sessionize(spark):
     s = streaming.events_stream(spark, SF)
     got = streaming.run_to_completion(streaming.session_counts(s)).toPandas()
 
-    from tsgen.queries_analytics import _events
+    from tsgen.io import read_table
 
-    ev = _events(spark, SF)
+    ev = read_table(spark, SF, "events")
     sess = analytics.sessionize(ev, "user_id", "ts", 30)
     want = sess.groupBy("user_id", "session_id").count().toPandas()
     assert len(got) == len(want)  # same number of sessions
@@ -82,9 +82,9 @@ def test_foreach_batch_sink_roundtrip(tmp_path, spark):
     out = streaming.foreach_batch_parquet_sink(
         s.select("event_id", "user_id", "value"), str(tmp_path / "sink")
     )
-    from tsgen.queries_analytics import _events
+    from tsgen.io import read_table
 
-    ev = _events(spark, SF)
+    ev = read_table(spark, SF, "events")
     assert out.count() == ev.count()
     # multiple micro-batches actually happened
     assert out.select("_batch_id").distinct().count() == 3
@@ -211,7 +211,7 @@ def test_chunked_replay_scd2_state_carries(tmp_path, spark):
     # in chunk k+1) must still come out exactly as in the one-batch build —
     # the open row lives in the state store between triggers
     from tsgen.queries_warehouse import scd2_intervals
-    from tsgen.queries_analytics import _events
+    from tsgen.io import read_table
 
     s4 = streaming.replay_chunked(spark, SF, 4, str(tmp_path / "chunks_scd2"))
     multi = (
@@ -221,7 +221,7 @@ def test_chunked_replay_scd2_state_carries(tmp_path, spark):
         .reset_index(drop=True)
     )
     batch = (
-        scd2_intervals(_events(spark, SF))
+        scd2_intervals(read_table(spark, SF, "events"))
         .filter("NOT is_current")
         .select("user_id", "event_type", "valid_from_s", "valid_to_s", "version")
         .toPandas()
@@ -238,7 +238,7 @@ def test_chunked_replay_dd_sketch_state_merges(tmp_path, spark):
     # DDSketch bucket counts must ADD across micro-batches: a 3-chunk replay
     # yields the identical bucket table as one batch pass
     from tsgen.sketches import _dd_bucket
-    from tsgen.queries_analytics import _events
+    from tsgen.io import read_table
     import pyspark.sql.functions as F
 
     s3 = streaming.replay_chunked(spark, SF, 3, str(tmp_path / "chunks_dd"))
@@ -250,7 +250,7 @@ def test_chunked_replay_dd_sketch_state_merges(tmp_path, spark):
     }
     batch = {
         r.b: r.cnt
-        for r in _events(spark, SF)
+        for r in read_table(spark, SF, "events")
         .filter(F.col("value") > 0)
         .select(F.expr(_dd_bucket("value")).alias("b"))
         .groupBy("b")

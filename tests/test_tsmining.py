@@ -447,12 +447,12 @@ def test_tsmining_plan_shapes(spark):
     """Plan assertions for the session's scale claims: small sides
     broadcast; the big-side aggregations stay partial (no unexpected
     unpartitioned window over data-sized input)."""
-    from tsgen.queries_analytics import _events
+    from tsgen.io import read_table
     from tsgen.queries_tsmining import lombscargle, welch_psd
     from tsgen.similarity import kmeans_l2
 
     sf = "/root/testdata/sf0.001"
-    ev = _events(spark, sf)
+    ev = read_table(spark, sf, "events")
     # lombscargle: per-type stats broadcast back; no WindowExec at all
     plan = lombscargle(ev)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -549,7 +549,7 @@ def test_stream_cdc_apply_state_carries_across_microbatches(spark, tmp_path):
     each batch) equals the single-batch result."""
     from tsgen import streaming
     from tsgen.queries_tsmining import cdc_apply
-    from tsgen.queries_analytics import _events
+    from tsgen.io import read_table
 
     sf = "/root/testdata/sf0.001"
     chunked_src = streaming.replay_chunked(spark, sf, 4, str(tmp_path / "chunks"))
@@ -562,7 +562,7 @@ def test_stream_cdc_apply_state_carries_across_microbatches(spark, tmp_path):
         cur = last.get(r.user_id)
         if cur is None or r.n_changes > cur.n_changes:
             last[r.user_id] = r
-    want = {r.user_id: r for r in cdc_apply(_events(spark, sf)).collect()}
+    want = {r.user_id: r for r in cdc_apply(read_table(spark, sf, "events")).collect()}
     # users whose final op is the tombstone may have earlier-batch emissions
     # (documented update-stream contract) — compare the surviving keys
     for uid, w in want.items():
@@ -1001,7 +1001,7 @@ def test_stream_counter_rate_state_across_batches(spark, tmp_path):
     batch result, with deltas correct across chunk boundaries."""
     from tsgen import streaming
     from tsgen.queries_tsmining import counter_rate
-    from tsgen.queries_analytics import _events
+    from tsgen.io import read_table
 
     sf = "/root/testdata/sf0.001"
     chunked = streaming.replay_chunked(spark, sf, 4, str(tmp_path / "chunks"))
@@ -1015,7 +1015,7 @@ def test_stream_counter_rate_state_across_batches(spark, tmp_path):
         acc[k] = (n + r.n_samples, inc + r.increase, res + r.n_resets)
     want = {
         (r.user_id, r.bucket_s): (r.n_samples, r.increase, r.n_resets)
-        for r in counter_rate(_events(spark, sf)).collect()
+        for r in counter_rate(read_table(spark, sf, "events")).collect()
     }
     assert set(acc) == set(want)
     for k, (n, inc, res) in acc.items():

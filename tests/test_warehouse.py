@@ -738,14 +738,14 @@ def test_theta_matches_scalar_and_has_no_python_stage(spark):
 
 def test_hll_daily_merge_dominates_and_tracks_exact(spark):
     from tsgen.queries_warehouse import _q_hll_daily
-    from tsgen.queries_analytics import _events
+    from tsgen.io import read_table
 
     sf = "/root/testdata/sf0.001"
     rows = {r.day: r.est for r in _q_hll_daily(spark, sf).collect()}
     merged = rows.pop("__all__")
     # union of days ⊇ any single day (register max can only grow)
     assert merged >= max(rows.values()) - 1e-6
-    exact = _events(spark, sf).agg(F.countDistinct("user_id")).collect()[0][0]
+    exact = read_table(spark, sf, "events").agg(F.countDistinct("user_id")).collect()[0][0]
     assert abs(merged - exact) / exact < 0.15  # m=256 registers ≈ 6.5% σ
 
 
@@ -843,7 +843,7 @@ def test_new_sketch_ops_plan_shapes(spark):
 def test_cms_join_size_never_underestimates_and_is_tight(spark):
     from tsgen.queries_warehouse import _q_cms_join_size
 
-    from tsgen.queries_analytics import _events, _t
+    from tsgen.io import read_table
     from tsgen.sketches import CMS_W
 
     sf = "/root/testdata/sf0.01"
@@ -851,8 +851,8 @@ def test_cms_join_size_never_underestimates_and_is_tight(spark):
     assert r.est_join_size >= r.exact_join_size      # CMS inner product ≥ truth
     # the guarantee is overcount ≤ ~N_A·N_B/w (collision mass), not a fixed
     # multiple of the (possibly small) exact size
-    n_a = _events(spark, sf).count()
-    n_b = _t(spark, sf, "orders").count()
+    n_a = read_table(spark, sf, "events").count()
+    n_b = read_table(spark, sf, "orders").count()
     assert r.overcount <= 2 * n_a * n_b / CMS_W, r
 
 

@@ -33,6 +33,24 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+def read_table(
+    spark: SparkSession, sf_dir: str, name: str, fanout: bool = False
+) -> DataFrame:
+    """The one batch reader of a testdata table `{sf_dir}/<name>.parquet`.
+
+    `events` gets `normalize_event_ts`, so every consumer sees `ts` as
+    session-zoned TIMESTAMP. `fanout=True` reads through `fanout_scan`; the
+    text and per-row embedding queries pass it. Aggregation-only embedding
+    queries (gram sufficient stats, eigen power iterations) stay plain: the
+    repartition exchange and its extra tasks measured about 2x slower than
+    the serial scan at the test size (isolated min of 3: embed_abtt 0.9 →
+    1.9 s, embed_pca_power 0.7 → 1.5 s), since there is no narrow per-row
+    math to parallelize, only partial-aggregated sums."""
+    path = f"{sf_dir}/{name}.parquet"
+    df = fanout_scan(spark, path) if fanout else spark.read.parquet(path)
+    return normalize_event_ts(df) if name == "events" else df
+
+
 def fanout_scan(spark: SparkSession, path: str) -> DataFrame:
     """Read a parquet table and, when the file layout cannot yield enough
     input splits (the test corpus is one row group per table, i.e. ONE
@@ -49,33 +67,25 @@ def fanout_scan(spark: SparkSession, path: str) -> DataFrame:
     bytes), NOT from df.rdd.getNumPartitions(): converting to an RDD
     compiles the physical plan on the driver, which measurably taxed every
     query build (~0.2-0.5 s × 3 bench reps). The stat walks nested part
-    dirs too (ADVICE r13: a partitioned local dataset must not silently
-    skip the gate), and the per-path verdict is memoized so repeat builds
-    of the same query skip the filesystem walk."""
+    dirs too, so a partitioned local dataset does not silently skip the
+    gate. It is taken on every call, so a table rewritten at the same path
+    gets a fresh verdict."""
+    import glob
+    import os
+
     df = spark.read.parquet(path)
     cpus = spark.sparkContext.defaultParallelism
-    decision = _FANOUT_DECISIONS.get((path, cpus))
-    if decision is None:
-        try:
-            import glob
-            import os
-
-            files = (
-                [path]
-                if os.path.isfile(path)
-                else glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-            )
-            total = sum(os.path.getsize(f) for f in files)
-            decision = bool(files) and len(files) <= cpus and total <= 256 * 1024 * 1024
-        except OSError:
-            decision = False  # non-local storage: real deployments have real splits
-        _FANOUT_DECISIONS[(path, cpus)] = decision
-    if decision:
-        df = df.repartition(cpus)
-    return df
-
-
-_FANOUT_DECISIONS: dict[tuple[str, int], bool] = {}
+    try:
+        files = (
+            [path]
+            if os.path.isfile(path)
+            else glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+        )
+        total = sum(os.path.getsize(f) for f in files)
+        fan = bool(files) and len(files) <= cpus and total <= 256 * 1024 * 1024
+    except OSError:
+        fan = False  # non-local storage: real deployments have real splits
+    return df.repartition(cpus) if fan else df
 
 
 def save_series(df: DataFrame, path: str, partition_by: str | None = None) -> None:

@@ -13,6 +13,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import expr as E, generators, oracle
+from .io import read_table
 from .normalize import znorm
 
 
@@ -205,9 +206,8 @@ def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> Dat
     seasonality vs residual.
     """
     from . import decompose
-    from .queries_analytics import _events
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     hourly = (
         ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("bucket"), "event_type")
         .agg(F.avg("value").alias("value"))

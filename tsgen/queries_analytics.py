@@ -7,26 +7,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import analytics
+from .io import read_table
 from .queries import _REGISTRY, Query, round6, roundn
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet stores TIMESTAMP(NANOS); normalize ts to session-zoned
-    TIMESTAMP whatever this Spark version reads it as (bigint nanos under the
-    legacy conf, TIMESTAMP_NTZ on Spark 4.1+)."""
-    from .io import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
 # --- rolling window -------------------------------------------------------
 def _q_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = analytics.rolling_stats(ev, "user_id", ["ts", "event_id"], "value", 10)
     return round6(
         out.select("event_id", "user_id", "value", "roll_avg", "roll_min", "roll_max"),
@@ -47,7 +34,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
 
 # --- lag delta ------------------------------------------------------------
 def _q_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = analytics.lag_delta(ev, "user_id", ["ts", "event_id"], "value")
     return round6(out.select("event_id", "user_id", "delta"), "delta")
 
@@ -64,7 +51,7 @@ GAP_MIN = 30
 
 
 def _q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     s = analytics.sessionize(ev, "user_id", "ts", GAP_MIN)
     out = s.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
@@ -98,7 +85,7 @@ FROM sess GROUP BY user_id, session_id
 
 # --- tumbling window ------------------------------------------------------
 def _q_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = analytics.tumbling(ev, "ts", "hour", ["event_type"], "value")
     out = out.select(
         F.unix_timestamp("bucket").alias("bucket_s"),
@@ -121,7 +108,7 @@ FROM events GROUP BY 1, 2
 
 # --- as-of join -----------------------------------------------------------
 def _q_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     purchases = analytics.latest_by_key(
         ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value"),
@@ -151,7 +138,7 @@ FROM clicks c ASOF LEFT JOIN purch p
 
 # --- exact dedup (keep latest) -------------------------------------------
 def _q_dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = analytics.latest_by_key(ev, ["user_id", "event_type"], [F.desc("ts"), F.desc("event_id")])
     out = out.select("user_id", "event_type", "event_id", F.unix_timestamp("ts").alias("ts_s"), "value")
     return round6(out, "value")
@@ -167,7 +154,7 @@ FROM (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
 
 # --- TPC-H Q1-style pricing summary (bench headline) ----------------------
 def _q_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     out = (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -209,7 +196,7 @@ GROUP BY l_returnflag, l_linestatus
 
 # --- rollup ---------------------------------------------------------------
 def _q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     out = o.rollup("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("n_orders"),
         (F.round(F.sum("o_totalprice") + F.lit(1e-9), 2) + F.lit(0.0)).alias("sum_total"),
@@ -226,10 +213,10 @@ FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 
 # --- top-k per group over a join chain ------------------------------------
 def _q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
+    n = read_table(spark, sf_dir, "nation")
     rev = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -259,7 +246,7 @@ SELECT n_name, c_custkey, (round((revenue) + 1.0e-9,2)+0.0e0) AS revenue, rank F
 
 # --- distinct counts ------------------------------------------------------
 def _q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_supps"),
@@ -277,7 +264,7 @@ FROM lineitem
 
 def _q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HLL sketches differ per engine → rows-only; accuracy asserted in tests
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.approx_count_distinct("l_partkey").alias("approx_parts"),
         F.approx_count_distinct("l_orderkey").alias("approx_orders"),
@@ -286,9 +273,9 @@ def _q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- TPC-H Q3-style: unshipped-order priority (3-way join + topk) ---------
 def _q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     out = (
         li.filter(F.col("l_shipdate") > F.lit("1998-01-01"))
         .join(o.filter(F.col("o_orderdate") < F.lit("1998-01-01")), li.l_orderkey == o.o_orderkey)
@@ -318,11 +305,11 @@ ORDER BY revenue DESC, l_orderkey LIMIT 20
 
 # --- TPC-H Q5-style: revenue per nation through a 5-table join chain ------
 def _q_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
+    s = read_table(spark, sf_dir, "supplier")
+    n = read_table(spark, sf_dir, "nation")
     out = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -371,7 +358,7 @@ _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
 def _q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = (
         ev.groupBy("user_id")
         .pivot("event_type", _EVENT_TYPES)
@@ -396,7 +383,7 @@ FROM events GROUP BY user_id
 
 # --- JSON property extraction (semi-structured column) --------------------
 def _q_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("bigint")
     out = (
         ev.withColumn("k", k)
@@ -430,7 +417,7 @@ def _q_sample_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gives a reproducible, cross-engine, pushdown-friendly 10% sample
     from . import expr as E
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = ev.filter(F.expr(f"{E.u01('event_id', 777)} < 1.0e-1")).select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -459,7 +446,7 @@ _REGISTRY.update(
 def _q_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir).withColumn("ts_s", F.unix_timestamp("ts"))
+    ev = read_table(spark, sf_dir, "events").withColumn("ts_s", F.unix_timestamp("ts"))
     w = Window.partitionBy("user_id").orderBy("ts_s").rangeBetween(-3600, 0)
     out = ev.select(
         "event_id",
@@ -501,7 +488,7 @@ def _q_rank_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the family. Output is bit-identical to the direct window form."""
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     slim = ev.select("event_id", "event_type", "value").withColumn(
         "_pid", F.spark_partition_id()
     )
@@ -572,7 +559,7 @@ _REGISTRY.update(
 
 # --- correlation / covariance aggregates ----------------------------------
 def _q_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     out = li.groupBy("l_returnflag").agg(
         F.corr("l_quantity", "l_extendedprice").alias("corr_qty_price"),
         F.covar_samp("l_quantity", "l_extendedprice").alias("covar_qty_price"),
@@ -596,7 +583,7 @@ HIST_LO, HIST_HI, HIST_BINS = 0.0, 200.0, 20
 
 
 def _q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     step = (HIST_HI - HIST_LO) / HIST_BINS
     bin_expr = F.least(
         F.greatest(F.floor((F.col("value") - HIST_LO) / step).cast("bigint"), F.lit(0)),
@@ -620,7 +607,7 @@ FROM events GROUP BY {b}
 
 # --- Levenshtein near-dup over blocked doc prefixes -----------------------
 def _q_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", F.substring("text", 1, 40).alias("prefix")
     )
     a = d.select(F.col("doc_id").alias("doc_a"), "lang", "source", F.col("prefix").alias("pa"))
@@ -657,7 +644,7 @@ _REGISTRY.update(
 
 # --- z-score outliers ------------------------------------------------------
 def _q_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = analytics.zscore_outliers(ev, "event_type", "value", threshold=2.5)
     out = out.select("event_id", "event_type", "value", "zscore")
     return round6(out, "value", "zscore")
@@ -676,7 +663,7 @@ WHERE abs((value - mu) / sd) > 2.5
 
 # --- resample + linear interpolation (per-user 30-minute grid) ------------
 def _q_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).filter(F.col("user_id") < 20)
+    ev = read_table(spark, sf_dir, "events").filter(F.col("user_id") < 20)
     out = analytics.resample_interpolate(ev, "user_id", "ts", "value", 1800)
     return round6(out, "value_interp")
 
@@ -726,7 +713,7 @@ _REGISTRY.update(
 
 # --- GROUPING SETS with grouping_id ---------------------------------------
 def _q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("_orders_gs")
     return spark.sql(
         """
@@ -756,7 +743,7 @@ def _q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast — the canonical stream-static join pattern."""
     from . import streaming
 
-    c = _t(spark, sf_dir, "customer").select(
+    c = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )
     s = streaming.events_stream(spark, sf_dir)
@@ -790,7 +777,7 @@ _REGISTRY.update(
 
 
 def _q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = analytics.rolling_median(ev, "user_id", ["ts", "event_id"], "value", 15)
     return round6(
         out.select("event_id", "user_id", "value", "roll_median", "roll_p90"),
@@ -825,11 +812,11 @@ def _q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     escape hatch when a hot join key would pin one reducer and AQE has no
     stats to see it. The oracle is the plain join: salting must be
     result-invariant, which is exactly what this row certifies."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("p_partkey"),
         (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"),
     )
-    pt = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    pt = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     j = analytics.salted_join(li, pt, "p_partkey")
     out = j.groupBy("p_brand").agg(
         F.count("*").alias("n_items"), F.sum("rev").alias("revenue")
@@ -853,7 +840,7 @@ def _q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     — phase 1 spreads each hot key over n_salts reducers, phase 2 merges
     the algebraic partials. Oracle = plain groupBy: the decomposition must
     be exact for sum/count/min/max."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = analytics.salted_agg(
         ev.select("event_type", "value"), ["event_type"], {"value": "sum"}
     )

@@ -25,8 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .io import read_table
 from .queries import _REGISTRY, Query, roundn
-from .queries_analytics import _events
 
 BENFORD_SCALE = 1000
 
@@ -97,7 +97,7 @@ def granger_pairs(ev: DataFrame) -> DataFrame:
 
 def _q_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
     return roundn(
-        granger_pairs(_events(spark, sf_dir)), 4, "beta_ylag", "beta_xlag", "f_stat"
+        granger_pairs(read_table(spark, sf_dir, "events")), 4, "beta_ylag", "beta_xlag", "f_stat"
     )
 
 
@@ -167,7 +167,7 @@ def benford(ev: DataFrame, scale: int = BENFORD_SCALE) -> DataFrame:
 
 
 def _q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return roundn(benford(_events(spark, sf_dir)), 4, "n_exp", "chi2_term")
+    return roundn(benford(read_table(spark, sf_dir, "events")), 4, "n_exp", "chi2_term")
 
 
 _BENFORD_SQL = f"""
@@ -236,7 +236,7 @@ def did_readout(ev: DataFrame) -> DataFrame:
 
 def _q_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     return roundn(
-        did_readout(_events(spark, sf_dir)), 4,
+        did_readout(read_table(spark, sf_dir, "events")), 4,
         "t_pre", "t_post", "c_pre", "c_post", "did", "t_stat",
     )
 
@@ -348,7 +348,7 @@ def cuped_readout(ev: DataFrame, cutoff: str = CUPED_CUT) -> DataFrame:
 
 
 def _q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return cuped_readout(_events(spark, sf_dir))
+    return cuped_readout(read_table(spark, sf_dir, "events"))
 
 
 def _cuped_sql(cutoff: str = CUPED_CUT) -> str:
@@ -450,7 +450,7 @@ def its_readout(ev: DataFrame, t0: int = ITS_T0_DAY) -> DataFrame:
 
 
 def _q_its(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return its_readout(_events(spark, sf_dir))
+    return its_readout(read_table(spark, sf_dir, "events"))
 
 
 _ITS_SQL = f"""
@@ -568,7 +568,7 @@ def ab_holm(ev: DataFrame) -> DataFrame:
 
 
 def _q_ab_holm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ab_holm(_events(spark, sf_dir))
+    return ab_holm(read_table(spark, sf_dir, "events"))
 
 
 def _ab_holm_sql() -> str:
@@ -734,7 +734,7 @@ def msprt_from_daily(
 
 
 def _q_msprt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return msprt_monitor(_events(spark, sf_dir))
+    return msprt_monitor(read_table(spark, sf_dir, "events"))
 
 
 def _msprt_sql(tau2: float = MSPRT_TAU2) -> str:
@@ -836,7 +836,7 @@ def srm_check(ev: DataFrame) -> DataFrame:
 
 
 def _q_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return srm_check(_events(spark, sf_dir))
+    return srm_check(read_table(spark, sf_dir, "events"))
 
 
 def _srm_sql() -> str:
@@ -935,7 +935,7 @@ def next_event_eval(ev: DataFrame, cutoff: str = NEXT_CUTOFF) -> DataFrame:
 
 
 def _q_next_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return next_event_eval(_events(spark, sf_dir))
+    return next_event_eval(read_table(spark, sf_dir, "events"))
 
 
 def _next_event_sql(cutoff: str = NEXT_CUTOFF) -> str:
@@ -1067,7 +1067,7 @@ def msprt_by_type(ev: DataFrame, tau2: float = MSPRT_TAU2) -> DataFrame:
 
 
 def _q_msprt_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return msprt_by_type(_events(spark, sf_dir))
+    return msprt_by_type(read_table(spark, sf_dir, "events"))
 
 
 def _msprt_by_type_sql(tau2: float = MSPRT_TAU2) -> str:
@@ -1192,7 +1192,7 @@ def power_analysis(ev: DataFrame, mdes: tuple = PWR_MDES) -> DataFrame:
 
 
 def _q_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return power_analysis(_events(spark, sf_dir))
+    return power_analysis(read_table(spark, sf_dir, "events"))
 
 
 def _power_sql(mdes: tuple = PWR_MDES) -> str:
@@ -1255,7 +1255,7 @@ def qte_readout(ev: DataFrame, qs: tuple = QTE_QS) -> DataFrame:
 
 
 def _q_qte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return qte_readout(_events(spark, sf_dir))
+    return qte_readout(read_table(spark, sf_dir, "events"))
 
 
 def _qte_sql(qs: tuple = QTE_QS) -> str:
@@ -1310,7 +1310,7 @@ def novelty_effect(ev: DataFrame) -> DataFrame:
 
 
 def _q_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return novelty_effect(_events(spark, sf_dir))
+    return novelty_effect(read_table(spark, sf_dir, "events"))
 
 
 _NOVELTY_SQL = """
@@ -1402,7 +1402,7 @@ def ab_bh_fdr(ev: DataFrame) -> DataFrame:
 
 
 def _q_ab_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ab_bh_fdr(_events(spark, sf_dir))
+    return ab_bh_fdr(read_table(spark, sf_dir, "events"))
 
 
 def _ab_bh_sql() -> str:
@@ -1548,7 +1548,7 @@ def shapley_attribution(ev: DataFrame) -> DataFrame:
 
 
 def _q_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shapley_attribution(_events(spark, sf_dir))
+    return shapley_attribution(read_table(spark, sf_dir, "events"))
 
 
 _SHAPLEY_SQL = """
@@ -1668,7 +1668,7 @@ def qini_curve(ev: DataFrame, k: int = QINI_K) -> DataFrame:
 
 
 def _q_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return qini_curve(_events(spark, sf_dir))
+    return qini_curve(read_table(spark, sf_dir, "events"))
 
 
 _QINI_SQL = f"""

@@ -32,7 +32,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .queries import _REGISTRY, Query
-from .io import fanout_scan
+from .io import read_table
 
 SUBSTR_L = 40  # minimum duplicated-substring length, chars (Lee et al. use 50 BPE tokens)
 
@@ -217,16 +217,16 @@ ORDER BY doc_id
 
 
 def _q_dedup_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return substring_dup_spans(fanout_scan(spark, f"{sf_dir}/documents.parquet"))
+    return substring_dup_spans(read_table(spark, sf_dir, "documents", fanout=True))
 
 
 def _q_dedup_substr_keepfirst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return substring_cut_keepfirst(fanout_scan(spark, f"{sf_dir}/documents.parquet"))
+    return substring_cut_keepfirst(read_table(spark, sf_dir, "documents", fanout=True))
 
 
 def _q_dedup_substr_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_dup_spans(
-        fanout_scan(spark, f"{sf_dir}/documents.parquet"), hash_key=True
+        read_table(spark, sf_dir, "documents", fanout=True), hash_key=True
     )
 
 
@@ -323,7 +323,7 @@ def substring_contamination(
 
 
 def _q_dedup_substr_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return substring_contamination(fanout_scan(spark, f"{sf_dir}/documents.parquet"))
+    return substring_contamination(read_table(spark, sf_dir, "documents", fanout=True))
 
 
 def substring_contamination_sql(
@@ -489,7 +489,7 @@ def heaps_law(docs: DataFrame, text: str = "text", n_grid: int = HEAPS_GRID) -> 
 def _q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain read: heaps_law is a global-order vocabulary-growth window,
     # fan-out measured slower (no narrow per-row heavy phase)
-    return heaps_law(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return heaps_law(read_table(spark, sf_dir, "documents"))
 
 
 def heaps_law_sql(n_grid: int = HEAPS_GRID) -> str:

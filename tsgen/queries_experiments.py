@@ -21,9 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import dedup
+from .io import read_table
 from .queries import _REGISTRY, Query, canon_types, round6, roundn
-from .queries_analytics import _events, _t
-from .queries_pipeline import CLUSTER_THR, _docs
+from .queries_pipeline import CLUSTER_THR
 
 LOOKBACK_S = 7 * 24 * 3600
 
@@ -67,7 +67,7 @@ def last_touch_attribution(
 
 
 def _q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(last_touch_attribution(_events(spark, sf_dir)), "value")
+    return round6(last_touch_attribution(read_table(spark, sf_dir, "events")), "value")
 
 
 _ATTRIBUTION_SQL = f"""
@@ -162,7 +162,7 @@ def multi_touch_attribution(
 
 def _q_attribution_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return round6(
-        multi_touch_attribution(_events(spark, sf_dir)), "credit_linear", "credit_u"
+        multi_touch_attribution(read_table(spark, sf_dir, "events")), "credit_linear", "credit_u"
     )
 
 
@@ -259,7 +259,7 @@ def time_decay_attribution(
 
 
 def _q_attribution_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(time_decay_attribution(_events(spark, sf_dir)), "credit_decay")
+    return round6(time_decay_attribution(read_table(spark, sf_dir, "events")), "credit_decay")
 
 
 def _attribution_decay_sql() -> str:
@@ -330,7 +330,7 @@ def ab_readout(ev: DataFrame, metric_type: str = "purchase") -> DataFrame:
 
 def _q_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return roundn(
-        ab_readout(_events(spark, sf_dir)), 4,
+        ab_readout(read_table(spark, sf_dir, "events")), 4,
         "mean_a", "mean_b", "lift", "t_stat",
     )
 
@@ -376,7 +376,7 @@ def winsorize(ev: DataFrame, lo: float = 0.05, hi: float = 0.95) -> DataFrame:
 
 def _q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return roundn(
-        winsorize(_events(spark, sf_dir)), 4, "mean_raw", "mean_winsorized"
+        winsorize(read_table(spark, sf_dir, "events")), 4, "mean_raw", "mean_winsorized"
     )
 
 
@@ -434,7 +434,8 @@ def triangle_stats(edges: DataFrame, a: str = "doc_a", b: str = "doc_b") -> Data
 
 
 def _q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    pairs = dedup.jaccard_pairs(docs, ["lang"], threshold=CLUSTER_THR)
     return round6(triangle_stats(pairs), "clustering_coeff")
 
 
@@ -520,7 +521,8 @@ def pagerank(
 
 
 def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    pairs = dedup.jaccard_pairs(docs, ["lang"], threshold=CLUSTER_THR)
     return round6(pagerank(pairs), "pr")
 
 
@@ -627,7 +629,7 @@ def personalized_pagerank(
 
 
 def _q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
     pairs = dedup.jaccard_pairs(docs, ["lang"], threshold=CLUSTER_THR)
     seeds = docs.filter(F.col("source") == PPR_SEED_SOURCE).select(
         F.col("doc_id").alias("node")
@@ -750,8 +752,8 @@ def hits_scores(edges: DataFrame, n_iter: int = HITS_ITER) -> DataFrame:
 
 
 def _q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
     edges = li.join(
         orders.select("o_orderkey", "o_custkey"),
         li.l_orderkey == orders.o_orderkey,
@@ -876,7 +878,8 @@ def kcore_nodes(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS,
 def _q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import dedup
 
-    pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    pairs = dedup.jaccard_pairs(docs, ["lang"], threshold=CLUSTER_THR)
     return canon_types(kcore_nodes(pairs))
 
 
@@ -967,7 +970,8 @@ def bfs_distances(
 def _q_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import dedup
 
-    pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    pairs = dedup.jaccard_pairs(docs, ["lang"], threshold=CLUSTER_THR)
     return canon_types(bfs_distances(pairs))
 
 
@@ -1057,7 +1061,8 @@ def harmonic_centrality(
 def _q_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import dedup
 
-    pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    pairs = dedup.jaccard_pairs(docs, ["lang"], threshold=CLUSTER_THR)
     return canon_types(harmonic_centrality(pairs))
 
 
@@ -1168,7 +1173,8 @@ def label_propagation(
 def _q_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import dedup
 
-    pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    pairs = dedup.jaccard_pairs(docs, ["lang"], threshold=CLUSTER_THR)
     return canon_types(label_propagation(pairs))
 
 
@@ -1222,7 +1228,7 @@ def _q_user_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     # product is exp(Σ ln(·)) over a window ORDERED BY EVENT TIME on the
     # tiny distinct-lifetime table (bounded by #distinct durations), not
     # the user table. Everything upstream is two partial-agged passes.
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     life = ev.groupBy("user_id").agg(
         F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts")
     )
@@ -1308,7 +1314,7 @@ def _q_competing_risks(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (same discipline as user_survival above).
     -> (dur_h, n_i, d_purchase, d_error, s_eventfree, cif_purchase,
        cif_error)."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     entry = ev.groupBy("user_id").agg(F.min("ts").alias("t0"))
     firsts = ev.filter(F.col("event_type").isin("purchase", "error")).groupBy(
         "user_id"
@@ -1444,7 +1450,7 @@ def _q_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is one partial-agged aggregate to a single row.
     from .queries_scale import global_row_ids
 
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("rev"))
     # composite sort key makes the rank total and deterministic under ties
     keyed = rev.withColumn(
@@ -1547,7 +1553,7 @@ def adamic_adar(ev: DataFrame, topk: int = AA_TOPK) -> DataFrame:
 
 
 def _q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return adamic_adar(_events(spark, sf_dir))
+    return adamic_adar(read_table(spark, sf_dir, "events"))
 
 
 def _aa_sql(topk: int = AA_TOPK) -> str:
@@ -1689,7 +1695,7 @@ def markov_attribution(ev: DataFrame) -> DataFrame:
 
 
 def _q_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return markov_attribution(_events(spark, sf_dir))
+    return markov_attribution(read_table(spark, sf_dir, "events"))
 
 
 def _markov_sql(iters: int = MK_ITERS) -> str:
@@ -1835,7 +1841,8 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
 def _q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import dedup
 
-    pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    pairs = dedup.jaccard_pairs(docs, ["lang"], threshold=CLUSTER_THR)
     pairs = pairs.localCheckpoint(eager=False)
     return modularity(pairs, label_propagation(pairs))
 
@@ -1920,7 +1927,8 @@ def assortativity(edges: DataFrame) -> DataFrame:
 def _q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import dedup
 
-    pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    pairs = dedup.jaccard_pairs(docs, ["lang"], threshold=CLUSTER_THR)
     return assortativity(pairs)
 
 

@@ -2,13 +2,6 @@
 the SES/Holt/Holt-Winters/theta/Kalman family in tsgen/forecast.py with the
 remaining M-competition classics):
 
-- ar2_forecast: per-series AR(2) autoregression — OLS fit on the centered
-  series via the 2x2 normal equations (Cramer), then an h-step recursive
-  forecast. Entirely Catalyst: one shuffle fits every series at once; the
-  h-step recurrence is unrolled as nested column expressions over the tiny
-  per-series coefficient table (no driver loop over data). A library
-  function only: the registered `forecast_ar2` query is the Yule–Walker fit
-  in tsgen/queries_statemodels.py.
 - forecast_accuracy: the M-competition benchmark harness — naive /
   seasonal-naive / drift forecasts on a train/test split, scored with
   MAE / RMSE / sMAPE / MASE per (series, method). This is the query a
@@ -22,9 +15,6 @@ remaining M-competition classics):
   window + one aggregation.
 
 Scale notes (100 TB):
-- ar2: the data-sized work is ONE hash partitioning on series_id shared by
-  the window pass and the groupBy (same key -> no second exchange); the
-  recurrence runs over n_series coefficient rows, never over raw points.
 - accuracy: lag window + per-series scalar agg share the series_id
   partitioning; the scalars table (n_series rows) is broadcast back.
 - croston: arrivals filter prunes before the shuffle; the SES closed form
@@ -39,69 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import expr as E, generators, oracle
+from .io import read_table
 from .queries import _REGISTRY, Query, roundn
 
-AR2_H = 8
 ACC_TRAIN_N, ACC_SEASON = 48, 16
 CROSTON_ALPHA = 0.3
 CROSTON_SALT = 52121
-
-
-# --- AR(2) -----------------------------------------------------------------
-def ar2_forecast(
-    df: DataFrame,
-    horizon: int = AR2_H,
-    key: str = "series_id",
-    t: str = "t",
-    value: str = "value",
-) -> DataFrame:
-    """Fit y_t - mu = phi1 (y_{t-1} - mu) + phi2 (y_{t-2} - mu) by OLS per
-    series, then forecast `horizon` steps by running the recurrence forward
-    from the last two observations.
-
-    The fit is the 2x2 normal-equation solve (Cramer): sums of lag products
-    are conditional aggregates over one series_id partitioning. The h-step
-    recurrence is unrolled as nested column expressions — expression-tree
-    size grows Fibonacci-like in `horizon`, fine for the small horizons this
-    targets (keep horizon <= ~16)."""
-    wp = Window.partitionBy(key)
-    wo = Window.partitionBy(key).orderBy(t)
-    d = (
-        df.withColumn("mu", F.avg(value).over(wp))
-        .withColumn("t_max", F.max(t).over(wp))
-        .withColumn("c", F.col(value) - F.col("mu"))
-        .withColumn("l1", F.lag(value, 1).over(wo) - F.col("mu"))
-        .withColumn("l2", F.lag(value, 2).over(wo) - F.col("mu"))
-    )
-    ok = F.col("l2").isNotNull()
-    agg = d.groupBy(key).agg(
-        F.max("mu").alias("mu"),
-        F.sum(F.when(ok, F.col("l1") * F.col("l1"))).alias("s11"),
-        F.sum(F.when(ok, F.col("l2") * F.col("l2"))).alias("s22"),
-        F.sum(F.when(ok, F.col("l1") * F.col("l2"))).alias("s12"),
-        F.sum(F.when(ok, F.col("c") * F.col("l1"))).alias("sy1"),
-        F.sum(F.when(ok, F.col("c") * F.col("l2"))).alias("sy2"),
-        F.max(F.when(F.col(t) == F.col("t_max"), F.col("c"))).alias("f1"),
-        F.max(F.when(F.col(t) == F.col("t_max") - 1, F.col("c"))).alias("f2"),
-    )
-    det = F.col("s11") * F.col("s22") - F.col("s12") * F.col("s12")
-    coef = agg.withColumn(
-        "phi1", (F.col("sy1") * F.col("s22") - F.col("sy2") * F.col("s12")) / det
-    ).withColumn(
-        "phi2", (F.col("s11") * F.col("sy2") - F.col("s12") * F.col("sy1")) / det
-    )
-    f_prev2, f_prev1 = F.col("f2"), F.col("f1")
-    steps = []
-    for _ in range(horizon):
-        f_new = F.col("phi1") * f_prev1 + F.col("phi2") * f_prev2
-        steps.append(f_new + F.col("mu"))
-        f_prev2, f_prev1 = f_prev1, f_new
-    out = coef.select(
-        key, "phi1", "phi2", F.posexplode(F.array(*steps)).alias("h0", "forecast")
-    )
-    return out.select(
-        key, (F.col("h0") + 1).alias("h"), "forecast", "phi1", "phi2"
-    )
 
 
 # --- benchmark accuracy harness -------------------------------------------
@@ -423,10 +356,9 @@ def forecast_reconcile(ev: DataFrame, alpha: float = RECON_ALPHA) -> DataFrame:
 
 def _q_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries import round6
-    from .queries_analytics import _events
 
     return round6(
-        forecast_reconcile(_events(spark, sf_dir)),
+        forecast_reconcile(read_table(spark, sf_dir, "events")),
         "base_fc", "bu_fc", "td_fc", "share",
     )
 
@@ -534,9 +466,7 @@ def prophet_lite(ev: DataFrame) -> DataFrame:
 
 
 def _q_prophet_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .queries_analytics import _events
-
-    return prophet_lite(_events(spark, sf_dir))
+    return prophet_lite(read_table(spark, sf_dir, "events"))
 
 
 def _prophet_core_sql() -> tuple:
@@ -747,9 +677,7 @@ def _prophet_fit(ev: DataFrame):
 
 
 def _q_prophet_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .queries_analytics import _events
-
-    return prophet_forecast(_events(spark, sf_dir))
+    return prophet_forecast(read_table(spark, sf_dir, "events"))
 
 
 def _prophet_forecast_sql(horizon: int = PL_HORIZON) -> str:

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import expr as E, generators, oracle
+from .io import read_table
 from .queries import _REGISTRY, Query, round6, roundn
 
 # --- B10: polynomial basis table [1, c, c^2, c^3], c = t/n ----------------
@@ -64,7 +65,7 @@ def _q_label_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = generators.generate_labeled(spark, 32, 8, noise=False, normalize=False).select(
         "series_id", "label"
     ).distinct()
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     vec = F.transform("embedding", lambda x: x.cast("double"))
     emb = emb.select(
         F.col("vec_id").alias("label"),
@@ -175,9 +176,7 @@ def _patch_roundtrip_sql() -> str:
 
 # --- set ops: users who clicked but never purchased -----------------------
 def _q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .queries_analytics import _events
-
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     clickers = ev.filter(F.col("event_type") == "click").select("user_id").distinct()
     buyers = ev.filter(F.col("event_type") == "purchase").select("user_id").distinct()
     viewers = ev.filter(F.col("event_type") == "view").select("user_id").distinct()
@@ -203,7 +202,7 @@ SELECT user_id, 'clicked_and_viewed' AS segment FROM (
 
 # --- cube ----------------------------------------------------------------
 def _q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = read_table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("n_orders"),
         (F.round(F.avg("o_totalprice") + F.lit(1e-9), 4) + F.lit(0.0)).alias("avg_total"),

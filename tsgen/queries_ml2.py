@@ -48,8 +48,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .io import read_table
 from .queries import _REGISTRY, Query, round6, roundn
-from .queries_analytics import _t
 
 LOGREG_ITERS = 4
 CAL_A, CAL_B = -1.5, 1.0
@@ -59,7 +59,7 @@ CAL_A, CAL_B = -1.5, 1.0
 def _xy_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(x, y): x = (value - mean)/std with mean/std rounded to 6dp (both
     engines see the identical double), y = 1.0 for purchase events."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     stats = ev.agg(
         (F.round(F.avg("value") + F.lit(1e-9), 6) + F.lit(0.0)).alias("m"),
         (
@@ -273,7 +273,7 @@ def mutual_info(ev: DataFrame) -> DataFrame:
 
 
 def _q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return mutual_info(_t(spark, sf_dir, "events"))
+    return mutual_info(read_table(spark, sf_dir, "events"))
 
 
 _MI_SQL = """
@@ -442,7 +442,7 @@ def nb_classify(docs: DataFrame) -> DataFrame:
 
 
 def _q_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return nb_classify(_t(spark, sf_dir, "documents"))
+    return nb_classify(read_table(spark, sf_dir, "documents"))
 
 
 def _nb_sql() -> str:
@@ -601,7 +601,7 @@ def poisson_glm(ev: DataFrame, iters: int = POIS_ITERS) -> DataFrame:
 
 
 def _q_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return poisson_glm(_t(spark, sf_dir, "events"))
+    return poisson_glm(read_table(spark, sf_dir, "events"))
 
 
 def _poisson_sql(iters: int = POIS_ITERS) -> str:
@@ -717,7 +717,7 @@ def bigram_perplexity(docs: DataFrame) -> DataFrame:
 
 
 def _q_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bigram_perplexity(_t(spark, sf_dir, "documents"))
+    return bigram_perplexity(read_table(spark, sf_dir, "documents"))
 
 
 def _ppl_sql() -> str:
@@ -780,7 +780,7 @@ def _hazard_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     censored at the horizon — included as all-zero rows, exactly the
     likelihood discrete-time survival analysis needs (Allison 1982);
     fitting a logistic model on this table IS survival regression."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     day = (F.floor(F.unix_timestamp("ts") / 86400).cast("bigint") - F.lit(19723))
     fp = (
         ev.filter(F.col("event_type") == "purchase")

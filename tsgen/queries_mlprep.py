@@ -37,8 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import expr as E
+from .io import read_table
 from .queries import _REGISTRY, Query, round6
-from .queries_analytics import _t
 
 SPLIT_SALT = 52127
 JW_THRESHOLD = 0.88
@@ -55,7 +55,7 @@ def _split_expr(col: str = "doc_id") -> str:
 
 
 def _q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     tot = docs.agg(F.count("*").alias("n_total"))
     out = (
         docs.withColumn("split", F.expr(_split_expr()))
@@ -252,7 +252,7 @@ SELECT key_a, key_b, jw FROM scored WHERE jw > {E.NUM(threshold)}
 
 
 def _q_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return name_match_jw(_t(spark, sf_dir, "part"))
+    return name_match_jw(read_table(spark, sf_dir, "part"))
 
 
 _JW_SQL = f"""
@@ -297,7 +297,7 @@ def doc_woe(docs: DataFrame, bin_w: int = WOE_BIN_W, bin_max: int = WOE_BIN_MAX)
 
 
 def _q_doc_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(doc_woe(_t(spark, sf_dir, "documents")), "woe", "iv_term")
+    return round6(doc_woe(read_table(spark, sf_dir, "documents")), "woe", "iv_term")
 
 
 _WOE_SQL = f"""
@@ -352,7 +352,7 @@ def dedup_incremental(corpus: DataFrame, batch: DataFrame) -> DataFrame:
 
 
 def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return dedup_incremental(
         docs.filter(F.col("doc_id") % 2 == 0), docs.filter(F.col("doc_id") % 2 == 1)
     )
@@ -426,7 +426,7 @@ def ann_rrf(emb: DataFrame, n_queries: int = RRF_NQ, k: int = RRF_TOPK) -> DataF
 
 
 def _q_ann_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(ann_rrf(_t(spark, sf_dir, "embeddings")), "rrf")
+    return round6(ann_rrf(read_table(spark, sf_dir, "embeddings")), "rrf")
 
 
 _RRF_SQL = f"""
@@ -574,10 +574,8 @@ def gbm_stumps(ev: DataFrame, lr: float = GBM_LR, rounds: int = GBM_ROUNDS) -> D
 
 
 def _q_gbm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .queries_analytics import _events
-
     return round6(
-        gbm_stumps(_events(spark, sf_dir)),
+        gbm_stumps(read_table(spark, sf_dir, "events")),
         "gain", "left_val", "right_val", "rmse_after",
     )
 
@@ -654,7 +652,7 @@ def _q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = round6(
         dedup.jaccard_pairs(
-            _t(spark, sf_dir, "documents"), ["lang"], threshold=CLUSTER_THR
+            read_table(spark, sf_dir, "documents"), ["lang"], threshold=CLUSTER_THR
         ),
         "jaccard",
     )
@@ -710,7 +708,7 @@ _REGISTRY.update(
         "name_match_jw": Query("name_match_jw", _q_name_match, _JW_SQL, ("pipeline",)),
         "name_match_snm": Query(
             "name_match_snm",
-            lambda spark, sf_dir: name_match_snm(_t(spark, sf_dir, "part")),
+            lambda spark, sf_dir: name_match_snm(read_table(spark, sf_dir, "part")),
             name_match_snm_sql(),
             ("pipeline", "entity"),
         ),
@@ -739,7 +737,7 @@ def _q_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from . import dedup
 
-    pairs = name_match_snm(_t(spark, sf_dir, "part")).select(
+    pairs = name_match_snm(read_table(spark, sf_dir, "part")).select(
         F.col("key_a").alias("doc_a"), F.col("key_b").alias("doc_b")
     )
     lab = dedup.connected_components(pairs)

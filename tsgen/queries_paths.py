@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import dedup
+from .io import read_table
 from .queries import _REGISTRY, Query, canon_types, round6, roundn
-from .queries_analytics import _events, _t
 
 
 # --- ev_transitions: Markov transition matrix ------------------------------
@@ -55,7 +55,7 @@ def event_transitions(ev: DataFrame) -> DataFrame:
 
 
 def _q_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = event_transitions(_events(spark, sf_dir))
+    out = event_transitions(read_table(spark, sf_dir, "events"))
     return round6(out.select("prev_type", "next_type", "n", "p"), "p")
 
 
@@ -99,7 +99,7 @@ def transition_entropy(ev: DataFrame) -> DataFrame:
 
 
 def _q_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(transition_entropy(_events(spark, sf_dir)), "h_cond", "entropy_rate")
+    return round6(transition_entropy(read_table(spark, sf_dir, "events")), "h_cond", "entropy_rate")
 
 
 _TRANSITION_ENTROPY_SQL = """
@@ -143,7 +143,7 @@ def user_paths(ev: DataFrame, k: int = 3) -> DataFrame:
 
 
 def _q_user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return canon_types(user_paths(_events(spark, sf_dir), k=3))
+    return canon_types(user_paths(read_table(spark, sf_dir, "events"), k=3))
 
 
 _USER_PATHS_SQL = """
@@ -178,7 +178,7 @@ def autocorr(ev: DataFrame, lags: tuple[int, ...] = (1, 2, 3)) -> DataFrame:
 
 
 def _q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = autocorr(_events(spark, sf_dir))
+    out = autocorr(read_table(spark, sf_dir, "events"))
     # corr is a ratio of large centered sums — 4dp (see queries.roundn)
     return roundn(out, 4, "acf1", "acf2", "acf3")
 
@@ -233,7 +233,7 @@ def cusum(ev: DataFrame) -> DataFrame:
 
 
 def _q_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return cusum(_events(spark, sf_dir))
+    return cusum(read_table(spark, sf_dir, "events"))
 
 
 _CUSUM_SQL = """
@@ -295,7 +295,7 @@ def contamination(docs: DataFrame, k: int = 3) -> DataFrame:
 
 
 def _q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = contamination(_t(spark, sf_dir, "documents"))
+    out = contamination(read_table(spark, sf_dir, "documents"))
     return canon_types(round6(out, "ratio"))
 
 
@@ -343,7 +343,7 @@ def streaks(ev: DataFrame) -> DataFrame:
 
 
 def _q_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return canon_types(streaks(_events(spark, sf_dir)))
+    return canon_types(streaks(read_table(spark, sf_dir, "events")))
 
 
 _STREAKS_SQL = """
@@ -386,7 +386,7 @@ def delta_stats(ev: DataFrame) -> DataFrame:
 
 
 def _q_delta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = delta_stats(_events(spark, sf_dir))
+    out = delta_stats(read_table(spark, sf_dir, "events"))
     return canon_types(roundn(out, 4, "avg_dt", "sd_dt", "avg_abs_dv", "dod_zero_frac"))
 
 
@@ -446,7 +446,7 @@ def wau(ev: DataFrame, window_days: int = 7) -> DataFrame:
 
 
 def _q_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return canon_types(round6(wau(_events(spark, sf_dir)), "stickiness"))
+    return canon_types(round6(wau(read_table(spark, sf_dir, "events")), "stickiness"))
 
 
 _WAU_SQL = """
@@ -503,7 +503,7 @@ def outliers_mad(ev: DataFrame) -> DataFrame:
 
 
 def _q_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = outliers_mad(_events(spark, sf_dir))
+    out = outliers_mad(read_table(spark, sf_dir, "events"))
     return canon_types(roundn(out, 4, "med", "mad"))
 
 
@@ -563,7 +563,7 @@ def crosscorr(ev: DataFrame, lags: tuple[int, ...] = XCORR_LAGS) -> DataFrame:
 
 
 def _q_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return roundn(crosscorr(_events(spark, sf_dir)), 4, "xcorr")
+    return roundn(crosscorr(read_table(spark, sf_dir, "events")), 4, "xcorr")
 
 
 _CROSSCORR_SQL = f"""
@@ -646,7 +646,7 @@ def path_ngrams(ev: DataFrame, topk: int = PATH_NGRAM_TOPK) -> DataFrame:
 
 
 def _q_path_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return path_ngrams(_events(spark, sf_dir))
+    return path_ngrams(read_table(spark, sf_dir, "events"))
 
 
 _PATH_NGRAMS_SQL = f"""
@@ -728,7 +728,7 @@ def markov_stationary(ev: DataFrame, iters: int = STAT_ITERS) -> DataFrame:
 
 
 def _q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return markov_stationary(_events(spark, sf_dir))
+    return markov_stationary(read_table(spark, sf_dir, "events"))
 
 
 def _markov_stationary_sql(iters: int = STAT_ITERS) -> str:

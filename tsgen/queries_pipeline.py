@@ -2,60 +2,35 @@
 similarity search, multimodal) over documents/embeddings tables."""
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from . import dedup, mixing, multimodal, similarity, text
+from .io import read_table
 from .queries import _REGISTRY, Query, round6, roundn
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The test file is a single row-group → ONE input split, which serializes
-    # the whole shingle/token pipeline onto one core (observed: every dedup
-    # stage ran as 0+1/1). io.fanout_scan fans the scan out when the layout
-    # is too coarse; never fires on a real multi-file dataset.
-    from .io import fanout_scan
-
-    return fanout_scan(spark, f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan a too-coarse scan out so the per-row HOF math (dot products,
-    # argmin folds) runs data-parallel — see io.fanout_scan
-    from .io import fanout_scan
-
-    return fanout_scan(spark, f"{sf_dir}/embeddings.parquet")
-
-
-def _emb_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NO fan-out: for aggregation-only embedding queries (gram sufficient
-    # stats, eigen power iterations) the repartition exchange + 32-task
-    # stages measured ~2x SLOWER than the serial scan at this input size
-    # (isolated min-of-3: embed_abtt 0.9→1.9 s, embed_pca_power 0.7→1.5 s)
-    # — there is no narrow per-row heavy math for the fan-out to
-    # parallelize, only partial-aggregated sums
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 # --- text analysis --------------------------------------------------------
 def _q_text_stats(spark, sf_dir):
-    out = text.text_stats(_docs(spark, sf_dir))
+    out = text.text_stats(read_table(spark, sf_dir, "documents", fanout=True))
     return round6(out, "distinct_ratio", "avg_token_len", "stopword_ratio")
 
 
 def _q_doc_entropy(spark, sf_dir):
     from .queries import canon_types
 
-    return canon_types(round6(text.doc_entropy(_docs(spark, sf_dir)), "entropy", "norm_entropy"))
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return canon_types(round6(text.doc_entropy(docs), "entropy", "norm_entropy"))
 
 
 def _q_embed_pca(spark, sf_dir):
-    return similarity.pca_variance(_emb(spark, sf_dir))
+    return similarity.pca_variance(read_table(spark, sf_dir, "embeddings", fanout=True))
 
 
 def _q_lm_score(spark, sf_dir):
     from .queries import canon_types, roundn
 
-    return canon_types(roundn(text.lm_score(_docs(spark, sf_dir)), 4, "lm_score"))
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return canon_types(roundn(text.lm_score(docs), 4, "lm_score"))
 
 
 FILTER_DROP_PCTS = (0, 10, 25, 50)
@@ -81,7 +56,7 @@ def _q_filter_frontier(spark, sf_dir):
 
     from .queries_scale import stratified_rank
 
-    scored = text.lm_score(_docs(spark, sf_dir)).select(
+    scored = text.lm_score(read_table(spark, sf_dir, "documents", fanout=True)).select(
         "doc_id",
         "n_tokens",
         (F.round(F.col("lm_score") + F.lit(1e-9), 4) + F.lit(0.0)).alias("s4"),
@@ -142,15 +117,14 @@ GROUP BY g.drop_pct ORDER BY drop_pct
 def _q_bigram_lm(spark, sf_dir):
     from .queries import canon_types, roundn
 
-    return canon_types(
-        roundn(text.bigram_lm_score(_docs(spark, sf_dir)), 4, "bigram_lm_score")
-    )
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return canon_types(roundn(text.bigram_lm_score(docs), 4, "bigram_lm_score"))
 
 
 def _q_source_mixture(spark, sf_dir):
     from .queries import canon_types, round6 as r6
 
-    out = mixing.mixture_summary(_docs(spark, sf_dir))
+    out = mixing.mixture_summary(read_table(spark, sf_dir, "documents", fanout=True))
     return canon_types(r6(out, "keep_rate", "doc_share", "char_share"))
 
 
@@ -161,47 +135,49 @@ def _q_mix_doremi(spark, sf_dir):
     # runs on the k-domain table via single-partition window sums.
     from .queries import canon_types
 
-    return canon_types(mixing.doremi_weights(_docs(spark, sf_dir)))
+    return canon_types(mixing.doremi_weights(read_table(spark, sf_dir, "documents", fanout=True)))
 
 
 def _q_lang_id(spark, sf_dir):
-    return round6(text.lang_id(_docs(spark, sf_dir)), "en_score", "es_score")
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return round6(text.lang_id(docs), "en_score", "es_score")
 
 
 def _q_fingerprint(spark, sf_dir):
-    return text.fingerprint(_docs(spark, sf_dir)).select("doc_id", "fingerprint")
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return text.fingerprint(docs).select("doc_id", "fingerprint")
 
 
 def _q_token_freq(spark, sf_dir):
-    return text.token_freq(_docs(spark, sf_dir), top_n=20)
+    return text.token_freq(read_table(spark, sf_dir, "documents", fanout=True), top_n=20)
 
 
 def _q_feature_hash(spark, sf_dir):
-    return text.feature_hash(_docs(spark, sf_dir))
+    return text.feature_hash(read_table(spark, sf_dir, "documents", fanout=True))
 
 
 def _q_readability(spark, sf_dir):
-    return round6(
-        text.readability(_docs(spark, sf_dir)), "flesch_ease", "fk_grade"
-    )
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return round6(text.readability(docs), "flesch_ease", "fk_grade")
 
 
 def _q_token_bpe(spark, sf_dir):
-    return round6(text.token_count_bpe(_docs(spark, sf_dir)), "bpe_per_word")
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return round6(text.token_count_bpe(docs), "bpe_per_word")
 
 
 def _q_winnow(spark, sf_dir):
-    return text.winnow_fingerprints(_docs(spark, sf_dir))
+    return text.winnow_fingerprints(read_table(spark, sf_dir, "documents", fanout=True))
 
 
 def _q_repetition(spark, sf_dir):
-    out = text.repetition_stats(_docs(spark, sf_dir))
+    out = text.repetition_stats(read_table(spark, sf_dir, "documents", fanout=True))
     return round6(out, "top_token_frac", "top_bigram_frac", "mean_token_len")
 
 
 # --- dedup ----------------------------------------------------------------
 def _q_dedup_exact(spark, sf_dir):
-    out = dedup.exact_dedup(_docs(spark, sf_dir))
+    out = dedup.exact_dedup(read_table(spark, sf_dir, "documents", fanout=True))
     return out.select("doc_id", "fingerprint", "is_dup")
 
 
@@ -215,42 +191,45 @@ SELECT doc_id, fingerprint, (rn > 1) AS is_dup FROM (
 
 
 def _q_jaccard(spark, sf_dir):
-    out = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang", "source"], threshold=0.01)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    out = dedup.jaccard_pairs(docs, ["lang", "source"], threshold=0.01)
     return round6(out, "jaccard")
 
 
 def _q_prefix_jaccard(spark, sf_dir):
-    return round6(dedup.prefix_jaccard(_docs(spark, sf_dir)), "jac")
+    return round6(dedup.prefix_jaccard(read_table(spark, sf_dir, "documents", fanout=True)), "jac")
 
 
 def _q_containment(spark, sf_dir):
-    out = dedup.jaccard_pairs(
-        _docs(spark, sf_dir), ["lang", "source"], threshold=0.01, containment=True
-    )
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    out = dedup.jaccard_pairs(docs, ["lang", "source"], threshold=0.01, containment=True)
     return round6(out, "jaccard", "containment")
 
 
 def _q_minhash(spark, sf_dir):
     # xxhash64-based → engine-specific → rows-only; recall asserted in tests
-    out = dedup.minhash_lsh_pairs(_docs(spark, sf_dir), verify_threshold=0.05)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    out = dedup.minhash_lsh_pairs(docs, verify_threshold=0.05)
     return round6(out, "jaccard")
 
 
 def _q_minhash_portable(spark, sf_dir):
-    return dedup.minhash_portable_pairs(_docs(spark, sf_dir), verify_threshold=0.05)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return dedup.minhash_portable_pairs(docs, verify_threshold=0.05)
 
 
 def _q_simhash_portable(spark, sf_dir):
-    sim = dedup.simhash_portable(_docs(spark, sf_dir))
+    sim = dedup.simhash_portable(read_table(spark, sf_dir, "documents", fanout=True))
     return dedup.hamming_pairs(sim, max_dist=20)
 
 
 def _q_simhash(spark, sf_dir):
-    return dedup.simhash(_docs(spark, sf_dir)).select("doc_id", "simhash")
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return dedup.simhash(docs).select("doc_id", "simhash")
 
 
 def _q_simhash_pairs(spark, sf_dir):
-    sim = dedup.simhash(_docs(spark, sf_dir))
+    sim = dedup.simhash(read_table(spark, sf_dir, "documents", fanout=True))
     return dedup.hamming_pairs(sim, max_dist=20)
 
 
@@ -259,29 +238,31 @@ N_QUERIES = 10
 
 
 def _q_cosine_topk(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings", fanout=True)
     out = similarity.brute_force_topk(emb, emb.filter(F.col("vec_id") < N_QUERIES), k=5)
     return round6(out, "cos_sim")
 
 
 def _q_mmr(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings", fanout=True)
     return similarity.mmr_rerank(emb, emb.filter(F.col("vec_id") < N_QUERIES))
 
 
 def _q_neardup(spark, sf_dir):
-    out = similarity.neardup_pairs(_emb(spark, sf_dir), threshold=0.25)
+    emb = read_table(spark, sf_dir, "embeddings", fanout=True)
+    out = similarity.neardup_pairs(emb, threshold=0.25)
     return round6(out, "cos_sim")
 
 
 def _q_ann_ivf(spark, sf_dir):
     # ANN path: recall-vs-brute-force asserted in tests; rows-only here
-    out = similarity.ivf_topk(_emb(spark, sf_dir), N_QUERIES, k=5)
+    out = similarity.ivf_topk(read_table(spark, sf_dir, "embeddings", fanout=True), N_QUERIES, k=5)
     return round6(out, "cos_sim")
 
 
 def _q_ann_ivf_recall(spark, sf_dir):
-    return similarity.ivf_recall(_emb(spark, sf_dir), N_QUERIES, k=5)
+    emb = read_table(spark, sf_dir, "embeddings", fanout=True)
+    return similarity.ivf_recall(emb, N_QUERIES, k=5)
 
 
 # --- multimodal (P6 PPM decoded for real; compressed formats stubbed —
@@ -289,7 +270,7 @@ def _q_ann_ivf_recall(spark, sf_dir):
 def _q_multimodal(spark, sf_dir):
     from .queries import canon_types
 
-    media = multimodal.as_media_table(_docs(spark, sf_dir))
+    media = multimodal.as_media_table(read_table(spark, sf_dir, "documents", fanout=True))
     return canon_types(multimodal.extract_features(media))
 
 
@@ -325,7 +306,7 @@ def _q_multimodal_decode(spark, sf_dir):
     # value-checking the whole render -> parse -> stats pipeline.
     from .queries import canon_types
 
-    media = multimodal.synth_ppm_media(_docs(spark, sf_dir))
+    media = multimodal.synth_ppm_media(read_table(spark, sf_dir, "documents", fanout=True))
     return canon_types(multimodal.image_stats(media))
 
 
@@ -339,7 +320,7 @@ def _q_multimodal_decode_png(spark, sf_dir):
     # the value match.
     from .queries import canon_types
 
-    media = multimodal.synth_png_media(_docs(spark, sf_dir))
+    media = multimodal.synth_png_media(read_table(spark, sf_dir, "documents", fanout=True))
     return canon_types(multimodal.image_stats(media, decoder=multimodal.decode_png))
 
 
@@ -352,7 +333,7 @@ def _q_multimodal_decode_jpeg(spark, sf_dir):
     # pixel stats the oracle integrates from the closed-form block spec.
     from .queries import canon_types
 
-    media = multimodal.synth_jpeg_media(_docs(spark, sf_dir))
+    media = multimodal.synth_jpeg_media(read_table(spark, sf_dir, "documents", fanout=True))
     return canon_types(multimodal.jpeg_stats(media))
 
 
@@ -364,7 +345,7 @@ def _q_multimodal_decode_jpeg_ac(spark, sf_dir):
     # EOB, negative-magnitude and DC-prediction bugs all break the match.
     from .queries import canon_types
 
-    media = multimodal.synth_jpeg_planted_media(_docs(spark, sf_dir))
+    media = multimodal.synth_jpeg_planted_media(read_table(spark, sf_dir, "documents", fanout=True))
     return canon_types(multimodal.jpeg_coeff_stats(media))
 
 
@@ -390,7 +371,7 @@ def _q_media_cross_codec_dedup(spark, sf_dir):
     # pairs — only the two decoders agreeing on pixels can.
     from .queries import canon_types
 
-    media = multimodal.synth_cross_codec_media(_docs(spark, sf_dir))
+    media = multimodal.synth_cross_codec_media(read_table(spark, sf_dir, "documents", fanout=True))
     return canon_types(multimodal.cross_codec_dedup(media))
 
 
@@ -401,7 +382,7 @@ def _q_multimodal_decode_wav(spark, sf_dir):
     # stats; the oracle integrates the closed-form sample spec directly.
     from .queries import canon_types
 
-    media = multimodal.synth_wav_media(_docs(spark, sf_dir))
+    media = multimodal.synth_wav_media(read_table(spark, sf_dir, "documents", fanout=True))
     return canon_types(multimodal.audio_stats(media))
 
 
@@ -412,7 +393,7 @@ def _q_multimodal_decode_y4m(spark, sf_dir):
     # and integrates the per-frame ramps.
     from .queries import canon_types
 
-    media = multimodal.synth_y4m_media(_docs(spark, sf_dir))
+    media = multimodal.synth_y4m_media(read_table(spark, sf_dir, "documents", fanout=True))
     return canon_types(multimodal.video_frame_stats(media))
 
 
@@ -440,7 +421,7 @@ def _q_video_frame_neardup(spark, sf_dir):
     # recomputes signatures from the closed-form Y ramps.
     from .queries import canon_types
 
-    media = multimodal.synth_y4m_media(_docs(spark, sf_dir))
+    media = multimodal.synth_y4m_media(read_table(spark, sf_dir, "documents", fanout=True))
     return canon_types(multimodal.video_neardup_profile(media))
 
 
@@ -448,41 +429,45 @@ def _q_multimodal_phash(spark, sf_dir):
     # perceptual-hash near-dup pairs over stub-decoded thumbnails; the
     # aHash bit test is an exact integer inequality (no float pooling), so
     # the whole pipeline is DuckDB-replayable (multimodal.phash_pairs_sql)
-    media = multimodal.as_media_table(_docs(spark, sf_dir))
+    media = multimodal.as_media_table(read_table(spark, sf_dir, "documents", fanout=True))
     return multimodal.phash_pairs(media)
 
 
 def _q_tfidf(spark, sf_dir):
     from .queries import round6 as _r
 
-    return _r(text.tfidf_top_terms(_docs(spark, sf_dir), top_n=3), "tfidf")
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return _r(text.tfidf_top_terms(docs, top_n=3), "tfidf")
 
 
 # --- chunking / packing / quantization (pretraining preproc) --------------
 def _q_doc_chunks(spark, sf_dir):
-    return text.doc_chunks(_docs(spark, sf_dir))
+    return text.doc_chunks(read_table(spark, sf_dir, "documents", fanout=True))
 
 
 def _q_pack_sequences(spark, sf_dir):
-    return round6(text.pack_sequences(_docs(spark, sf_dir)), "fill_ratio")
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return round6(text.pack_sequences(docs), "fill_ratio")
 
 
 def _q_pack_sequences_ffd(spark, sf_dir):
-    return text.pack_sequences_ffd(_docs(spark, sf_dir))
+    return text.pack_sequences_ffd(read_table(spark, sf_dir, "documents", fanout=True))
 
 
 def _q_ann_lsh(spark, sf_dir):
-    return round6(similarity.lsh_pairs(_emb(spark, sf_dir)), "cos_sim")
+    emb = read_table(spark, sf_dir, "embeddings", fanout=True)
+    return round6(similarity.lsh_pairs(emb), "cos_sim")
 
 
 def _q_trunc_recall(spark, sf_dir):
-    return similarity.trunc_recall(_emb(spark, sf_dir), n_queries=N_QUERIES)
+    emb = read_table(spark, sf_dir, "embeddings", fanout=True)
+    return similarity.trunc_recall(emb, n_queries=N_QUERIES)
 
 
 def _q_embed_top_eigen(spark, sf_dir):
     from .queries import roundn
 
-    out = similarity.top_eigen(_emb(spark, sf_dir))
+    out = similarity.top_eigen(read_table(spark, sf_dir, "embeddings", fanout=True))
     return roundn(out, 4, "top_eigenvalue", "explained_share", "trace")
 
 
@@ -491,21 +476,22 @@ def _q_embed_pq(spark, sf_dir):
     # recall + Lloyd-monotonicity asserted in tests
     from .queries import canon_types, roundn
 
-    out = similarity.pq_summary(_emb(spark, sf_dir))
+    out = similarity.pq_summary(read_table(spark, sf_dir, "embeddings", fanout=True))
     return canon_types(roundn(out.drop("codes"), 4, "recon_err"))
 
 
 def _q_embed_quantize(spark, sf_dir):
     from .queries import roundn
 
+    emb = read_table(spark, sf_dir, "embeddings", fanout=True)
     return roundn(
-        similarity.quantize_int8(_emb(spark, sf_dir)), 9, "scale", "recon_mse"
+        similarity.quantize_int8(emb), 9, "scale", "recon_mse"
     )
 
 
 # --- multimodal frame sampling (oracle via ASCII string slicing) ----------
 def _q_multimodal_frames(spark, sf_dir):
-    media = multimodal.as_media_table(_docs(spark, sf_dir))
+    media = multimodal.as_media_table(read_table(spark, sf_dir, "documents", fanout=True))
     return multimodal.frame_sample(media)
 
 
@@ -541,7 +527,8 @@ CLUSTER_THR = 0.02
 def _q_dedup_clusters(spark, sf_dir):
     from pyspark.sql import Window
 
-    pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    pairs = dedup.jaccard_pairs(docs, ["lang"], threshold=CLUSTER_THR)
     lab = dedup.connected_components(pairs.select("doc_a", "doc_b"))
     w = Window.partitionBy("cluster_id")
     return (
@@ -579,8 +566,12 @@ FROM lab
 def _q_dedup_keep_best(spark, sf_dir):
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir).select("doc_id", F.length("text").alias("doc_len"))
-    pairs = dedup.jaccard_pairs(_docs(spark, sf_dir), ["lang"], threshold=CLUSTER_THR)
+    docs = read_table(spark, sf_dir, "documents", fanout=True).select(
+        "doc_id", F.length("text").alias("doc_len")
+    )
+    pairs = dedup.jaccard_pairs(
+        read_table(spark, sf_dir, "documents", fanout=True), ["lang"], threshold=CLUSTER_THR
+    )
     lab = dedup.connected_components(pairs.select("doc_a", "doc_b")).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
@@ -645,7 +636,7 @@ def _q_dsir_scores(spark, sf_dir):
     from .queries import roundn
     from .sketches import _hash48, _spark_hexparse
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
     toks = docs.select(
         "doc_id",
         F.col("lang"),
@@ -719,7 +710,7 @@ CUR_MIN_TOKENS, CUR_MAX_TOKENS, CUR_MIN_DISTINCT = 8, 5000, 0.3
 def _q_corpus_curation(spark, sf_dir):
     from pyspark.sql import Window
 
-    docs = text.fingerprint(_docs(spark, sf_dir))
+    docs = text.fingerprint(read_table(spark, sf_dir, "documents", fanout=True))
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     en_hits = F.expr(
@@ -794,7 +785,8 @@ SEM_THR = 0.3
 def _q_semdedup(spark, sf_dir):
     from pyspark.sql import Window
 
-    pairs = similarity.lsh_pairs(_emb(spark, sf_dir), threshold=SEM_THR)
+    emb = read_table(spark, sf_dir, "embeddings", fanout=True)
+    pairs = similarity.lsh_pairs(emb, threshold=SEM_THR)
     lab = dedup.connected_components(pairs, a="id_a", b="id_b")
     w = Window.partitionBy("cluster_id")
     return (
@@ -825,18 +817,20 @@ FROM lab
 
 # --- exact-substring dup coverage (Lee et al. dedup signal) ---------------
 def _q_dup_ngram_coverage(spark, sf_dir):
-    return round6(text.dup_ngram_coverage(_docs(spark, sf_dir)), "dup_frac")
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return round6(text.dup_ngram_coverage(docs), "dup_frac")
 
 
 # --- tokenizer induction / dataset split ----------------------------------
 def _q_bpe_merge(spark, sf_dir):
-    return text.bpe_merge_candidates(_docs(spark, sf_dir))
+    return text.bpe_merge_candidates(read_table(spark, sf_dir, "documents", fanout=True))
 
 
 def _q_doc_split(spark, sf_dir):
     from .queries import roundn
 
-    return roundn(text.doc_split(_docs(spark, sf_dir)), 4, "avg_chars")
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return roundn(text.doc_split(docs), 4, "avg_chars")
 
 
 _REGISTRY.update(
@@ -857,7 +851,7 @@ _REGISTRY.update(
         "doc_entropy": Query("doc_entropy", _q_doc_entropy, text.ENTROPY_SQL, ("text",)),
         "doc_keyphrases": Query(
             "doc_keyphrases",
-            lambda spark, sf_dir: text.rake_keyphrases(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: text.rake_keyphrases(read_table(spark, sf_dir, "documents", fanout=True)),
             text.rake_sql(),
             ("text",),
         ),
@@ -870,7 +864,7 @@ _REGISTRY.update(
         ),
         "doc_ccnet_buckets": Query(
             "doc_ccnet_buckets",
-            lambda spark, sf_dir: text.ccnet_buckets(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: text.ccnet_buckets(read_table(spark, sf_dir, "documents", fanout=True)),
             text.CCNET_BUCKETS_SQL,
             ("text", "llm"),
         ),
@@ -889,7 +883,7 @@ _REGISTRY.update(
         "token_freq": Query("token_freq", _q_token_freq, text.token_freq_sql(20), ("text",)),
         "token_ppmi": Query(
             "token_ppmi",
-            lambda spark, sf_dir: text.token_ppmi(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: text.token_ppmi(read_table(spark, sf_dir, "documents", fanout=True)),
             text.token_ppmi_sql(),
             ("text",),
         ),
@@ -904,7 +898,7 @@ _REGISTRY.update(
         ),
         "doc_gopher_quality": Query(
             "doc_gopher_quality",
-            lambda spark, sf_dir: text.gopher_quality(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: text.gopher_quality(read_table(spark, sf_dir, "documents", fanout=True)),
             text.GOPHER_SQL,
             ("text", "llm"),
         ),
@@ -914,7 +908,7 @@ _REGISTRY.update(
         "doc_winnow": Query("doc_winnow", _q_winnow, text.WINNOW_SQL, ("text",)),
         "winnow_overlap": Query(
             "winnow_overlap",
-            lambda spark, sf_dir: text.winnow_overlap_pairs(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: text.winnow_overlap_pairs(read_table(spark, sf_dir, "documents", fanout=True)),
             text.winnow_pairs_sql(),
             ("text", "dedup"),
         ),
@@ -937,7 +931,7 @@ _REGISTRY.update(
         ),
         "pack_budget_frontier": Query(
             "pack_budget_frontier",
-            lambda spark, sf_dir: text.pack_budget_frontier(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: text.pack_budget_frontier(read_table(spark, sf_dir, "documents", fanout=True)),
             text.pack_budget_frontier_sql(),
             ("text", "eval"),
         ),
@@ -958,7 +952,7 @@ _REGISTRY.update(
         ),
         "doc_lsh_recall": Query(
             "doc_lsh_recall",
-            lambda spark, sf_dir: dedup.lsh_recall_eval(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: dedup.lsh_recall_eval(read_table(spark, sf_dir, "documents", fanout=True)),
             dedup.lsh_recall_eval_sql(),
             ("dedup", "eval"),
         ),
@@ -1078,14 +1072,15 @@ _REGISTRY.update(
         ),
         "embed_map_at_k": Query(
             "embed_map_at_k",
-            lambda spark, sf_dir: similarity.map_at_k(_emb(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.map_at_k(read_table(spark, sf_dir, "embeddings", fanout=True)),
             similarity.map_at_k_sql(),
             ("similarity", "eval"),
         ),
         "embed_pca_power": Query(
             "embed_pca_power",
             lambda spark, sf_dir: roundn(
-                similarity.pca_power(_emb_plain(spark, sf_dir)), 4, "eigenvalue", "cum_explained"
+                similarity.pca_power(read_table(spark, sf_dir, "embeddings")),
+                4, "eigenvalue", "cum_explained",
             ),
             similarity.pca_power_sql(),
             ("similarity",),
@@ -1098,73 +1093,73 @@ _REGISTRY.update(
         ),
         "embed_abtt": Query(
             "embed_abtt",
-            lambda spark, sf_dir: similarity.abtt_postprocess(_emb_plain(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.abtt_postprocess(read_table(spark, sf_dir, "embeddings")),
             similarity.abtt_sql(),
             ("similarity", "llm"),
         ),
         "embed_abtt_recall": Query(
             "embed_abtt_recall",
-            lambda spark, sf_dir: similarity.abtt_recall(_emb_plain(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.abtt_recall(read_table(spark, sf_dir, "embeddings")),
             similarity.abtt_recall_sql(),
             ("similarity", "llm", "eval"),
         ),
         "ann_pq_recall": Query(
             "ann_pq_recall",
-            lambda spark, sf_dir: similarity.pq_recall(_emb(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.pq_recall(read_table(spark, sf_dir, "embeddings", fanout=True)),
             similarity.pq_recall_sql(),
             ("similarity", "eval"),
         ),
         "ann_ivfpq_recall": Query(
             "ann_ivfpq_recall",
-            lambda spark, sf_dir: similarity.ivfpq_recall(_emb(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.ivfpq_recall(read_table(spark, sf_dir, "embeddings", fanout=True)),
             similarity.ivfpq_recall_sql(),
             ("similarity", "eval"),
         ),
         "ann_rerank_frontier": Query(
             "ann_rerank_frontier",
-            lambda spark, sf_dir: similarity.rerank_frontier(_emb(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.rerank_frontier(read_table(spark, sf_dir, "embeddings", fanout=True)),
             similarity.rerank_frontier_sql(),
             ("similarity", "eval"),
         ),
         "ann_int8_recall": Query(
             "ann_int8_recall",
-            lambda spark, sf_dir: similarity.int8_recall(_emb(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.int8_recall(read_table(spark, sf_dir, "embeddings", fanout=True)),
             similarity.int8_recall_sql(),
             ("similarity", "eval"),
         ),
         "ann_ivf_frontier": Query(
             "ann_ivf_frontier",
-            lambda spark, sf_dir: similarity.ivf_probe_frontier(_emb(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.ivf_probe_frontier(read_table(spark, sf_dir, "embeddings", fanout=True)),
             similarity.ivf_probe_frontier_sql(),
             ("similarity", "eval"),
         ),
         "embed_hard_negatives": Query(
             "embed_hard_negatives",
-            lambda spark, sf_dir: similarity.hard_negatives(_emb(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.hard_negatives(read_table(spark, sf_dir, "embeddings", fanout=True)),
             similarity.hard_negatives_sql(),
             ("similarity", "llm"),
         ),
         "doc_lang_rebalance": Query(
             "doc_lang_rebalance",
-            lambda spark, sf_dir: mixing.lang_rebalance(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: mixing.lang_rebalance(read_table(spark, sf_dir, "documents", fanout=True)),
             mixing.lang_rebalance_sql(),
             ("pipeline", "mixing"),
         ),
         "doc_lang_temperature": Query(
             "doc_lang_temperature",
-            lambda spark, sf_dir: mixing.lang_temperature_mix(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: mixing.lang_temperature_mix(read_table(spark, sf_dir, "documents", fanout=True)),
             mixing.lang_temperature_sql(),
             ("pipeline", "mixing"),
         ),
         "embed_cluster_purity": Query(
             "embed_cluster_purity",
-            lambda spark, sf_dir: similarity.cluster_purity(_emb(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.cluster_purity(read_table(spark, sf_dir, "embeddings", fanout=True)),
             similarity.cluster_purity_sql(),
             ("similarity", "eval"),
         ),
         "embed_kmeans": Query(
             "embed_kmeans",
-            lambda spark, sf_dir: similarity.kmeans_l2(_emb(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.kmeans_l2(read_table(spark, sf_dir, "embeddings", fanout=True)),
             similarity.kmeans_l2_sql(),
             ("similarity",),
         ),
@@ -1190,7 +1185,8 @@ def _plant_pii(docs: DataFrame) -> DataFrame:
 def _q_pii_scrub(spark, sf_dir):
     from .queries import canon_types
 
-    return canon_types(text.pii_scrub(_plant_pii(_docs(spark, sf_dir))))
+    docs = read_table(spark, sf_dir, "documents", fanout=True)
+    return canon_types(text.pii_scrub(_plant_pii(docs)))
 
 
 _PII_PLANTED_SQL = """
@@ -1219,7 +1215,7 @@ def _q_dup_by_source(spark, sf_dir):
     the bytes a dedup pass would reclaim — the targeting table for
     corpus curation (dedup effort goes where the duplication is). One
     fingerprint window + one groupBy."""
-    out = dedup.exact_dedup(_docs(spark, sf_dir))
+    out = dedup.exact_dedup(read_table(spark, sf_dir, "documents", fanout=True))
     g = out.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.col("is_dup").cast("int")).cast("bigint").alias("n_dups"),
@@ -1257,7 +1253,7 @@ _REGISTRY.update(
     {
         "doc_source_kl": Query(
             "doc_source_kl",
-            lambda spark, sf_dir: text.source_kl(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: text.source_kl(read_table(spark, sf_dir, "documents", fanout=True)),
             text.source_kl_sql(),
             ("text", "mixing"),
         ),
@@ -1279,19 +1275,19 @@ _REGISTRY.update(
     {
         "dedup_threshold_frontier": Query(
             "dedup_threshold_frontier",
-            lambda spark, sf_dir: dedup.dedup_threshold_frontier(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: dedup.dedup_threshold_frontier(read_table(spark, sf_dir, "documents", fanout=True)),
             dedup.dedup_threshold_frontier_sql(),
             ("dedup", "eval"),
         ),
         "minhash_band_frontier": Query(
             "minhash_band_frontier",
-            lambda spark, sf_dir: dedup.minhash_band_frontier(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: dedup.minhash_band_frontier(read_table(spark, sf_dir, "documents", fanout=True)),
             dedup.minhash_band_frontier_sql(),
             ("dedup", "eval"),
         ),
         "semdedup_eps_frontier": Query(
             "semdedup_eps_frontier",
-            lambda spark, sf_dir: similarity.semdedup_eps_frontier(_emb(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.semdedup_eps_frontier(read_table(spark, sf_dir, "embeddings", fanout=True)),
             similarity.semdedup_eps_frontier_sql(),
             ("dedup", "similarity", "eval"),
         ),
@@ -1325,7 +1321,7 @@ _REGISTRY.update(
 def _q_curation_funnel(spark, sf_dir):
     from pyspark.sql import Window
 
-    docs = text.fingerprint(_docs(spark, sf_dir))
+    docs = text.fingerprint(read_table(spark, sf_dir, "documents", fanout=True))
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     en_hits = F.expr(
@@ -1336,7 +1332,9 @@ def _q_curation_funnel(spark, sf_dir):
     )
     w = Window.partitionBy("fingerprint").orderBy("doc_id")
     neardup = (
-        dedup.prefix_jaccard(_docs(spark, sf_dir), threshold=dedup.PREFIX_T)
+        dedup.prefix_jaccard(
+            read_table(spark, sf_dir, "documents", fanout=True), threshold=dedup.PREFIX_T
+        )
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
         .withColumn("_nd", F.lit(True))
@@ -1461,13 +1459,13 @@ _REGISTRY.update(
     {
         "dedup_incremental_lsh": Query(
             "dedup_incremental_lsh",
-            lambda spark, sf_dir: dedup.dedup_incremental_lsh(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: dedup.dedup_incremental_lsh(read_table(spark, sf_dir, "documents", fanout=True)),
             dedup.dedup_incremental_lsh_sql(),
             ("dedup", "pipeline"),
         ),
         "ivf_cell_profile": Query(
             "ivf_cell_profile",
-            lambda spark, sf_dir: similarity.ivf_cell_profile(_emb(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.ivf_cell_profile(read_table(spark, sf_dir, "embeddings", fanout=True)),
             similarity.ivf_cell_profile_sql(),
             ("similarity", "eval"),
         ),
@@ -1480,13 +1478,13 @@ _REGISTRY.update(
     {
         "ann_dims_frontier": Query(
             "ann_dims_frontier",
-            lambda spark, sf_dir: similarity.dims_frontier(_emb(spark, sf_dir), n_queries=N_QUERIES),
+            lambda spark, sf_dir: similarity.dims_frontier(read_table(spark, sf_dir, "embeddings", fanout=True), n_queries=N_QUERIES),
             similarity.dims_frontier_sql(N_QUERIES),
             ("similarity", "eval"),
         ),
         "minhash_size_frontier": Query(
             "minhash_size_frontier",
-            lambda spark, sf_dir: dedup.minhash_size_frontier(_docs(spark, sf_dir)),
+            lambda spark, sf_dir: dedup.minhash_size_frontier(read_table(spark, sf_dir, "documents", fanout=True)),
             dedup.minhash_size_frontier_sql(),
             ("dedup", "eval"),
         ),
@@ -1499,7 +1497,7 @@ _REGISTRY.update(
     {
         "ann_storage_frontier": Query(
             "ann_storage_frontier",
-            lambda spark, sf_dir: similarity.storage_frontier(_emb(spark, sf_dir)),
+            lambda spark, sf_dir: similarity.storage_frontier(read_table(spark, sf_dir, "embeddings", fanout=True)),
             similarity.storage_frontier_sql(),
             ("similarity", "eval"),
         ),

@@ -10,8 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .io import read_table
 from .queries import _REGISTRY, Query, canon_types, round6, roundn
-from .queries_analytics import _events, _t
 
 
 def _one(name: str, df: DataFrame) -> DataFrame:
@@ -23,10 +23,10 @@ def _one(name: str, df: DataFrame) -> DataFrame:
 def dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential integrity, key uniqueness, and null-rate assertions over
     the warehouse tables; one row per check."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    li = _t(spark, sf_dir, "lineitem")
-    ev = _events(spark, sf_dir)
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    li = read_table(spark, sf_dir, "lineitem")
+    ev = read_table(spark, sf_dir, "events")
     checks = [
         _one(
             "orders_custkey_fk",
@@ -116,7 +116,7 @@ def monthly_growth(orders: DataFrame) -> DataFrame:
 
 
 def _q_monthly_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = monthly_growth(_t(spark, sf_dir, "orders"))
+    out = monthly_growth(read_table(spark, sf_dir, "orders"))
     return canon_types(roundn(out, 4, "revenue", "mom_growth"))
 
 
@@ -160,7 +160,7 @@ def k_anonymity(ev: DataFrame, k: int = KANON_K) -> DataFrame:
 
 
 def _q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(k_anonymity(_events(spark, sf_dir)), "risk_share")
+    return round6(k_anonymity(read_table(spark, sf_dir, "events")), "risk_share")
 
 
 _K_ANONYMITY_SQL = f"""

@@ -23,8 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .io import read_table
 from .queries import _REGISTRY, Query, roundn
-from .queries_analytics import _t
 
 MINSUP_INV = 50  # min support = 1/50 = 2% of baskets
 
@@ -68,7 +68,7 @@ def rfm_segments(orders: DataFrame) -> DataFrame:
 
 
 def _q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return roundn(rfm_segments(_t(spark, sf_dir, "orders")), 4, "avg_freq", "avg_monetary")
+    return roundn(rfm_segments(read_table(spark, sf_dir, "orders")), 4, "avg_freq", "avg_monetary")
 
 
 _RFM_SQL = """
@@ -156,7 +156,7 @@ def basket_rules(li: DataFrame, part: DataFrame, minsup_inv: int = MINSUP_INV) -
 
 def _q_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     return roundn(
-        basket_rules(_t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")),
+        basket_rules(read_table(spark, sf_dir, "lineitem"), read_table(spark, sf_dir, "part")),
         6,
         "support",
         "conf_ab",
@@ -255,9 +255,9 @@ def supplier_hhi(li: DataFrame, supplier: DataFrame, nation: DataFrame) -> DataF
 
 def _q_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return supplier_hhi(
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "nation"),
+        read_table(spark, sf_dir, "lineitem"),
+        read_table(spark, sf_dir, "supplier"),
+        read_table(spark, sf_dir, "nation"),
     )
 
 
@@ -355,7 +355,7 @@ def demand_classes(li: DataFrame) -> DataFrame:
 
 
 def _q_demand_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return demand_classes(_t(spark, sf_dir, "lineitem"))
+    return demand_classes(read_table(spark, sf_dir, "lineitem"))
 
 
 _DEMAND_CLASSES_SQL = f"""
@@ -456,7 +456,7 @@ def abc_xyz(li: DataFrame) -> DataFrame:
 
 
 def _q_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return abc_xyz(_t(spark, sf_dir, "lineitem"))
+    return abc_xyz(read_table(spark, sf_dir, "lineitem"))
 
 
 _ABC_XYZ_SQL = f"""
@@ -552,7 +552,7 @@ def safety_stock(li: DataFrame, z: float = SS_Z, lead: float = SS_LEAD_DAYS) -> 
 
 
 def _q_safety_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return safety_stock(_t(spark, sf_dir, "lineitem"))
+    return safety_stock(read_table(spark, sf_dir, "lineitem"))
 
 
 _SAFETY_STOCK_SQL = f"""
@@ -659,7 +659,7 @@ def eoq_policy(li: DataFrame, s: float = EOQ_ORDER_COST, hr: float = EOQ_HOLD_RA
 
 
 def _q_eoq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return eoq_policy(_t(spark, sf_dir, "lineitem"))
+    return eoq_policy(read_table(spark, sf_dir, "lineitem"))
 
 
 _EOQ_SQL = f"""
@@ -882,7 +882,7 @@ def wagner_whitin(
 
 
 def _q_wagner_whitin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return wagner_whitin(_t(spark, sf_dir, "lineitem"))
+    return wagner_whitin(read_table(spark, sf_dir, "lineitem"))
 
 
 def _wagner_whitin_sql(s: float = EOQ_ORDER_COST, hr_q: float = WW_HOLD_RATE_Q) -> str:

@@ -22,8 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import expr as E
+from .io import read_table
 from .queries import _REGISTRY, Query, canon_types, round6
-from .queries_analytics import _events
 
 
 def global_row_ids(df: DataFrame, key: str, partitions: int | None = None) -> DataFrame:
@@ -185,7 +185,7 @@ def stratified_percentiles(
 
 
 def _q_stratified_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = stratified_rank(
         ev, "event_type", [F.desc("value"), F.asc("event_id")], out="rk"
     ).select("event_id", "event_type", "rk")
@@ -201,7 +201,7 @@ FROM events
 
 
 def _q_global_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).select("event_id", "user_id")
+    ev = read_table(spark, sf_dir, "events").select("event_id", "user_id")
     return canon_types(global_row_ids(ev, "event_id").select("event_id", "user_id", "rid"))
 
 
@@ -252,7 +252,7 @@ def stratified_sample(
 
 
 def _q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = stratified_sample(ev, "event_type", "event_id").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -309,7 +309,7 @@ def weighted_sample(
 
 def _q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quality-weighted doc sampling: weight = n_chars (longer docs likelier)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     out = weighted_sample(docs, "doc_id", "n_chars").select(
         "doc_id", "lang", "source", "n_chars"
     )
@@ -414,7 +414,7 @@ def bootstrap_mean(ev: DataFrame, b: int = BOOT_B) -> DataFrame:
 
 
 def _q_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bootstrap_mean(_events(spark, sf_dir))
+    return bootstrap_mean(read_table(spark, sf_dir, "events"))
 
 
 def _bootstrap_sql(b: int = BOOT_B) -> str:

@@ -32,8 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import expr as E, generators, oracle
+from .io import read_table
 from .queries import _REGISTRY, Query, round6
-from .queries_analytics import _events
 
 
 # --- classical additive decomposition --------------------------------------
@@ -505,7 +505,7 @@ def interpolate_linear(
 
 
 def _q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     base = ev.withColumn("rn", F.row_number().over(w)).withColumn(
         "v_obs", F.when(F.col("rn") % 5 < 3, F.col("value"))
@@ -597,7 +597,7 @@ def lttb_downsample(ev: DataFrame, bucket: str = "hour") -> DataFrame:
 
 
 def _q_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(lttb_downsample(_events(spark, sf_dir)), "value", "area2")
+    return round6(lttb_downsample(read_table(spark, sf_dir, "events")), "value", "area2")
 
 
 _LTTB_SQL = """
@@ -1054,7 +1054,7 @@ def changepoint(
 def _q_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries import canon_types, roundn
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("bucket")
     ).agg(F.avg("value").alias("value"))

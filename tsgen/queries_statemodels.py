@@ -30,6 +30,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import expr as E, generators, oracle
+from .io import read_table
 from .queries import _REGISTRY, Query, round6, roundn
 
 HMM_N, HMM_LEN = 8, 64
@@ -369,7 +370,7 @@ def burst_detect(ev: DataFrame) -> DataFrame:
 
 
 def _q_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_table(spark, sf_dir, "events")
     return burst_detect(ev)
 
 
@@ -641,7 +642,7 @@ def hawkes_loglik(ev: DataFrame) -> DataFrame:
 
 
 def _q_hawkes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return hawkes_loglik(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return hawkes_loglik(read_table(spark, sf_dir, "events"))
 
 
 def _hawkes_sql() -> str:

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from . import streaming
+from .io import read_table
 from .queries import _REGISTRY, Query, round6
 from .queries_analytics import _ASOF_SQL as _STREAM_ASOF_SQL
 
@@ -174,11 +175,7 @@ def _q_stream_psi(spark, sf_dir):
     from .queries_warehouse2 import PSI_BINS, PSI_CUTOFF
 
     cut = F.lit(PSI_CUTOFF).cast("timestamp")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    from .io import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = normalize_event_ts(static)
+    static = read_table(spark, sf_dir, "events")
     rng = (
         static.filter(F.col("ts") < cut)
         .groupBy("event_type")
@@ -528,9 +525,8 @@ def _q_stream_cms(spark, sf_dir):
 
     s = streaming.events_stream(spark, sf_dir)
     counters = streaming.run_to_completion(streaming.cms_counter_stream(s, "user_id"))
-    from .queries_analytics import _events
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     exact = (
         ev.groupBy("user_id")
         .agg(F.count("*").alias("exact_n"))
@@ -720,7 +716,7 @@ def _q_stream_mview(spark, sf_dir):
     equivalence check."""
     from .queries_warehouse2 import MV_CUTOFF, mv_combine, mv_state
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_table(spark, sf_dir, "events")
     cut = F.lit(MV_CUTOFF).cast("timestamp")
     base = mv_state(ev.filter(F.col("ts") < cut)).localCheckpoint(eager=False)
 
@@ -769,7 +765,7 @@ def _q_stream_msprt(spark, sf_dir):
     stream-computed partials must land on the identical monitor path."""
     from .queries_causal import ITS_EPOCH_DAY0, msprt_from_daily, msprt_s2
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_table(spark, sf_dir, "events")
     s = streaming.events_stream(spark, sf_dir)
     arm0 = F.col("user_id") % 2 == 0
     daily_stream = (

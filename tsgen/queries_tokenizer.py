@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .io import read_table
 from .queries import _REGISTRY, Query
 
 BPE_ITERS = 8
@@ -122,7 +123,7 @@ def bpe_train(docs: DataFrame, iters: int = BPE_ITERS, text: str = "text") -> Da
 
 
 def _q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bpe_train(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return bpe_train(read_table(spark, sf_dir, "documents"))
 
 
 def _bpe_ctes(iters: int = BPE_ITERS) -> str:
@@ -250,7 +251,7 @@ def bpe_encode(docs: DataFrame, iters: int = BPE_ITERS, text: str = "text") -> D
 
 
 def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bpe_encode(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return bpe_encode(read_table(spark, sf_dir, "documents"))
 
 
 def _bpe_encode_ctes(iters: int = BPE_ITERS) -> str:
@@ -355,7 +356,7 @@ def tok_fertility(docs: DataFrame, iters: int = BPE_ITERS, text: str = "text") -
 
 
 def _q_tok_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tok_fertility(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return tok_fertility(read_table(spark, sf_dir, "documents"))
 
 
 def bm25_topk(
@@ -442,7 +443,7 @@ def bm25_topk(
 
 
 def _q_doc_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bm25_topk(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return bm25_topk(read_table(spark, sf_dir, "documents"))
 
 
 def _bm25_sql(
@@ -642,7 +643,7 @@ def ql_dirichlet_topk(
 
 
 def _q_ql_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ql_dirichlet_topk(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return ql_dirichlet_topk(read_table(spark, sf_dir, "documents"))
 
 
 def _ql_sql(
@@ -691,7 +692,7 @@ ORDER BY qid, rank
 
 
 def _q_bm25_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bm25_ndcg(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return bm25_ndcg(read_table(spark, sf_dir, "documents"))
 
 
 def _bm25_ndcg_sql(
@@ -922,7 +923,7 @@ def unigram_em(docs: DataFrame, text: str = "text") -> DataFrame:
 def _q_tok_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries import canon_types
 
-    return canon_types(unigram_em(spark.read.parquet(f"{sf_dir}/documents.parquet")))
+    return canon_types(unigram_em(read_table(spark, sf_dir, "documents")))
 
 
 def _uni_dp_sql(sfx: str) -> str:

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import expr as E
+from .io import read_table
 from .queries import _REGISTRY, Query, roundn
 
 TOPIC_K = 3
@@ -141,7 +142,7 @@ def plsa_topics(
 
 
 def _q_doc_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return plsa_topics(docs)
 
 

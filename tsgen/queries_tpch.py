@@ -16,8 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .io import read_table
 from .queries import _REGISTRY, Query, canon_types, roundn
-from .queries_analytics import _t
 
 
 def _rev():
@@ -27,8 +27,8 @@ REV_SQL = "l_extendedprice * (1 - l_discount)"
 
 # --- promo_revenue (Q14 shape): monthly promo revenue share ----------------
 def _q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     out = (
         j.groupBy(
@@ -61,7 +61,7 @@ Q15_START, Q15_END = "1996-01-01", "1996-04-01"
 
 
 def _q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit(Q15_START)) & (F.col("l_shipdate") < F.lit(Q15_END))
     )
     rev = (
@@ -72,7 +72,7 @@ def _q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("_r")
     )
     mx = rev.agg(F.max("total_rev").alias("_mx"))
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    sup = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     out = (
         rev.join(F.broadcast(mx), rev.total_rev == mx._mx)
         .join(F.broadcast(sup), rev.l_suppkey == sup.s_suppkey)
@@ -95,9 +95,9 @@ WHERE total_rev = (SELECT max(total_rev) FROM rev)
 
 # --- small_qty_revenue (Q17 shape): revenue locked in small-lot orders -----
 def _q_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     brand_parts = (
-        _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#4").select("p_partkey")
+        read_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#4").select("p_partkey")
     )
     per_part = li.groupBy("l_partkey").agg((F.avg("l_quantity") * 0.5).alias("half_avg"))
     out = (
@@ -128,16 +128,16 @@ Q18_MIN_QTY = 170.0
 
 
 def _q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("sum_qty"))
         .filter(F.col("sum_qty") > Q18_MIN_QTY)
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", F.unix_timestamp("o_orderdate").alias("o_date_s"), "o_totalprice"
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     out = (
         big.join(orders, big.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -163,7 +163,7 @@ JOIN customer ON o_custkey = c_custkey
 # scan, output is one row — at 100 TB this is scan-bound and embarrassingly
 # parallel (partial agg, no real shuffle).
 def _q_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     out = (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -193,8 +193,8 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-0
 # Orders with at least one line shipped after the order date + 90 days,
 # counted per priority. left-semi: the fact side never duplicates.
 def _q_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = orders.join(
         li,
         (orders.o_orderkey == li.l_orderkey)
@@ -239,13 +239,13 @@ VS_N1, VS_N2 = "NATION_1", "NATION_2"
 
 
 def _q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     # fact⋈fact (lineitem⋈orders) shuffles on the natural key; customer joins
     # via shuffle (it scales with SF); supplier+nation broadcast (dims)
     cn = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).select(
@@ -289,10 +289,10 @@ GROUP BY 1, 2, 3
 
 # --- profit_by_nation (Q9 shape, retailprice-proxy cost) -------------------
 def _q_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = read_table(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     sn = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select(
         "s_suppkey", F.col("n_name").alias("nation")
     )
@@ -323,12 +323,12 @@ GROUP BY 1, 2
 
 # --- returned_customers (Q10 shape): top returned-revenue customers --------
 def _q_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    o = _t(spark, sf_dir, "orders").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    o = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
     ).select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
+    n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     rev = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("o_custkey")
@@ -364,8 +364,8 @@ ORDER BY rev.revenue DESC, c_custkey LIMIT 20
 
 # --- order_count_distribution (Q13 shape) ----------------------------------
 def _q_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
+    c = read_table(spark, sf_dir, "customer").select("c_custkey")
+    o = read_table(spark, sf_dir, "orders").select("o_custkey")
     per_cust = (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
@@ -386,8 +386,8 @@ SELECT c_count, count(*) AS custdist FROM pc GROUP BY c_count
 
 # --- brand_size_revenue (Q19 shape): disjunctive pushdown ------------------
 def _q_brand_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
     cond = (
         ((F.col("p_brand") == "Brand#1") & (F.col("p_size") <= 10) & (F.col("l_quantity") >= 30))
@@ -414,9 +414,9 @@ IDLE_SINCE = "2000-01-01"
 
 
 def _q_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey", "c_acctbal")
+    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey", "c_acctbal")
     o = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= IDLE_SINCE)
         .select("o_custkey")
     )
@@ -492,16 +492,16 @@ Q2_MAX_SIZE = 10
 
 
 def _q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     parts = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .filter((F.col("p_type") == Q2_TYPE) & (F.col("p_size") <= Q2_MAX_SIZE))
         .select("p_partkey")
     )
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == Q2_REGION)
+    n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
+    r = read_table(spark, sf_dir, "region").filter(F.col("r_name") == Q2_REGION)
     sup = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
         .join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal")
@@ -555,20 +555,20 @@ Q8_NATION = "NATION_1"
 
 
 def _q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == Q8_REGION)
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region").filter(F.col("r_name") == Q8_REGION)
     cust_in_region = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
         .join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
         .select("c_custkey")
     )
     supp_nation = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
@@ -610,10 +610,10 @@ Q11_FRACTION = 1e-3
 
 
 def _q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == Q11_NATION)
+    li = read_table(spark, sf_dir, "lineitem")
+    n = read_table(spark, sf_dir, "nation").filter(F.col("n_name") == Q11_NATION)
     sup = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
         .select("s_suppkey")
     )
@@ -649,8 +649,8 @@ Q12_LATE_DAYS = 60
 
 
 def _q_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate", "l_returnflag")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate", "l_returnflag")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
     late = li.join(o, li.l_orderkey == o.o_orderkey).filter(
         F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), Q12_LATE_DAYS)
     )
@@ -674,15 +674,15 @@ GROUP BY 1
 
 # --- part_supplier_counts (Q16 shape): distinct suppliers per part class ---
 def _q_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = read_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     p = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .filter(F.col("p_brand") != "Brand#3")
         .select("p_partkey", "p_brand", "p_size")
     )
     # "complaint" analog: suppliers in the red are excluded via anti-join
     bad_sup = (
-        _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
+        read_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
     )
     pairs = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -712,17 +712,17 @@ Q20_MIN_QTY = 100.0
 
 
 def _q_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
     red_parts = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .filter(F.col("p_name").startswith(Q20_PREFIX))
         .select("p_partkey")
     )
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == Q20_NATION)
+    n = read_table(spark, sf_dir, "nation").filter(F.col("n_name") == Q20_NATION)
     sup = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
         .select("s_suppkey", "s_name")
     )
@@ -755,12 +755,12 @@ JOIN (SELECT l_suppkey, sum(l_quantity) AS total_qty
 # --- waiting_suppliers (Q21 shape): sole-blocker detection -----------------
 def _q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_f = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey")
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey", "l_shipdate")
         .join(o_f, F.col("l_orderkey") == o_f.o_orderkey, "left_semi")
     )
@@ -781,7 +781,7 @@ def _q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         at_max.join(n_max, "l_orderkey")
         .filter((F.col("_n_max") == 1) & (F.col("_n_supp") >= 2))
     )
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    sup = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     out = (
         blockers.groupBy("l_suppkey")
         .agg(F.count("*").alias("numwait"))

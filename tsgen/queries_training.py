@@ -12,8 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import expr as E, generators
+from .io import read_table
 from .queries import _REGISTRY, Query, round6
-from .queries_analytics import _events
 
 N_EPOCHS, N_TR, LEN_TR = 10, 8, 64
 
@@ -70,7 +70,7 @@ def _q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop range join (plan-lint r9: the BNLJ here was the one
     registry range-join that had a free equi-key). The general
     non-aligned interval case is covered by ev_asof / ev_interval_union."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     incidents = (
         ev.filter(F.col("event_type") == "error")
         .groupBy(F.date_trunc("hour", "ts").alias("w_start"))
@@ -105,7 +105,7 @@ def _q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # group value in one task — see stratified_percentiles
     from .queries_scale import stratified_percentiles
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = stratified_percentiles(
         ev, "event_type", "value", [0.5, 0.9, 0.99], ["p50", "p90", "p99"]
     )
@@ -312,7 +312,7 @@ _REGISTRY.update(
 
 # --- funnel: click -> purchase conversion within 24h ----------------------
 def _q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     first_click = (
         ev.filter(F.col("event_type") == "click")
         .groupBy("user_id")
@@ -367,7 +367,7 @@ def _q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     product-analytics triad): cohort = first active day, cell = distinct
     users active at each day offset. Two shuffles (first-day agg keyed by
     user, cohort-cell agg keyed by (cohort, offset)) — both uniform keys."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     first = ev.groupBy("user_id").agg(
         F.date_trunc("day", F.min("ts")).alias("cohort_day")
     )
@@ -400,7 +400,7 @@ def _q_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the classic funnel report (n_users per stage). Three conditional-min
     # aggregations chained by broadcast joins on user_id (each stage table
     # is one row per user); no window over raw events.
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     # each stage table (one row per user) is read twice — by the next
     # stage's join AND by the final count union; pinned, events is scanned
     # exactly once per stage filter (was 6 scans, recompute census)
@@ -536,7 +536,7 @@ def retention_fit(ev: DataFrame, max_age: int = RETFIT_MAX_AGE) -> DataFrame:
 
 
 def _q_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return retention_fit(_events(spark, sf_dir))
+    return retention_fit(read_table(spark, sf_dir, "events"))
 
 
 _RETENTION_FIT_SQL = f"""

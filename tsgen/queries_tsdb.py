@@ -11,8 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import expr as E
+from .io import read_table
 from .queries import _REGISTRY, Query, round6, roundn
-from .queries_analytics import _events
 
 
 # --- clamped running balance ----------------------------------------------
@@ -40,7 +40,7 @@ def running_balance(
 
 
 def _q_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).filter(
+    ev = read_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "error")
     )
     delta = F.when(F.col("event_type") == "purchase", F.col("value")).otherwise(
@@ -102,7 +102,7 @@ def ohlc_bars(df: DataFrame, bucket: str = "hour") -> DataFrame:
 
 def _q_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return round6(
-        ohlc_bars(_events(spark, sf_dir)),
+        ohlc_bars(read_table(spark, sf_dir, "events")),
         "open", "high", "low", "close", "volume",
     )
 
@@ -139,7 +139,7 @@ def twap(df: DataFrame, key: str = "event_type") -> DataFrame:
 
 
 def _q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return roundn(twap(_events(spark, sf_dir)), 4, "twap", "plain_avg")
+    return roundn(twap(read_table(spark, sf_dir, "events")), 4, "twap", "plain_avg")
 
 
 _TWAP_SQL = """
@@ -183,7 +183,7 @@ def time_features(df: DataFrame) -> DataFrame:
 
 def _q_time_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return round6(
-        time_features(_events(spark, sf_dir)),
+        time_features(read_table(spark, sf_dir, "events")),
         "hour_sin", "hour_cos", "dow_sin", "dow_cos",
     )
 
@@ -224,7 +224,7 @@ def label_centroids(df: DataFrame, vec: str = "embedding") -> DataFrame:
 
 
 def _q_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return roundn(label_centroids(emb), 6, "centroid", "sd")
 
 
@@ -287,7 +287,7 @@ def interval_union(df: DataFrame, key: str = "user_id", hold_s: int = HOLD_S) ->
 
 
 def _q_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return interval_union(_events(spark, sf_dir))
+    return interval_union(read_table(spark, sf_dir, "events"))
 
 
 _INTERVAL_UNION_SQL = f"""

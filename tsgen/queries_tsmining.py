@@ -40,8 +40,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import expr as E, generators, oracle
+from .io import read_table
 from .queries import _REGISTRY, Query, round6
-from .queries_analytics import _events
 
 TWO_PI = 2.0 * math.pi
 LS_MAX_HOURS = 24
@@ -116,7 +116,7 @@ def lombscargle(ev: DataFrame, max_hours: int = LS_MAX_HOURS) -> DataFrame:
 
 
 def _q_lombscargle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(lombscargle(_events(spark, sf_dir)), "power", "power_norm")
+    return round6(lombscargle(read_table(spark, sf_dir, "events")), "power", "power_norm")
 
 
 def _lombscargle_sql(max_hours: int = LS_MAX_HOURS) -> str:
@@ -198,7 +198,7 @@ def technical_indicators(
 
 
 def _q_technical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = technical_indicators(_events(spark, sf_dir))
+    out = technical_indicators(read_table(spark, sf_dir, "events"))
     return round6(out, "value", "sma20", "bb_pctb", "rsi14")
 
 
@@ -928,7 +928,7 @@ def ewma_chart(
 
 
 def _q_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(ewma_chart(_events(spark, sf_dir)), "z", "ucl", "lcl")
+    return round6(ewma_chart(read_table(spark, sf_dir, "events")), "z", "ucl", "lcl")
 
 
 def _ewma_chart_sql(
@@ -1358,7 +1358,7 @@ def ks_test(ev: DataFrame, type_a: str = KS_TYPE_A, type_b: str = KS_TYPE_B) -> 
 
 
 def _q_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(ks_test(_events(spark, sf_dir)), "ks_d", "ks_scaled")
+    return round6(ks_test(read_table(spark, sf_dir, "events")), "ks_d", "ks_scaled")
 
 
 _KS_SQL = f"""
@@ -1412,7 +1412,7 @@ def chi_square(ev: DataFrame) -> DataFrame:
 
 
 def _q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(chi_square(_events(spark, sf_dir)), "chi2")
+    return round6(chi_square(read_table(spark, sf_dir, "events")), "chi2")
 
 
 _CHI_SQUARE_SQL = """
@@ -1469,7 +1469,7 @@ def counter_rate(ev: DataFrame, bucket_s: int = 3600) -> DataFrame:
 
 
 def _q_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(counter_rate(_events(spark, sf_dir)), "increase", "rate_per_s")
+    return round6(counter_rate(read_table(spark, sf_dir, "events")), "increase", "rate_per_s")
 
 
 _COUNTER_RATE_SQL = """
@@ -1515,7 +1515,7 @@ def max_drawdown(ev: DataFrame) -> DataFrame:
 
 
 def _q_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(max_drawdown(_events(spark, sf_dir)), "max_drawdown")
+    return round6(max_drawdown(read_table(spark, sf_dir, "events")), "max_drawdown")
 
 
 _DRAWDOWN_SQL = """
@@ -1563,7 +1563,7 @@ def zipf_fit(df: DataFrame, text: str = "text", max_rank: int = 1000) -> DataFra
 
 
 def _q_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return round6(zipf_fit(docs), "zipf_exponent", "loglog_corr")
 
 
@@ -1611,7 +1611,7 @@ def rate_anomaly(ev: DataFrame, z_min: float = 3.0) -> DataFrame:
 
 
 def _q_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(rate_anomaly(_events(spark, sf_dir)), "lam", "z")
+    return round6(rate_anomaly(read_table(spark, sf_dir, "events")), "lam", "z")
 
 
 _RATE_ANOMALY_SQL = """
@@ -1653,7 +1653,7 @@ def m4_downsample(ev: DataFrame, bucket_s: int = M4_BUCKET_S) -> DataFrame:
 
 def _q_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     return round6(
-        m4_downsample(_events(spark, sf_dir)),
+        m4_downsample(read_table(spark, sf_dir, "events")),
         "v_min", "v_max", "v_first", "v_last",
     )
 
@@ -1703,7 +1703,7 @@ def cdc_apply(ev: DataFrame, delete_type: str = "error") -> DataFrame:
 
 
 def _q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(cdc_apply(_events(spark, sf_dir)), "final_value")
+    return round6(cdc_apply(read_table(spark, sf_dir, "events")), "final_value")
 
 
 _CDC_SQL = """
@@ -1760,7 +1760,7 @@ def peak_detect(
 
 
 def _q_peak_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(peak_detect(_events(spark, sf_dir)), "value", "zscore")
+    return round6(peak_detect(read_table(spark, sf_dir, "events")), "value", "zscore")
 
 
 _PEAK_SQL = f"""
@@ -1887,7 +1887,7 @@ def seasonal_profile(ev: DataFrame) -> DataFrame:
 
 
 def _q_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(seasonal_profile(_events(spark, sf_dir)), "mean_value", "lift")
+    return round6(seasonal_profile(read_table(spark, sf_dir, "events")), "mean_value", "lift")
 
 
 _SEASONAL_PROFILE_SQL = """
@@ -1922,7 +1922,7 @@ def apdex(ev: DataFrame, t: float = APDEX_T) -> DataFrame:
 
 
 def _q_apdex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(apdex(_events(spark, sf_dir)), "apdex")
+    return round6(apdex(read_table(spark, sf_dir, "events")), "apdex")
 
 
 _APDEX_SQL = f"""
@@ -2164,7 +2164,7 @@ def gap_stats(ev: DataFrame) -> DataFrame:
 
 def _q_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return round6(
-        gap_stats(_events(spark, sf_dir)),
+        gap_stats(read_table(spark, sf_dir, "events")),
         "mean_gap_s", "std_gap_s", "p95_gap_s", "cv", "burstiness",
     )
 
@@ -2323,7 +2323,7 @@ def sesd_anomalies(ev: DataFrame, kmax: int = SESD_KMAX, z_thresh: float = SESD_
 
 
 def _q_sesd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sesd_anomalies(_events(spark, sf_dir))
+    return sesd_anomalies(read_table(spark, sf_dir, "events"))
 
 
 def _sesd_sql(kmax: int = SESD_KMAX, z_thresh: float = SESD_Z) -> str:

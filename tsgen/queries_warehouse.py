@@ -23,8 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .io import read_table
 from .queries import _REGISTRY, Query, canon_types, round6, roundn
-from .queries_analytics import _events, _t
 
 
 # --- SCD2 intervals -------------------------------------------------------
@@ -54,7 +54,7 @@ def scd2_intervals(
 
 
 def _q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return scd2_intervals(_events(spark, sf_dir))
+    return scd2_intervals(read_table(spark, sf_dir, "events"))
 
 
 _SCD2_SQL = """
@@ -89,7 +89,7 @@ def forward_fill(
 
 
 def _q_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     # deterministic sparsity: drop every 7th measurement, then fill it back
     masked = ev.withColumn(
         "_m", F.when(F.col("event_id") % 7 == 0, None).otherwise(F.col("value"))
@@ -154,7 +154,7 @@ def table_profile(df: DataFrame, cols: list[str]) -> DataFrame:
 
 
 def _q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").withColumn(
+    o = read_table(spark, sf_dir, "orders").withColumn(
         "o_orderdate_s", F.unix_timestamp("o_orderdate")
     )
     out = table_profile(o, _PROFILE_COLS)
@@ -197,7 +197,7 @@ def key_skew(df: DataFrame, key: str, top_n: int = 10) -> DataFrame:
 
 
 def _q_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = key_skew(_t(spark, sf_dir, "lineitem"), "l_partkey")
+    out = key_skew(read_table(spark, sf_dir, "lineitem"), "l_partkey")
     return round6(out, "share")
 
 
@@ -262,7 +262,7 @@ def zorder_cluster_stats(df: DataFrame, a: str, b: str, shift: int = 16) -> Data
 
 
 def _q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return zorder_cluster_stats(li, "l_partkey", "l_suppkey")
 
 
@@ -329,7 +329,7 @@ def table_checksum(orders: DataFrame) -> DataFrame:
 
 
 def _q_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return table_checksum(_t(spark, sf_dir, "orders"))
+    return table_checksum(read_table(spark, sf_dir, "orders"))
 
 
 _CHECKSUM_SQL = """
@@ -365,7 +365,7 @@ def snapshot_diff(old: DataFrame, new: DataFrame, key: str, cmp: str) -> DataFra
 
 
 def _q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     # deterministic synthetic "yesterday vs today": keys ≡0 (mod 97) appear
     # only today (added); keys ≡0 (mod 89) changed price today
     old = orders.filter(F.col("o_orderkey") % 97 != 0)
@@ -425,7 +425,7 @@ def rolling_beta(ev: DataFrame, window_rows: int = BETA_W) -> DataFrame:
 
 
 def _q_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(rolling_beta(_events(spark, sf_dir)), "value", "beta")
+    return round6(rolling_beta(read_table(spark, sf_dir, "events")), "value", "beta")
 
 
 _ROLLING_BETA_SQL = f"""
@@ -470,7 +470,7 @@ _REGISTRY.update(
 def _q_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import sketches
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     parts = []
     for name, key in (("user_id", "user_id"), ("event_id", "event_id")):
         est = sketches.hll_distinct(ev, key)
@@ -509,7 +509,7 @@ FROM ({est})"""
 def _q_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import sketches
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return sketches.cms_estimate_tokens(docs)
 
 
@@ -534,7 +534,7 @@ _REGISTRY.update(
 def _q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import sketches
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = sketches.kmv_set_ops(ev, "user_id", "event_type", "purchase", "error")
     return roundn(out, 6, "est_a", "est_b", "est_union", "est_intersection")
 
@@ -555,7 +555,7 @@ FROM ({inner})
 def _q_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import sketches
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = sketches.hll_set_ops(ev, "user_id", "event_type", "purchase", "error")
     return roundn(out, 6, "est_a", "est_b", "est_union", "est_intersection")
 
@@ -588,7 +588,7 @@ _REGISTRY.update(
 def _q_dd_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import sketches
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     out = sketches.dd_quantiles(ev, "value")
     return roundn(out, 6, "est")
 
@@ -606,10 +606,10 @@ FROM ({inner}) ORDER BY q
 def _q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import sketches
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
+    cust = read_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return sketches.bloom_prune(cust, orders, "c_custkey", "o_custkey")
 
 
@@ -636,7 +636,7 @@ _REGISTRY.update(
 def _q_dd_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import sketches
 
-    out = sketches.dd_quantiles_by(_events(spark, sf_dir), "event_type", "value")
+    out = sketches.dd_quantiles_by(read_table(spark, sf_dir, "events"), "event_type", "value")
     return roundn(out, 6, "est")
 
 
@@ -668,7 +668,7 @@ def _q_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this approximate operator hash-checks.
     from . import sketches
 
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     qs = tuple(i / 10.0 for i in range(1, 10))
     pos = ev.filter(F.col("value") > 0)
     buckets = (
@@ -730,7 +730,7 @@ def _q_hll_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the daily-batch pattern where yesterday's sketch is never recomputed
     from . import sketches
 
-    ev = _events(spark, sf_dir).withColumn(
+    ev = read_table(spark, sf_dir, "events").withColumn(
         "day", F.date_format("ts", "yyyy-MM-dd")
     )
     regs = sketches.hll_registers(ev, "user_id", "day")
@@ -781,7 +781,7 @@ def _q_embed_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-label centroids by cosine — the data-quality check run before
     # (re)training on a new batch. Two partial-agged passes + a 1-row-per-
     # label join; everything else is array arithmetic.
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     v = F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
     half = (F.col("vec_id") % 2).alias("half")
     e = emb.select("vec_id", F.col("label").cast("bigint").alias("label"), half, v.alias("v"))
@@ -848,8 +848,8 @@ def _q_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at sketch cost. Exact value beside it; integers, hash-exact.
     from . import sketches
 
-    ev = _events(spark, sf_dir).select(F.col("user_id").alias("k"))
-    od = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
+    ev = read_table(spark, sf_dir, "events").select(F.col("user_id").alias("k"))
+    od = read_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
 
     def counters(d: DataFrame) -> DataFrame:
         x = sketches._hash48("k", sketches._spark_hexparse)

@@ -35,8 +35,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .io import read_table
 from .queries import _REGISTRY, Query, round6, roundn
-from .queries_analytics import _events, _t
 
 MERGE_CUTOFF = "2024-01-21 00:00:00"
 
@@ -94,7 +94,7 @@ def merge_upsert(base: DataFrame, delta: DataFrame) -> DataFrame:
 
 
 def _q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     cut = F.lit(MERGE_CUTOFF).cast("timestamp")
     out = merge_upsert(_profile(ev.filter(F.col("ts") < cut)), _profile(ev.filter(F.col("ts") >= cut)))
     return round6(out, "sum_value")
@@ -176,7 +176,7 @@ def doc_pareto(docs: DataFrame) -> DataFrame:
 
 
 def _q_doc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return doc_pareto(_t(spark, sf_dir, "documents"))
+    return doc_pareto(read_table(spark, sf_dir, "documents"))
 
 
 _PARETO_SQL = """
@@ -234,7 +234,7 @@ def zone_map_skipping(li: DataFrame, n_buckets: int = ZM_BUCKETS) -> DataFrame:
 
 
 def _q_zone_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return round6(zone_map_skipping(li), "skip_ratio")
 
 
@@ -309,7 +309,7 @@ def funnel_latency(ev: DataFrame, start: str = "view", end: str = "purchase") ->
 
 def _q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     return round6(
-        funnel_latency(_events(spark, sf_dir)),
+        funnel_latency(read_table(spark, sf_dir, "events")),
         "p50_s", "p90_s", "mean_s", "conversion_rate",
     )
 
@@ -384,7 +384,7 @@ def abc_analysis(li: DataFrame, a_cut: float = 0.7, b_cut: float = 0.9) -> DataF
 
 
 def _q_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return roundn(abc_analysis(li), 4, "revenue_m", "rev_share")
 
 
@@ -487,7 +487,7 @@ def psi_drift(
 
 
 def _q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(psi_drift(_events(spark, sf_dir)), "psi")
+    return round6(psi_drift(read_table(spark, sf_dir, "events")), "psi")
 
 
 def _psi_sql(cutoff: str = PSI_CUTOFF, n_bins: int = PSI_BINS) -> str:
@@ -557,7 +557,7 @@ def time_travel(ev: DataFrame, probes_s: tuple[int, ...] = TT_PROBES_S) -> DataF
 
 
 def _q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return time_travel(_events(spark, sf_dir))
+    return time_travel(read_table(spark, sf_dir, "events"))
 
 
 def _time_travel_sql(probes_s: tuple[int, ...] = TT_PROBES_S) -> str:
@@ -638,7 +638,7 @@ def ewma_corr(
 
 
 def _q_ewma_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return round6(ewma_corr(_events(spark, sf_dir)), "ew_cov", "ew_corr")
+    return round6(ewma_corr(read_table(spark, sf_dir, "events")), "ew_cov", "ew_corr")
 
 
 def _ewma_corr_sql(lam: float = EWMA_LAM, bucket_s: int = EWMA_BUCKET_S) -> str:
@@ -723,7 +723,7 @@ def mv_combine(base: DataFrame, delta: DataFrame) -> DataFrame:
 
 
 def _q_mview(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return mview_merge(_events(spark, sf_dir))
+    return mview_merge(read_table(spark, sf_dir, "events"))
 
 
 # Oracle: the DIRECT full recompute — passing proves merged state == truth.
@@ -836,7 +836,7 @@ def retract_merge(ev: DataFrame, erase_mod: int = ERASE_MOD) -> DataFrame:
 
 
 def _q_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return retract_merge(_events(spark, sf_dir))
+    return retract_merge(read_table(spark, sf_dir, "events"))
 
 
 _RETRACT_SQL = f"""
@@ -905,7 +905,7 @@ def cohort_ltv(ev: DataFrame) -> DataFrame:
 
 
 def _q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return cohort_ltv(_events(spark, sf_dir))
+    return cohort_ltv(read_table(spark, sf_dir, "events"))
 
 
 _COHORT_LTV_SQL = """

@@ -28,10 +28,10 @@ def get_spark(app_name: str = "tsgen", shuffle_partitions: int | None = None) ->
         # stage progress bars would interleave with callers' stderr lines
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.warehouse.dir", "/tmp/tsgen-warehouse")
-        # events.parquet is TIMESTAMP(NANOS), which the vectorized reader
-        # rejects; read nanos as long everywhere (the _events helper converts
-        # ts DIV 1000 → timestamp). Set at build time so no code path can
-        # touch the file before the conf exists (test-order flake otherwise).
+        # events.parquet is TIMESTAMP(NANOS). Where Spark <= 4.0 honours this
+        # conf, nanos read as long (io.read_table converts ts DIV 1000 →
+        # timestamp); Spark 4.1 ignores it and reads TIMESTAMP_NTZ. Set at
+        # build time so no code path can touch the file before the conf exists.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     spark = builder.getOrCreate()

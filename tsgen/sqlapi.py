@@ -4,27 +4,26 @@ API. Catalyst compiles both to the same plans — the point of building on
 Spark SQL is that the ANSI-SQL front door comes for free (predicate
 pushdown, column pruning, AQE all apply identically).
 
-`sql()` is the one-call entry: register + query.
+`sql()` is the one-call entry: register + query. The views are the
+tables `io.read_table` returns, the same reader every registry query uses.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .io import read_table
+
 TABLES = (
-    "region nation customer supplier part orders lineitem documents embeddings"
+    "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
 
 def register_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every parquet table as a temp view named like the file.
-    `events` gets the same nanos→micros normalization the DataFrame path
-    applies (queries_analytics._events), so SQL and DataFrame users see
-    identical timestamps."""
+    """Expose every parquet table as a temp view named like the file. Each
+    is read through `io.read_table`, so SQL and DataFrame users see the same
+    tables (`events` with the same normalized `ts`)."""
     for t in TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    from .queries_analytics import _events
-
-    _events(spark, sf_dir).createOrReplaceTempView("events")
+        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:

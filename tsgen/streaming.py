@@ -21,6 +21,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .io import normalize_event_ts, read_table
+
+
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table (one-file replay).
 
@@ -28,10 +31,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     hardcoded one: how the TIMESTAMP(NANOS) ts column arrives (bigint nanos
     vs TIMESTAMP_NTZ) depends on the Spark version, and forcing LongType on
     a reader that resolves nanos to NTZ silently yields micros — a 1000×
-    timestamp corruption. Inferring then normalizing is version-proof."""
-    from .io import normalize_event_ts
+    timestamp corruption. Inferring then normalizing is version-proof.
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    The schema read stays a raw `spark.read.parquet`, not `io.read_table`:
+    the file stream needs the on-disk schema, and normalization is applied
+    to the stream itself."""
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.schema(schema)
@@ -44,7 +48,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents table (one-file replay) — the
-    ingest shape of a production corpus feed (files land, get decoded)."""
+    ingest shape of a production corpus feed (files land, get decoded).
+    Like `events_stream`, it takes the on-disk schema for the file stream."""
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     return (
         spark.readStream.schema(schema)
@@ -213,12 +218,9 @@ def replay_chunked(
     """
     from pyspark.sql import Window
 
-    from .io import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # normalize ts BEFORE writing the chunks, so the re-read schema is a
-    # plain TIMESTAMP on every Spark version (see events_stream docstring)
-    ev = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    # read_table normalizes ts BEFORE the chunks are written, so the re-read
+    # schema is a plain TIMESTAMP on every Spark version (see events_stream)
+    ev = read_table(spark, sf_dir, "events")
     chunked = ev.withColumn(
         "_chunk", F.ntile(n_chunks).over(Window.orderBy("ts", "event_id"))
     )
@@ -257,10 +259,7 @@ def replay_rate(
     """
     from pyspark.sql import Window
 
-    from .io import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    ev = read_table(spark, sf_dir, "events")
     indexed = ev.withColumn(
         "_seq",
         F.row_number().over(Window.orderBy("ts", "event_id")).cast("bigint") - 1,
