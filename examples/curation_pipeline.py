@@ -15,7 +15,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from tsgen import dedup, text
 from tsgen.session import get_spark

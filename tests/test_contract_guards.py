@@ -5,8 +5,8 @@ session query referring to a renamed registry query, a second registration
 silently replacing a query (the r10 dedup_incremental shadowing lesson), an
 oracle SQL string that no longer parses after an edit (the full sweep would
 catch it too, but this runs in seconds inside pytest), a test module that
-defines one test name twice, or a module that reads a testdata table past
-`io.read_table`.
+defines one test name twice, a module that reads a testdata table past
+`io.read_table`, or an import that nothing reads.
 """
 from __future__ import annotations
 
@@ -141,4 +141,43 @@ def test_testdata_tables_are_read_through_read_table():
             line = line.strip()
             if 'read.parquet(f"{sf_dir}' in line and (path.name, line) not in RAW_SCHEMA_READS:
                 bad.append(f"{path.name}:{n}: {line}")
+    assert not bad, "\n".join(bad)
+
+
+def _unused_imports(path: Path) -> list[str]:
+    """Names `path` imports but never reads. A module reads a name when it
+    loads it anywhere in the file or lists it in `__all__`; `__future__`
+    imports and lines marked `# noqa` are side-effect imports."""
+    text = path.read_text()
+    tree = ast.parse(text)
+    lines = text.splitlines()
+    read = {
+        n.id for n in ast.walk(tree) if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+    }
+    imported = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+        ):
+            read |= {e.value for e in node.value.elts if isinstance(e, ast.Constant)}
+        elif (
+            isinstance(node, (ast.Import, ast.ImportFrom))
+            and getattr(node, "module", None) != "__future__"
+            and "# noqa" not in lines[node.lineno - 1]
+        ):
+            imported += [
+                (node.lineno, a.asname or a.name.split(".")[0]) for a in node.names if a.name != "*"
+            ]
+    return [f"{path.relative_to(ROOT)}:{n} {name}" for n, name in imported if name not in read]
+
+
+def test_no_unused_imports():
+    """No linter runs in tier-1, so this is the unused-import check for the
+    library, the tests, the tools and the examples (`__init__.py` files
+    re-export by importing)."""
+    bad = []
+    for d in ("tsgen", "tests", "tools", "examples"):
+        for path in sorted((ROOT / d).rglob("*.py")):
+            if path.name != "__init__.py":
+                bad += _unused_imports(path)
     assert not bad, "\n".join(bad)

@@ -1,6 +1,7 @@
 """Property-based self-oracles for the FFT/decomposition family
 (FIXTURES.md §95-100 — the reference's closed-form test corpus idea)."""
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from tsgen import decompose, generators, spectral
@@ -45,30 +46,22 @@ def test_seasonality_recovers_pure_tone(spark):
     assert err < 1e-9
 
 
-def test_trend_poly_recovers_exact_polynomial(spark):
-    # value = 2 + 3c - c^2 with c = t/n → fit recovers it exactly
-    n = 48
-    df = generators.base_grid(spark, 3, n).withColumn(
-        "value", F.expr(f"2.0e0 + 3.0e0 * (CAST(t AS DOUBLE)/{n}) - pow(CAST(t AS DOUBLE)/{n}, 2)")
-    )
-    out = (
-        df.withColumn("cc", F.col("t").cast("double") / n)
-        .join(decompose.trend_cubic(df), "series_id")
-        .withColumn("trend", F.expr(decompose.CUBIC_EVAL))
-    )
-    err = out.agg(F.max(F.abs(F.col("trend") - F.col("value")))).collect()[0][0]
-    assert err < 1e-8
+# value = Σ coef_i·c^i, c = t/n, per fitted degree
+EXACT_POLYS = {1: [1.0, 2.0], 2: [1.0, -2.0, 0.5], 3: [2.0, 3.0, -1.0, 0.5]}
 
 
-def test_trend_linear_closed_form(spark):
-    # exact line: value = 1 + 2c → intercept 1, slope 2
+@pytest.mark.parametrize("degree", [1, 2, 3])
+def test_trend_poly_recovers_exact_polynomial(spark, degree):
+    # an exact polynomial of the fitted degree → the closed-form Cramer fit
+    # recovers its coefficients
     n = 40
-    df = generators.base_grid(spark, 2, n).withColumn(
-        "value", F.expr(f"1.0e0 + 2.0e0 * (CAST(t AS DOUBLE)/{n})")
-    )
-    pdf = decompose.trend_linear(df).toPandas()
-    assert np.allclose(pdf.intercept, 1.0, atol=1e-10)
-    assert np.allclose(pdf.slope, 2.0, atol=1e-10)
+    coef = EXACT_POLYS[degree]
+    value = " + ".join(f"{E.NUM(a)} * pow(CAST(t AS DOUBLE)/{n}, {i})" for i, a in enumerate(coef))
+    df = generators.base_grid(spark, 3, n).withColumn("value", F.expr(value))
+    pdf = decompose.trend_poly(df, degree).toPandas()
+    assert list(pdf.columns) == ["series_id", *[f"c{i}" for i in range(degree + 1)]]
+    for i, a in enumerate(coef):
+        assert np.allclose(pdf[f"c{i}"], a, rtol=0, atol=1e-10), (i, pdf[f"c{i}"].tolist())
 
 
 def test_decompose_additivity(spark):
@@ -93,21 +86,6 @@ def test_decompose_seasonality_orthogonal_to_kept_bins(spark):
         assert r[kept].max() < 1e-9  # no overlap between kept bins and residual
 
 
-def test_trend_quadratic_recovers_exact_parabola(spark):
-    # value = 1 - 2c + 0.5c^2 → closed-form Cramer fit recovers coefficients
-    n = 40
-    df = generators.base_grid(spark, 3, n).withColumn(
-        "value",
-        F.expr(
-            f"1.0e0 - 2.0e0 * (CAST(t AS DOUBLE)/{n}) + 5.0e-1 * pow(CAST(t AS DOUBLE)/{n}, 2)"
-        ),
-    )
-    pdf = decompose.trend_quadratic(df).toPandas()
-    assert np.allclose(pdf.c0, 1.0, atol=1e-8)
-    assert np.allclose(pdf.c1, -2.0, atol=1e-7)
-    assert np.allclose(pdf.c2, 0.5, atol=1e-7)
-
-
 def test_decompose_multichannel_additive_and_independent(spark):
     # composite-key decomposition: additivity holds per (series, channel),
     # and each channel's decomposition equals what that channel decomposes
@@ -127,26 +105,42 @@ def test_decompose_multichannel_additive_and_independent(spark):
     assert diff < 1e-10
 
 
-def test_trend_cubic_closed_form_matches_udf_solve(spark):
+@pytest.mark.parametrize("degree", [1, 2, 3])
+def test_trend_poly_closed_form_matches_lstsq(spark, degree):
     # Cramer closed form (pure Catalyst) vs a numpy least-squares fit of the
-    # same cubic design, solved on the driver: compare fitted values
+    # same design, solved on the driver: compare fitted values
     n = 48
     df = generators.generate(spark, 6, n, "linear_sum")
-    fitted = (
-        df.withColumn("cc", F.col("t").cast("double") / n)
-        .join(decompose.trend_cubic(df), "series_id")
-        .withColumn("trend_cf", F.expr(decompose.CUBIC_EVAL))
-        .toPandas()
+    A = np.vander(np.arange(n) / n, degree + 1, increasing=True)
+    coeffs = decompose.trend_poly(df, degree).toPandas().set_index("series_id")
+    for sid, g in df.toPandas().groupby("series_id"):
+        ref = np.linalg.lstsq(A, g.sort_values("t")["value"].to_numpy(), rcond=None)[0]
+        cf = coeffs.loc[sid, [f"c{i}" for i in range(degree + 1)]].to_numpy(dtype=float)
+        assert np.allclose(A @ cf, A @ ref, rtol=0, atol=1e-7), sid
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 4])
+def test_cramer_exprs_matches_numpy_solve(n):
+    # the shared Cramer text on a random well-conditioned (diagonally
+    # dominant) n×n system, evaluated in DuckDB, equals np.linalg.solve
+    import duckdb
+
+    rng = np.random.default_rng(n)
+    A = rng.uniform(-1, 1, (n, n)) + n * np.eye(n)
+    b = rng.uniform(-1, 1, n)
+    syms = [[f"a{i}{j}" for j in range(n)] for i in range(n)]
+    rhs = [f"r{i}" for i in range(n)]
+    e = decompose.cramer_exprs(syms, rhs)
+    inputs = ", ".join(
+        f"{E.NUM(v)} AS {name}" for v, name in zip([*A.ravel(), *b], [*sum(syms, []), *rhs])
     )
-    A = np.vander(np.arange(n) / n, 4, increasing=True)
-    for sid, g in fitted.groupby("series_id"):
-        g = g.sort_values("t")
-        coef = np.linalg.lstsq(A, g["value"].to_numpy(), rcond=None)[0]
-        assert np.allclose(g["trend_cf"], A @ coef, rtol=0, atol=1e-7), sid
+    coefs = ", ".join(e[f"c{i}"] for i in range(n))
+    got = duckdb.sql(f"SELECT {coefs} FROM (SELECT {inputs})").fetchone()
+    assert np.allclose(got, np.linalg.solve(A, b), rtol=0, atol=1e-9)
 
 
 def test_theilsen_robust_to_outliers_where_ols_is_not(spark):
-    from tsgen.decompose import trend_linear, trend_theilsen
+    from tsgen.decompose import trend_poly, trend_theilsen
 
     # clean line y = 2t + 1 with ONE massive outlier
     ys = [2.0 * t + 1.0 for t in range(40)]
@@ -155,11 +149,10 @@ def test_theilsen_robust_to_outliers_where_ols_is_not(spark):
     df = spark.createDataFrame(rows, "series_id long, t long, value double")
     ts = trend_theilsen(df).collect()[0]
     assert abs(ts.ts_slope - 2.0) < 0.05       # Theil-Sen shrugs it off
-    ols = trend_linear(df).collect()[0]
-    b1 = [v for k, v in ols.asDict().items() if k.startswith("b1") or k == "slope"]
-    # OLS slope is dragged far from 2 by the outlier (robustness contrast)
-    if b1:
-        assert abs(b1[0] - 2.0) > 1.0
+    ols = trend_poly(df, 1).collect()[0]
+    # OLS slope is dragged far from 2 by the outlier (robustness contrast);
+    # c1 is per unit of c = t/40, so c1 / 40 is the slope per unit t (11.38)
+    assert abs(ols.c1 / 40 - 2.0) > 1.0
 
 
 def test_ts_strength_separates_trend_from_seasonal_series(spark):

@@ -8,7 +8,6 @@ partition invariance of the rounded-before-rank pipeline.
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 
 def test_ivfpq_recall_exact_when_lossless(spark):

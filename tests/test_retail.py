@@ -60,7 +60,6 @@ def test_basket_rules_counts_and_lift(spark):
 
 
 def test_supplier_hhi_monopoly_vs_uniform(spark):
-    from pyspark.sql import functions as F
 
     from tsgen.queries_retail import supplier_hhi
 

@@ -4,7 +4,7 @@ SQL oracle."""
 import math
 
 import numpy as np
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from tsgen import generators
 from tsgen.queries_statemodels import (

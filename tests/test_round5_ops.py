@@ -2,8 +2,6 @@
 BM25 nDCG@k eval, LPA early-exit equivalence."""
 import math
 
-from pyspark.sql import functions as F
-
 from tsgen.queries_exactdup import substring_dup_spans
 from tsgen.queries_tokenizer import bm25_ndcg
 

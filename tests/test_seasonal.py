@@ -162,10 +162,8 @@ def test_spectral_entropy_tone_below_noise(spark):
     # pseudo-noise series spreads it (entropy_norm near 1)
     import numpy as np
 
-    from tsgen.queries_decompose import _q_spectral_entropy
     from tsgen import spectral
     from pyspark.sql import functions as F
-    from tsgen.queries import roundn
 
     t = np.arange(64)
     tone = np.sin(2 * np.pi * 4 * t / 64)
@@ -217,7 +215,6 @@ def test_period_detects_planted_cycle(spark):
     from tsgen.queries_seasonal import ACF_MAX_LAG, ACF_MIN_LAG  # noqa: F401
     import numpy as np
     from pyspark.sql import functions as F, Window
-    from tsgen.queries_seasonal import _q_period  # registry form uses generators
 
     # direct check on a constructed series: period-12 sawtooth + tiny ripple
     t = np.arange(96)

@@ -1,6 +1,5 @@
 """Round-4 depth ops: PLSA topics, matrix-profile motifs/discords."""
 import numpy as np
-from pyspark.sql import functions as F
 
 from tsgen import generators
 from tsgen.queries_seasonal import MOTIF_K, MP_M, matrix_profile, motif_topk

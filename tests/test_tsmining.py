@@ -6,7 +6,6 @@ import datetime
 import math
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from tsgen import dedup

@@ -419,7 +419,6 @@ def test_kalman_matches_scalar_reference(spark):
 
 def test_sql_api_matches_dataframe_path(spark):
     from tsgen import sqlapi
-    from tsgen.queries import registry
 
     sf = "/root/testdata/sf0.001"
     got = sqlapi.sql(

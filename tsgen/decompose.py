@@ -9,12 +9,12 @@ modes (FourierSynthesisLayer, :242-289). The learned projections are HOW the
 model approximates this; the engine computes the closed-form analogs:
 
 - trend: per-series least-squares polynomial fit. Inside `decompose` it is
-  a projection onto the cached polynomial basis; as coefficients it is
-  *moment aggregation* (sums of c^i and c^i·x — a partial-aggregated
-  groupBy, the cheapest distributed form) solved in closed form by Cramer's
-  rule (`trend_linear`, `trend_quadratic`, `trend_cubic`), the same SQL
-  text the DuckDB oracle runs.
-- seasonality: FFT top-k of the detrended signal.
+  a projection onto the cached polynomial basis; as coefficients,
+  `trend_poly(df, degree)` is *moment aggregation* (sums of c^i and c^i·x —
+  a partial-aggregated groupBy, the cheapest distributed form) solved in
+  closed form by Cramer's rule (`cramer_exprs`), the same SQL text the
+  DuckDB oracle runs.
+- seasonality: FFT top-k of the detrended signal (`topk_seasonality`).
 - residual: remainder (G7).
 
 `decompose` runs trend+seasonality+residual in ONE mapInPandas pass after a
@@ -29,7 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .spectral import stack_by_length, topk_filter_mask
+from .spectral import stack_by_length
 
 DEFAULT_DEGREE = 3  # poly_degree, config.json:22
 DEFAULT_TOP_K = 4  # top_k_freq, config.json:21
@@ -52,6 +52,21 @@ def _trend_basis(n: int, degree: int) -> tuple[np.ndarray, np.ndarray]:
     return basis
 
 
+def topk_seasonality(R: np.ndarray, top_k: int) -> np.ndarray:
+    """Seasonality of every row of an (m, n) batch: the top_k
+    largest-|amplitude| rfft bins (per-row argpartition; torch.topk in
+    FourierSynthesisLayer, diffusion_ts_model.py:277-286), inverted with
+    irfft. Bins of exactly equal magnitude tie in argpartition's order."""
+    n = R.shape[1]
+    spec = np.fft.rfft(R, axis=1)
+    mag = np.abs(spec)
+    kk = min(top_k, spec.shape[1])
+    idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
+    mask = np.zeros_like(mag)
+    np.put_along_axis(mask, idx, 1.0, axis=1)
+    return np.fft.irfft(spec * mask, n=n, axis=1)
+
+
 def trend_seasonality(X: np.ndarray, degree: int, top_k: int) -> tuple[np.ndarray, np.ndarray]:
     """(trend, seasonality) of every row of a stacked (m, n) batch — the
     x̂₀ = trend + seasonality estimate that `decompose` emits and the fused
@@ -60,19 +75,11 @@ def trend_seasonality(X: np.ndarray, degree: int, top_k: int) -> tuple[np.ndarra
     trend: the least-squares polynomial fit, applied as the factored
     rank-(degree+1) projection (X·pinv(A)ᵀ)·Aᵀ — 2·m·n·(degree+1) flops
     instead of the m·n² of the dense n×n A·pinv(A).
-    seasonality: the top_k largest-|amplitude| rfft bins of the detrended
-    rows (per-row argpartition), inverted with irfft.
+    seasonality: `topk_seasonality` of the detrended rows.
     """
-    n = X.shape[1]
-    At, Ainv_t = _trend_basis(n, degree)
+    At, Ainv_t = _trend_basis(X.shape[1], degree)
     trend = (X @ Ainv_t) @ At
-    spec = np.fft.rfft(X - trend, axis=1)
-    mag = np.abs(spec)
-    kk = min(top_k, spec.shape[1])
-    idx = np.argpartition(-mag, kk - 1, axis=1)[:, :kk]
-    mask = np.zeros_like(mag)
-    np.put_along_axis(mask, idx, 1.0, axis=1)
-    return trend, np.fft.irfft(spec * mask, n=n, axis=1)
+    return trend, topk_seasonality(X - trend, top_k)
 
 
 def decompose(
@@ -134,145 +141,80 @@ def extract_seasonality(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("t")
-        x = pdf[value_col].to_numpy()
-        spec = np.fft.rfft(x)
-        seas = np.fft.irfft(spec * topk_filter_mask(spec, top_k), n=len(x))
+        seas = topk_seasonality(pdf[value_col].to_numpy()[None, :], top_k)[0]
         return pd.DataFrame({key: pdf[key].iloc[0], "t": pdf["t"].to_numpy(), "seasonality": seas})
 
     return df.select(key, "t", value_col).groupBy(key).applyInPandas(fn, schema)
 
 
-def trend_linear(df: DataFrame, value_col: str = "value", key: str = "series_id") -> DataFrame:
-    """Degree-1 trend in closed form — pure Catalyst aggregations (no UDF),
-    and therefore DuckDB-oracle-checkable. Basis c = t/seq_len.
-
-    slope = cov(c,x)/var(c); intercept = mean(x) − slope·mean(c).
-    Returns per-series (intercept, slope).
-    """
-    # computed via grouped sums so the whole thing is one partial-agg shuffle
-    g = df.groupBy(key).agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("t").cast("double")).alias("st"),
-        F.sum(F.col("t").cast("double") * F.col("t")).alias("stt"),
-        F.sum(value_col).alias("sx"),
-        F.sum(F.col("t").cast("double") * F.col(value_col)).alias("stx"),
+def det_expr(m: list[list[str]]) -> str:
+    """Determinant of a square matrix of SQL symbols as shared SQL text:
+    written out up to 3×3, a cofactor expansion along the first row above."""
+    n = len(m)
+    if n == 1:
+        return f"({m[0][0]})"
+    if n == 2:
+        (a, b), (c, d) = m
+        return f"({a}*{d} - {b}*{c})"
+    if n == 3:
+        (a, b, c), (d, e, f), (g, h, i) = m
+        return f"({a}*({e}*{i} - {f}*{h}) - {b}*({d}*{i} - {f}*{g}) + {c}*({d}*{h} - {e}*{g}))"
+    terms = (
+        f"{'+-'[j % 2]} {m[0][j]}*{det_expr([r[:j] + r[j + 1:] for r in m[1:]])}"
+        for j in range(n)
     )
-    # work in basis c = t/n: slope_c = slope_t * n, etc.
-    slope_t = (F.col("n") * F.col("stx") - F.col("st") * F.col("sx")) / (
-        F.col("n") * F.col("stt") - F.col("st") * F.col("st")
-    )
-    intercept = (F.col("sx") - slope_t * F.col("st")) / F.col("n")
-    return g.select(
-        key,
-        intercept.alias("intercept"),
-        (slope_t * F.col("n")).alias("slope"),  # slope w.r.t. c = t/n
-    )
-
-
-def quad_trend_sql_exprs() -> dict[str, str]:
-    """Degree-2 least squares in CLOSED FORM (Cramer's rule on the 3×3
-    normal equations) over moment columns m0..m4, b0..b2 — shared SQL text
-    for both engines; no UDF anywhere.
-
-    A = [[m0,m1,m2],[m1,m2,m3],[m2,m3,m4]], rhs = [b0,b1,b2];
-    c_i = det(A with column i replaced by rhs) / det(A).
-    """
-    D = det3_expr("m0", "m1", "m2", "m1", "m2", "m3", "m2", "m3", "m4")
-    D0 = det3_expr("b0", "m1", "m2", "b1", "m2", "m3", "b2", "m3", "m4")
-    D1 = det3_expr("m0", "b0", "m2", "m1", "b1", "m3", "m2", "b2", "m4")
-    D2 = det3_expr("m0", "m1", "b0", "m1", "m2", "b1", "m2", "m3", "b2")
-    return {"det": D, "c0": f"({D0} / {D})", "c1": f"({D1} / {D})", "c2": f"({D2} / {D})"}
-
-
-def trend_quadratic(df: DataFrame, value_col: str = "value", key: str = "series_id") -> DataFrame:
-    """Degree-2 polynomial trend coefficients per series, pure Catalyst:
-    one partial-agg shuffle for the moments, then closed-form Cramer
-    expressions (quad_trend_sql_exprs — the identical text runs in the
-    DuckDB oracle). Basis c = t/n as in _poly_design."""
-    # per-series length via window count over the one hash(key) exchange —
-    # the groupBy + join-back form re-evaluated df per branch (recompute
-    # census); _n is an exact integer, so values are unchanged
-    j = df.withColumn("_n", F.count("*").over(Window.partitionBy(key)))
-    c = F.col("t").cast("double") / F.col("_n")
-    g = j.groupBy(key).agg(
-        F.count("*").cast("double").alias("m0"),
-        F.sum(c).alias("m1"),
-        F.sum(c * c).alias("m2"),
-        F.sum(c * c * c).alias("m3"),
-        F.sum(c * c * c * c).alias("m4"),
-        F.sum(F.col(value_col)).alias("b0"),
-        F.sum(c * F.col(value_col)).alias("b1"),
-        F.sum(c * c * F.col(value_col)).alias("b2"),
-    )
-    e = quad_trend_sql_exprs()
-    return g.select(
-        key, F.expr(e["c0"]).alias("c0"), F.expr(e["c1"]).alias("c1"), F.expr(e["c2"]).alias("c2")
-    )
-
-
-def det3_expr(a, b, c, d, e, f, g, h, i) -> str:
-    """3×3 determinant as shared SQL text over column symbols."""
-    return (
-        f"({a}*({e}*{i} - {f}*{h}) - {b}*({d}*{i} - {f}*{g}) + {c}*({d}*{h} - {e}*{g}))"
-    )
-
-
-def det4_expr(m: list[list[str]]) -> str:
-    """4×4 determinant (cofactor expansion along the first row)."""
-    terms = []
-    for j, sign in zip(range(4), ("+", "-", "+", "-")):
-        sub = [[r[k] for k in range(4) if k != j] for r in m[1:]]
-        terms.append(f"{sign} {m[0][j]}*{det3_expr(*sub[0], *sub[1], *sub[2])}")
     return "(" + " ".join(terms) + ")"
 
 
-def cramer4_exprs(A: list[list[str]], rhs: list[str]) -> dict[str, str]:
-    """Solve A·w = rhs in closed form (Cramer's rule) over symbolic 4×4
-    entries — returns {'det': ..., 'c0'..'c3': ...} as SQL text usable
-    identically in Spark and DuckDB (bit-equal given bit-equal inputs)."""
-    D = det4_expr(A)
-    out = {"det": D}
-    for i in range(4):
-        Ai = [list(row) for row in A]
-        for r in range(4):
-            Ai[r][i] = rhs[r]
-        out[f"c{i}"] = f"({det4_expr(Ai)} / {D})"
-    return out
+def cramer_exprs(A: list[list[str]], rhs: list[str]) -> dict[str, str]:
+    """Solve A·w = rhs in closed form (Cramer's rule) over symbolic n×n
+    entries — returns {'c0'..'c{n-1}': ...} as SQL text usable identically
+    in Spark and DuckDB (bit-equal given bit-equal inputs)."""
+    D = det_expr(A)
+    return {
+        f"c{i}": f"({det_expr([row[:i] + [r] + row[i + 1:] for row, r in zip(A, rhs)])} / {D})"
+        for i in range(len(A))
+    }
 
 
-def cubic_trend_sql_exprs() -> dict[str, str]:
-    """Degree-3 least squares in CLOSED FORM (Cramer's rule on the 4×4
-    normal equations) over moments m0..m6, b0..b3 — generalizes
-    quad_trend_sql_exprs; the identical text runs in both engines so the
-    results are bit-equal.
+def poly_moments_sql(degree: int, value_col: str = "value") -> list[str]:
+    """Select-list of the normal-equation moments of a degree-`degree` fit
+    over the basis column `cc`: m_k = Σcc^k (k ≤ 2·degree) and
+    b_k = Σcc^k·value (k ≤ degree) — the one text trend_poly aggregates and
+    the DuckDB oracles run."""
+    ms = [f"sum({'*'.join(['cc'] * i)}) AS m{i}" for i in range(1, 2 * degree + 1)]
+    bs = [f"sum({'*'.join(['cc'] * i + [value_col])}) AS b{i}" for i in range(degree + 1)]
+    return ["CAST(count(*) AS DOUBLE) AS m0", *ms, *bs]
 
-    A[i][j] = m_{i+j} (i,j ≤ 3), rhs = [b0..b3].
-    """
-    A = [[f"m{i + j}" for j in range(4)] for i in range(4)]
-    return cramer4_exprs(A, ["b0", "b1", "b2", "b3"])
+
+def poly_coef_exprs(degree: int) -> dict[str, str]:
+    """Degree-`degree` least squares in CLOSED FORM: Cramer's rule on the
+    normal equations A[i][j] = m_{i+j}, rhs b_i over the poly_moments_sql
+    aliases → {'c0'..'c{degree}'} as shared SQL text."""
+    d = range(degree + 1)
+    return cramer_exprs([[f"m{i + j}" for j in d] for i in d], [f"b{i}" for i in d])
 
 
 # per-point cubic evaluation — SHARED text (identical parse tree both engines)
 CUBIC_EVAL = "(c0 + c1*cc + c2*(cc*cc) + c3*(cc*cc*cc))"
 
 
-def trend_cubic(df: DataFrame, value_col: str = "value", key: str = "series_id") -> DataFrame:
-    """Degree-3 polynomial trend coefficients per series, pure Catalyst (no
-    UDF): one partial-agg shuffle for the moments m0..m6 / b0..b3, then the
-    closed-form Cramer expressions (cubic_trend_sql_exprs — identical text in
-    the DuckDB oracle). Basis c = t/n as in _poly_design."""
-    j = df.withColumn(
-        "_n", F.count("*").over(Window.partitionBy(key))
-    ).withColumn("cc", F.col("t").cast("double") / F.col("_n"))
-    aggs = [F.expr("CAST(count(*) AS DOUBLE)").alias("m0")]
-    for i in range(1, 7):
-        aggs.append(F.expr("sum(" + "*".join(["cc"] * i) + ")").alias(f"m{i}"))
-    for i in range(4):
-        prod = "*".join(["cc"] * i + [value_col]) if i else value_col
-        aggs.append(F.expr(f"sum({prod})").alias(f"b{i}"))
-    g = j.groupBy(key).agg(*aggs)
-    e = cubic_trend_sql_exprs()
-    return g.select(key, *[F.expr(e[f"c{i}"]).alias(f"c{i}") for i in range(4)])
+def trend_poly(
+    df: DataFrame, degree: int, value_col: str = "value", key: str = "series_id"
+) -> DataFrame:
+    """Polynomial trend coefficients per series → (key, c0..c_degree) in
+    the basis c = t/n of _poly_design, pure Catalyst (no UDF): one
+    partial-agg shuffle for the moments (poly_moments_sql), then the
+    closed-form Cramer expressions (poly_coef_exprs) — the identical text
+    runs in the DuckDB oracles."""
+    # per-series length via window count over the one hash(key) exchange —
+    # the groupBy + join-back form re-evaluated df per branch (recompute
+    # census); _n is an exact integer, so values are unchanged
+    j = df.withColumn("_n", F.count("*").over(Window.partitionBy(key))).withColumn(
+        "cc", F.col("t").cast("double") / F.col("_n")
+    )
+    g = j.groupBy(key).agg(*map(F.expr, poly_moments_sql(degree, value_col)))
+    return g.select(key, *[F.expr(v).alias(c) for c, v in poly_coef_exprs(degree).items()])
 
 
 def trend_theilsen(
@@ -288,8 +230,6 @@ def trend_theilsen(
     exact type-1 rank over each series' own pair set (window partitioned by
     series — parallelism = series count). Intercept = median(y) − slope ·
     median(t) (the Siegel form), same rank machinery."""
-    from pyspark.sql import Window
-
     # four branches read df (both pair sides + the y/t medians): pin it,
     # or each branch re-runs the upstream lineage (recompute census: x8)
     df = df.localCheckpoint(eager=False)

@@ -20,7 +20,10 @@ N_D, LEN_D = 12, 64
 
 def _q_trend_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = generators.generate(spark, N_D, LEN_D, "linear_sum")
-    return round6(decompose.trend_linear(df), "intercept", "slope")
+    # the degree-1 fit under the column names of the t-basis oracle formula
+    coeffs = decompose.trend_poly(df, 1)
+    out = coeffs.select("series_id", F.col("c0").alias("intercept"), F.col("c1").alias("slope"))
+    return round6(out, "intercept", "slope")
 
 
 def _trend_linear_sql() -> str:
@@ -37,6 +40,12 @@ def _trend_linear_sql() -> str:
     )
 
 
+# the cubic fit's moment and coefficient select-lists, as every cubic
+# oracle (trend_poly3, the decompose chain, the sampling loop) runs them
+_CUBIC_MOMENTS = ", ".join(decompose.poly_moments_sql(3))
+_CUBIC_COEFS = ", ".join(f"{v} AS {c}" for c, v in decompose.poly_coef_exprs(3).items())
+
+
 def _q_trend_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # closed-form degree-3 fit (Cramer, no UDF) evaluated per point — the
     # identical expression text runs in the DuckDB oracle, turning the last
@@ -44,7 +53,7 @@ def _q_trend_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form with a numpy least-squares fit is unit-tested.
     # pin: the coefficient fit and the per-point evaluation both read df
     df = generators.generate(spark, N_D, LEN_D, "linear_sum").localCheckpoint(eager=False)
-    coeffs = decompose.trend_cubic(df)
+    coeffs = decompose.trend_poly(df, 3)
     out = (
         df.withColumn("cc", F.col("t").cast("double") / F.lit(float(LEN_D)))
         .join(coeffs, "series_id")
@@ -56,21 +65,11 @@ def _q_trend_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _trend_poly3_sql() -> str:
     gen = oracle.generate_sql(N_D, LEN_D, "linear_sum", rounded=False)
-    e = decompose.cubic_trend_sql_exprs()
     cc = f"CAST(t AS DOUBLE)/{LEN_D}"
-    moments = ", ".join(
-        f"sum({'*'.join(['cc'] * i)}) AS m{i}" for i in range(1, 7)
-    )
-    bs = ", ".join(
-        f"sum({'*'.join(['cc'] * i + ['value']) if i else 'value'}) AS b{i}"
-        for i in range(4)
-    )
     return (
         f"WITH s AS (SELECT series_id, t, value, {cc} AS cc FROM ({gen})), "
-        f"g AS (SELECT series_id, CAST(count(*) AS DOUBLE) AS m0, {moments}, {bs} "
-        "FROM s GROUP BY series_id), "
-        f"co AS (SELECT series_id, {e['c0']} AS c0, {e['c1']} AS c1, "
-        f"{e['c2']} AS c2, {e['c3']} AS c3 FROM g) "
+        f"g AS (SELECT series_id, {_CUBIC_MOMENTS} FROM s GROUP BY series_id), "
+        f"co AS (SELECT series_id, {_CUBIC_COEFS} FROM g) "
         f"SELECT s.series_id, s.t, {E.round6(decompose.CUBIC_EVAL)} AS trend "
         "FROM s JOIN co ON s.series_id = co.series_id"
     )
@@ -173,12 +172,6 @@ def _decompose_chain_sql(gen: str, keys: str, seq_len: int = LEN_D, rounded: boo
     # brute-DFT top-4 seasonality of the detrended + exact residual;
     # `keys` is the comma-joined decomposition key ("series_id" or
     # "series_id, channel" for the dim>1 contract)
-    e = decompose.cubic_trend_sql_exprs()
-    moments = ", ".join(f"sum({'*'.join(['cc'] * i)}) AS m{i}" for i in range(1, 7))
-    bs = ", ".join(
-        f"sum({'*'.join(['cc'] * i + ['value']) if i else 'value'}) AS b{i}"
-        for i in range(4)
-    )
     w = f"{2 * 3.141592653589793 / seq_len:.17e}"
     nbins = seq_len // 2 + 1
     kl = [x.strip() for x in keys.split(",")]
@@ -189,8 +182,8 @@ def _decompose_chain_sql(gen: str, keys: str, seq_len: int = LEN_D, rounded: boo
     rv = E.round6 if rounded else (lambda x: f"({x})")
     return f"""
 WITH s AS (SELECT {sk}, t, value, CAST(t AS DOUBLE)/{seq_len} AS cc FROM ({gen})),
-g AS (SELECT {sk}, CAST(count(*) AS DOUBLE) AS m0, {moments}, {bs} FROM s GROUP BY {sk}),
-co AS (SELECT {sk}, {e['c0']} AS c0, {e['c1']} AS c1, {e['c2']} AS c2, {e['c3']} AS c3 FROM g),
+g AS (SELECT {sk}, {_CUBIC_MOMENTS} FROM s GROUP BY {sk}),
+co AS (SELECT {sk}, {_CUBIC_COEFS} FROM g),
 tr AS (
   SELECT {sel_k('s')}, s.t, s.value, {decompose.CUBIC_EVAL} AS trend,
          s.value - {decompose.CUBIC_EVAL} AS det
@@ -332,12 +325,6 @@ def _sample_loop_sql(
     from . import diffusion
     from .schedules import duckdb_from_clause, schedule_sql
 
-    e = decompose.cubic_trend_sql_exprs()
-    moments = ", ".join(f"sum({'*'.join(['cc'] * i)}) AS m{i}" for i in range(1, 7))
-    bs = ", ".join(
-        f"sum({'*'.join(['cc'] * i + ['value']) if i else 'value'}) AS b{i}"
-        for i in range(4)
-    )
     w = f"{2 * 3.141592653589793 / seq_len:.17e}"
     nbins, nyq = seq_len // 2 + 1, seq_len // 2
     known = E.signal_expr("mixed", seq_len)
@@ -369,10 +356,8 @@ def _sample_loop_sql(
         p = f"d{t}_"
         ctes += [
             f"{p}s AS MATERIALIZED (SELECT series_id, t, x AS value, CAST(t AS DOUBLE)/{seq_len} AS cc FROM {cur})",
-            f"{p}g AS (SELECT series_id, CAST(count(*) AS DOUBLE) AS m0, {moments}, {bs} "
-            f"FROM {p}s GROUP BY series_id)",
-            f"{p}co AS (SELECT series_id, {e['c0']} AS c0, {e['c1']} AS c1, {e['c2']} AS c2, "
-            f"{e['c3']} AS c3 FROM {p}g)",
+            f"{p}g AS (SELECT series_id, {_CUBIC_MOMENTS} FROM {p}s GROUP BY series_id)",
+            f"{p}co AS (SELECT series_id, {_CUBIC_COEFS} FROM {p}g)",
             f"{p}tr AS MATERIALIZED (SELECT s.series_id, s.t, s.value, {decompose.CUBIC_EVAL} AS trend, "
             f"s.value - {decompose.CUBIC_EVAL} AS det "
             f"FROM {p}s s JOIN {p}co co ON s.series_id = co.series_id)",
@@ -520,12 +505,12 @@ _REGISTRY.update(
 
 def _q_trend_quadratic(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = generators.generate(spark, N_D, LEN_D, "linear_sum")
-    return round6(decompose.trend_quadratic(df), "c0", "c1", "c2")
+    return round6(decompose.trend_poly(df, 2), "c0", "c1", "c2")
 
 
 def _trend_quadratic_sql() -> str:
     gen = oracle.generate_sql(N_D, LEN_D, "linear_sum", rounded=False)
-    e = decompose.quad_trend_sql_exprs()
+    e = decompose.poly_coef_exprs(2)
     return (
         f"WITH s AS ({gen}), g AS ("
         "SELECT series_id, CAST(count(*) AS DOUBLE) AS m0, "

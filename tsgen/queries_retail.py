@@ -21,7 +21,7 @@ Scale notes (100 TB):
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .io import read_table
 from .queries import _REGISTRY, Query, roundn

@@ -17,7 +17,7 @@ Scale shapes:
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from . import expr as E
 

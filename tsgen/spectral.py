@@ -67,14 +67,3 @@ def stack_by_length(
         sub = pdf[lengths == n]
         yield sub, [np.stack(sub[c].to_numpy()) for c in cols]
 
-
-def topk_filter_mask(spec: np.ndarray, k: int) -> np.ndarray:
-    """Zero all but the k largest-|amplitude| bins (diffusion_ts_model.py:277-286).
-
-    torch.topk keeps the k largest; ties broken by index order is
-    measure-zero for real signals.
-    """
-    k = min(k, len(spec))
-    mask = np.zeros(len(spec))
-    mask[np.argsort(-np.abs(spec), kind="stable")[:k]] = 1.0
-    return mask

@@ -13,7 +13,7 @@ EXACT least-squares solve, fully distributed and DuckDB-oracle-checkable:
    b = Σ φε, and Σε² — 15 partial-aggregated sums, ONE shuffle of a single
    row regardless of input size (100 TB of training points still reduce to
    15 doubles).
-2. w = A⁻¹b via Cramer's rule as shared SQL text (decompose.cramer4_exprs —
+2. w = A⁻¹b via Cramer's rule as shared SQL text (decompose.cramer_exprs —
    the identical expression tree runs in both engines).
 3. train MSE comes from a second pass over the residuals ε − ε̂ with the
    solved weights. The algebraic identity Σ(ε−ε̂)² = Σε² − 2wᵀb + wᵀAw
@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .decompose import cramer4_exprs
+from .decompose import cramer_exprs
 
 # A = Σ φφᵀ with φ = [1, x, s, x·s], written over the aggregate aliases:
 #   a01=Σx a02=Σs a03=Σxs a11=Σx² a12=Σxs a13=Σx²s a22=Σs² a23=Σxs² a33=Σx²s²
@@ -47,7 +47,7 @@ def solver_exprs() -> dict[str, str]:
     """Shared Spark/DuckDB expression text: w0..w3 over the aggregate
     aliases, plus the no-second-pass MSE over (syy, b*, a*, w*) that the
     oracle SQL uses."""
-    e = cramer4_exprs(_A_SYMS, _RHS_SYMS)
+    e = cramer_exprs(_A_SYMS, _RHS_SYMS)
     out = {f"w{i}": e[f"c{i}"] for i in range(4)}
     quad = (
         "(w0*w0*a00 + w1*w1*a11 + w2*w2*a22 + w3*w3*a33"
