@@ -101,16 +101,41 @@ def test_dim1_headline_plans_unchanged_by_channel_threading(spark):
         return n_shuffle, n_broadcast, ("channel" in plan)
 
     g = generators.generate(spark, 100, 64, "linear_sum")
-    # znorm: per-series stats join back via broadcast — no data shuffle
-    assert shape(g) == (0, 1, False)
+    # znorm: a window over the range-clustered generator — no exchange at all
+    assert shape(g) == (0, 0, False)
 
     sched = schedule_table(spark, 500, "cosine")
     q = diffusion.q_sample(generators.generate(spark, 100, 64, "linear_sum"), sched, 500)
-    # one shuffle (schedule build side), schedule + znorm stats broadcast
-    assert shape(q) == (1, 2, False)
+    # one shuffle (schedule build side) and the schedule broadcast
+    assert shape(q) == (1, 1, False)
 
     d = decompose.decompose(generators.generate(spark, 100, 64, "mixed"))
-    # collect_list groupBy is AQE-deferred; visible: znorm stats broadcast
+    # collect_list groupBy is AQE-deferred; znorm adds no exchange
     n_shuffle, n_broadcast, has_channel = shape(d)
     assert (n_shuffle, has_channel) == (0, False)
-    assert n_broadcast == 1
+    assert n_broadcast == 0
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda s: generators.generate(s, 50, 32, "mixed"),
+        lambda s: generators.generate_labeled(s, 50, 32),
+        lambda s: generators.generate_multichannel(s, 50, 32, 3),
+    ],
+    ids=["generate", "generate_labeled", "generate_multichannel"],
+)
+def test_normalized_generator_plan_has_no_exchange_or_join(spark, build):
+    """z-norm over a generator runs the generator once: spark.range's
+    RangePartitioning(series_id) survives the explodes, so the per-series
+    window needs neither an Exchange nor a stats join.
+
+    generate_custom_decay with a user callable is exempt: its
+    ArrowEvalPython drops the partitioning, so the window costs one hash
+    Exchange there. That is still cheaper than a broadcast stats join, whose
+    stats side runs the pandas UDF a second time (2,000x512 on a 4-core
+    host, best of 6: 1.29 s against 1.52 s)."""
+    df = build(spark)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Join" not in plan, plan

@@ -17,6 +17,34 @@ def test_save_load_roundtrip(spark):
         assert (a.value - b.value).abs().max() < 1e-15
 
 
+def test_save_run_twice_keeps_the_second_config(spark, tmp_path):
+    import json
+
+    df = generators.generate(spark, 2, 8, "sine")
+    path = str(tmp_path / "run")
+    io.save_run(df, path, {"epoch": 1})
+    io.save_run(df, path, {"epoch": 2, "note": "über"})
+    assert io.load_run(spark, path)[1] == {"epoch": 2, "note": "über"}
+    # the sidecar is still the one-row JSON table Spark reads
+    rows = spark.read.json(f"{path}/config").collect()
+    assert [json.loads(r.config) for r in rows] == [{"epoch": 2, "note": "über"}]
+
+
+def test_load_run_reads_a_config_written_by_spark(spark, tmp_path):
+    # the sidecar as a Spark json job writes it (older checkpoints): UTF-8
+    # text, part files named part-<n>-<uuid>-c000.json, empty ones for empty
+    # partitions, plus _SUCCESS and .crc files
+    import json
+
+    path = str(tmp_path / "run")
+    io.save_series(generators.generate(spark, 2, 8, "sine"), f"{path}/data")
+    cfg = {"family": "sine", "n": 2, "name": "ß"}
+    spark.createDataFrame([(json.dumps(cfg, ensure_ascii=False),)], "config string").write.json(
+        f"{path}/config"
+    )
+    assert io.load_run(spark, path)[1] == cfg
+
+
 def test_entry_contract(spark):
     import __spark_entry__ as m
 

@@ -132,22 +132,49 @@ def save_run(
 ) -> None:
     """Checkpoint = data + the config that produced it (the reference stores
     {model_state, config}; our deterministic analog stores the generated
-    table + generation parameters as table properties via a sidecar)."""
+    table as parquet under `{path}/data` plus a sidecar
+    `{path}/config/part-00000.json`: one JSON line `{"config": "<json>"}`
+    written on the driver through the path's Hadoop FileSystem, with no
+    Spark job. `spark.read.json` reads it as the one-row table that older
+    checkpoints wrote with a Spark job."""
     import json
 
     save_series(df, f"{path}/data")
-    spark = df.sparkSession
-    spark.createDataFrame([(json.dumps(config),)], "config string").coalesce(1).write.mode(
-        "overwrite"
-    ).json(f"{path}/config")
+    fs, part = _hadoop_fs(df.sparkSession, f"{path}/config/part-00000.json")
+    fs.delete(part.getParent(), True)
+    out = fs.create(part)
+    try:
+        line = json.dumps({"config": json.dumps(config)}, separators=(",", ":")) + "\n"
+        out.write(bytearray(line.encode()))
+    finally:
+        out.close()
 
 
 def load_run(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
+    """Read a `save_run` checkpoint. The sidecar is read on the driver: the
+    first line of the first non-empty `part-*.json` under `{path}/config`
+    (a config written by a Spark json job may leave empty part files of
+    empty partitions ahead of it)."""
     import json
 
     df = load_series(spark, f"{path}/data")
-    cfg_row = spark.read.json(f"{path}/config").collect()[0]
-    return df, json.loads(cfg_row.config)
+    fs, pattern = _hadoop_fs(spark, f"{path}/config/part-*.json")
+    jvm = spark._jvm
+    for part in sorted((st.getPath() for st in fs.globStatus(pattern)), key=lambda p: p.getName()):
+        reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(fs.open(part), "UTF-8"))
+        try:
+            line = reader.readLine()
+        finally:
+            reader.close()
+        if line:
+            return df, json.loads(json.loads(line)["config"])
+    raise FileNotFoundError(f"no config line under {path}/config")
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem of `path`, its Path object)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
 # --- generic source/sink formats (engine extension) ------------------------

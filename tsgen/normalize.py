@@ -3,41 +3,38 @@
 torch Tensor.std() is sample std (ddof=1) → stddev_samp, and the reference
 adds 1e-8 to the denominator.
 
-Implementation choice (scale): a groupBy partial aggregation (map-side
-combine → tiny per-series stats table) + equi-join back beats an unbounded
-window, because the window needs a full sort of every row within each
-partition while the join only hashes. When the stats side is small enough
-Spark/AQE turns the join into a broadcast and the BIG side is never
-shuffled at all — the whole generator+znorm pipeline then has exactly one
-tiny shuffle (the 3-doubles-per-series aggregate). The oracle's
-znorm_sql uses the window form, which has the same semantics.
+Implementation choice: an unbounded window over the key, the same form as
+the oracle's `znorm_sql`. Every generator input (`generate`,
+`generate_labeled`, `generate_multichannel` and the built-in
+`generate_custom_decay`) is `Range → Generate`: `spark.range` reports
+`RangePartitioning(series_id)`, which survives the alias and the explodes,
+so each series already sits whole in one partition. The window's required
+distribution is then met as is — no `Exchange`, only a per-partition sort —
+and the plan is `Range → Generate → Project → Sort → Window`. The generator
+runs once. A groupBy stats table joined back would evaluate the whole
+generator expression twice (stats side and main side) and run a separate
+broadcast job, for bit-identical output.
+
+Two normalized inputs are not range-clustered. `queries.flagship`'s hourly
+events series gets one hash `Exchange` on the key, which the `decompose`
+groupBy that follows reuses: the flagship plan has 16 exchanges (4 of them
+broadcasts) against 23 (7) with a stats join. A user-callable
+`generate_custom_decay` also gets one, because its `ArrowEvalPython` drops
+the partitioning.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 EPS = 1e-8
 
 
-def znorm(
-    df: DataFrame,
-    value_col: str = "value",
-    key: str | list[str] = "series_id",
-    broadcast_stats: bool = True,
-) -> DataFrame:
-    """broadcast_stats=False for corpora whose per-key stats table is itself
-    too large to broadcast (>~100M keys) — falls back to a shuffle hash join
-    on the key, which is the same single shuffle a window form would cost."""
-    keys = [key] if isinstance(key, str) else list(key)
-    stats = df.groupBy(*keys).agg(
-        F.avg(value_col).alias("_mu"), F.stddev_samp(value_col).alias("_sd")
-    )
-    if broadcast_stats:
-        stats = F.broadcast(stats)
-    return (
-        df.join(stats, keys)
-        .withColumn(value_col, (F.col(value_col) - F.col("_mu")) / (F.col("_sd") + F.lit(EPS)))
-        .drop("_mu", "_sd")
+def znorm(df: DataFrame, value_col: str = "value", key: str | list[str] = "series_id") -> DataFrame:
+    w = Window.partitionBy(key)
+    return df.withColumn(
+        value_col,
+        (F.col(value_col) - F.avg(value_col).over(w))
+        / (F.stddev_samp(value_col).over(w) + F.lit(EPS)),
     )
 
 
