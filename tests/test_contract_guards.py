@@ -6,7 +6,8 @@ silently replacing a query (the r10 dedup_incremental shadowing lesson), an
 oracle SQL string that no longer parses after an edit (the full sweep would
 catch it too, but this runs in seconds inside pytest), a test module that
 defines one test name twice, a module that reads a testdata table past
-`io.read_table`, or an import that nothing reads.
+`io.read_table`, a session built past `session.get_spark`, or an import
+that nothing reads.
 """
 from __future__ import annotations
 
@@ -142,6 +143,26 @@ def test_testdata_tables_are_read_through_read_table():
             if 'read.parquet(f"{sf_dir}' in line and (path.name, line) not in RAW_SCHEMA_READS:
                 bad.append(f"{path.name}:{n}: {line}")
     assert not bad, "\n".join(bad)
+
+
+def test_sessions_are_built_by_get_spark():
+    """`get_spark` is the one caller of `SparkSession.builder`, so every
+    session gets its settings, the Python-worker daemon among them."""
+    bad = []
+    paths = [*ROOT.glob("*.py")]
+    for d in ("tsgen", "tools", "examples", "tests"):
+        paths += (ROOT / d).rglob("*.py")
+    for path in sorted(paths):
+        if path == ROOT / "tsgen" / "session.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "builder"
+                and ast.unparse(node.value).split(".")[-1] == "SparkSession"
+            ):
+                bad.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert not bad, "SparkSession.builder outside tsgen/session.py:\n" + "\n".join(bad)
 
 
 def _unused_imports(path: Path) -> list[str]:

@@ -177,3 +177,24 @@ def test_visualize_diffusion_process_headless_guard(spark):
     else:
         with pytest.raises(NotImplementedError):
             viz.visualize_diffusion_process([], "/tmp/x.png")
+
+
+def test_sampler_build_collects_each_schedule_once(spark):
+    # the schedule rows are memoized per (T, kind): a second build with the
+    # same pair runs no Spark job, and a different T collects its own rows
+    sc = spark.sparkContext
+
+    def jobs_of_build(group, timesteps):
+        sc.setJobGroup(group, group)
+        try:
+            diffusion.sample_fused(spark, 2, 8, timesteps=timesteps, kind="linear")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_of_build("schedule_memo.first", 11) > 0
+    assert jobs_of_build("schedule_memo.again", 11) == 0
+    assert jobs_of_build("schedule_memo.other_t", 13) > 0
+    for T in (11, 13):
+        want = {r.t_step: r.asDict() for r in schedule_table(spark, T, "linear").collect()}
+        assert diffusion._SCHEDULE_ROWS[(T, "linear")] == want

@@ -1,6 +1,9 @@
-"""Persistence round-trip (SURVEY §2 A5) and flagship entry smoke."""
+"""Persistence round-trip (SURVEY §2 A5) and the flagship entry."""
 import tempfile
+from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from tsgen import generators, io
@@ -57,6 +60,56 @@ def test_entry_contract(spark):
     # at minimum each is finite and non-negative
     for r in rows:
         assert r.trend_frac >= 0 and r.seas_frac >= 0 and r.resid_frac >= 0
+
+
+def _flagship_by_hand(spark, sf_dir: str) -> dict:
+    """(source, series_key) → (n_points, total_var, trend_frac, seas_frac,
+    resid_frac) of `queries.flagship`, recomputed outside its plan: pandas
+    for the hourly events series and the z-norm, `trend_seasonality` on the
+    stacked numpy rows, and flagship's 6-dp rounding (+1e-9 nudge, half up)."""
+    from tsgen.decompose import DEFAULT_DEGREE, DEFAULT_TOP_K, trend_seasonality
+    from tsgen.normalize import EPS
+
+    ev = pd.read_parquet(f"{sf_dir}/events.parquet")
+    hourly = (
+        ev.assign(bucket=ev.ts.dt.floor("h")).groupby(["event_type", "bucket"]).value.mean()
+    )
+    series = [("events", k, g.sort_index().to_numpy()) for k, g in hourly.groupby(level=0)]
+    syn = generators.generate(spark, 16, 128, "linear_sum", normalize=False).toPandas()
+    for sid, g in syn.groupby("series_id"):
+        series.append(("synthetic", f"synthetic_{sid}", g.sort_values("t").value.to_numpy()))
+
+    def r6(x):
+        return float(Decimal(repr(x + 1e-9)).quantize(Decimal("1e-6"), ROUND_HALF_UP)) + 0.0
+
+    want = {}
+    for n in {len(v) for *_, v in series}:
+        group = [(src, key, v) for src, key, v in series if len(v) == n]
+        X = np.stack([(v - v.mean()) / (v.std(ddof=1) + EPS) for *_, v in group])
+        trend, seas = trend_seasonality(X, DEFAULT_DEGREE, DEFAULT_TOP_K)
+        var = X.var(axis=1, ddof=1)
+        for i, (src, key, _) in enumerate(group):
+            fracs = [c[i].var(ddof=1) / var[i] for c in (trend, seas, X - trend - seas)]
+            want[(src, key)] = (n, *(r6(x) for x in (var[i], *fracs)))
+    return want
+
+
+def test_flagship_values_match_an_independent_recompute(spark):
+    import inspect
+
+    from tsgen.queries import flagship
+
+    sf_dir = inspect.signature(flagship).parameters["sf_dir"].default  # the entry's tables
+    got = {
+        (r.source, r.series_key): (r.n_points, r.total_var, r.trend_frac, r.seas_frac, r.resid_frac)
+        for r in flagship(spark, sf_dir).collect()
+    }
+    want = _flagship_by_hand(spark, sf_dir)
+    assert sorted(got) == sorted(want)
+    assert {s for s, _ in got} == {"events", "synthetic"}
+    for key, row in want.items():
+        assert got[key][0] == row[0], key
+        assert np.allclose(got[key][1:], row[1:], rtol=0, atol=1e-9), (key, got[key], row)
 
 
 def test_bucketed_join_no_shuffle(spark):

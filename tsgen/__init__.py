@@ -7,6 +7,8 @@ data-pipeline extensions (dedup, similarity search, text analysis).
 
 Layout (see SURVEY.md §7):
     session.py     SparkSession builder
+    worker_daemon.py  Python-worker daemon that keeps Spark's own zip
+                   directories cached across tasks
     expr.py        engine-agnostic SQL scalar expressions (shared with the
                    DuckDB oracle — determinism by construction)
     generators.py  synthetic series sources (reference utils/data_generators.py)

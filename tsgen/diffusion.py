@@ -190,6 +190,20 @@ def _np_posterior_step(X, x0, row: dict, keys, t: int):
     return mean + row["posterior_variance"] ** 0.5 * _np_normal(keys, step_salt(SALT_PNOISE, t))
 
 
+# (timesteps, kind) → {t_step: schedule row}. The rows are a pure function of
+# the key and the schedules module constants, so an entry is never stale;
+# collecting them once saves the 2 Spark jobs each sampler build used to run.
+_SCHEDULE_ROWS: dict[tuple[int, str], dict[int, dict]] = {}
+
+
+def _schedule_rows(spark: SparkSession, timesteps: int, kind: str) -> dict[int, dict]:
+    key = (timesteps, kind)
+    if key not in _SCHEDULE_ROWS:
+        rows = schedule_table(spark, timesteps, kind).collect()
+        _SCHEDULE_ROWS[key] = {r.t_step: r.asDict() for r in rows}
+    return _SCHEDULE_ROWS[key]
+
+
 def _fused_map(
     spark: SparkSession,
     n_series: int,
@@ -200,7 +214,7 @@ def _fused_map(
 ) -> DataFrame:
     """Range(n_series) → one mapInPandas running `batch(sched, series_ids)`
     once per Arrow batch; `sched` maps t_step to its schedule row."""
-    sched = {r.t_step: r.asDict() for r in schedule_table(spark, timesteps, kind).collect()}
+    sched = _schedule_rows(spark, timesteps, kind)
 
     def fn(batches):
         for pdf in batches:
