@@ -5,6 +5,10 @@ sibling at the shared operating point and (b) be monotone along its
 axis — the two invariants the oracle gate alone can't phrase. Values
 are certified by tools/check_oracle.py against the DuckDB twins.
 
+The first two tests gate the md5-prefix shingle/token hash itself: both
+engines must compute it bit-for-bit, and the MinHash form must spread over
+[0, HASH_P).
+
 The last test gates the exact string-keyed path (hash_key=False) of the
 substring dedup ops, which no registry query runs, against their oracles.
 """
@@ -16,6 +20,7 @@ import pytest
 
 SF = "/root/testdata/sf0.001"
 SF_GATE = str(Path(SF).with_name("sf0.01"))  # the oracle gate's scale
+SF_BENCH = str(Path(SF).with_name("sf0.1"))
 
 
 @pytest.fixture(scope="module")
@@ -26,6 +31,57 @@ def docs(spark):
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet")
+
+
+@pytest.fixture(scope="module")
+def hashed(spark):
+    """Both md5-prefix hash forms of every distinct sf0.1 word and word
+    3-shingle plus edge strings, as (s, x, x63) rows from Spark and from
+    DuckDB."""
+    import duckdb
+
+    from tsgen.dedup import HASH63_DUCK, HASH63_SPARK, HASH_DUCK, HASH_SPARK, _shingles_sql
+
+    with duckdb.connect() as con:
+        strings = con.execute(
+            f"""
+            SELECT DISTINCT s FROM (
+              SELECT unnest(list_concat(toks, {_shingles_sql(3)})) AS s
+              FROM (SELECT string_split(text, ' ') AS toks
+                    FROM read_parquet('{SF_BENCH}/documents.parquet')))
+            UNION SELECT unnest(['', 'é', '日本語', '😀x'])"""
+        ).df()
+        con.register("strings", strings)
+        duck = con.execute(
+            f"SELECT s, {HASH_DUCK.format(c='s')} AS x, {HASH63_DUCK.format(c='s')} AS x63 "
+            "FROM strings"
+        ).fetchall()
+    got = spark.createDataFrame(strings).selectExpr(
+        "s", f"{HASH_SPARK.format(c='s')} AS x", f"{HASH63_SPARK.format(c='s')} AS x63"
+    )
+    return sorted(tuple(r) for r in got.collect()), sorted(duck)
+
+
+def test_md5_hash_spark_matches_duckdb(hashed):
+    # the one shingle/token hash must be bit-identical on both engines, in
+    # both forms, including the empty string and multi-byte UTF-8
+    spark_rows, duck_rows = hashed
+    assert len(spark_rows) >= 2000
+    assert {"", "é", "日本語", "😀x"} <= {r[0] for r in spark_rows}
+    assert spark_rows == duck_rows
+
+
+def test_minhash_input_spans_hash_p(hashed):
+    # _mins_sql's small odd multipliers only give independent minimizers
+    # when (x * (2i+1) + b_i) wraps mod HASH_P, i.e. when x spreads over
+    # [0, HASH_P); a narrow hash (e.g. 28 bits, no pmod) never wraps and
+    # h0..h3 then share one minimizer
+    from tsgen.dedup import HASH_P
+
+    xs = [r[1] for r in hashed[0]]
+    assert min(xs) >= 0 and max(xs) < HASH_P
+    assert max(xs) > 1 << 30
+    assert all(0 <= r[2] < 1 << 63 for r in hashed[0])
 
 
 def test_threshold_frontier_agrees_with_ppjoin_at_base(docs):
@@ -56,7 +112,7 @@ def test_band_frontier_agrees_with_single_point_eval(docs):
 
     rows = {r.bands: r for r in minhash_band_frontier(docs).collect()}
     assert sorted(rows) == [2, 4, 8, 16]
-    # the bands=4 row IS lsh_recall_eval (same 16-hash portable signature,
+    # the bands=4 row IS lsh_recall_eval (same 16-hash signature,
     # same 4x4 banding, same exact-PPJoin truth at the eval threshold)
     single = lsh_recall_eval(docs).collect()[0]
     r4 = rows[4]
@@ -67,6 +123,21 @@ def test_band_frontier_agrees_with_single_point_eval(docs):
     )
     assert r4.recall == single.recall
     assert r4.precision == single.precision
+
+
+def test_lsh_recall_eval_builds_without_a_job(spark, docs):
+    # the eval is one lazy plan: building it runs no Spark job, so its cost
+    # is paid once, by the caller's action
+    from tsgen.dedup import lsh_recall_eval
+
+    sc = spark.sparkContext
+    group = "lsh_recall_eval.build"
+    sc.setJobGroup(group, group)
+    try:
+        lsh_recall_eval(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_band_frontier_candidate_sets_nested(docs):
@@ -158,14 +229,14 @@ def test_dedup_incremental_planted_shard(spark):
 
 
 def test_dedup_incremental_matches_full_lsh_restriction(spark, docs):
-    from tsgen.dedup import INCR_MOD, dedup_incremental_lsh, minhash_portable_pairs
+    from tsgen.dedup import INCR_MOD, dedup_incremental_lsh, minhash_lsh_pairs
 
-    # The incremental run must equal the FULL portable-LSH run (same
+    # The incremental run must equal the FULL 16x4 LSH run (same
     # banding, same verify threshold) restricted to pairs involving a new
     # doc: dup_vs_base docs = new docs with any base partner in the full
     # pair set; dup_within_new docs = new docs with an earlier new partner.
     out = dedup_incremental_lsh(docs).collect()
-    full = minhash_portable_pairs(docs).collect()
+    full = minhash_lsh_pairs(docs, n_hashes=16, bands=4).collect()
     vs_base, within = set(), set()
     for r in full:
         for new, other in ((r.doc_a, r.doc_b), (r.doc_b, r.doc_a)):
@@ -208,13 +279,13 @@ def test_dims_frontier_anchor_and_trunc_recall_agreement(spark, emb):
 
 
 def test_minhash_size_frontier_shared_pairs_and_bounds(spark, docs):
-    from tsgen.dedup import minhash_portable_pairs, minhash_size_frontier
+    from tsgen.dedup import minhash_lsh_pairs, minhash_size_frontier
 
     rows = {r.sig_len: r for r in minhash_size_frontier(docs).collect()}
     assert sorted(rows) == [4, 8, 16]
     # all three estimators are evaluated on the SAME candidate pair set —
     # the certified (4x4) banding with verify threshold 0
-    n_cand = minhash_portable_pairs(docs, verify_threshold=0.0).count()
+    n_cand = minhash_lsh_pairs(docs, n_hashes=16, bands=4, verify_threshold=0.0).count()
     assert {r.n_pairs for r in rows.values()} == {n_cand}
     for r in rows.values():
         assert 0.0 <= r.mean_abs_err <= 1.0

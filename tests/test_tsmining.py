@@ -1,7 +1,6 @@
 """Semantic tests for the TS-mining operators (queries_tsmining.py):
 Lomb-Scargle peak recovery, technical-indicator invariants, Hurst exponent
-regimes, Engle-Granger cointegration detection, and portable-hash parity for
-the oracle-checkable dedup variants."""
+regimes, Engle-Granger cointegration detection, and SimHash band slicing."""
 import datetime
 import math
 
@@ -101,34 +100,16 @@ def test_coint_detects_cointegrated_pair(spark):
     assert indep.df_t > -3.0  # cannot reject: not cointegrated
 
 
-def test_portable_hash_matches_polynomial_fold(spark):
-    """The Spark-side portable fold must equal the reference polynomial
-    31x+codepoint mod 2^31-1 (the DuckDB twin computes the same closed
-    form; cross-engine parity is the oracle gate's job)."""
-    df = spark.createDataFrame([("abc",), ("hello world",), ("",)], "s string")
-    got = df.select(
-        F.expr(dedup._FOLD_SPARK.format(c="s")).alias("h")
-    ).collect()
-
-    def fold(s):
-        h = 0
-        for ch in s:
-            h = (h * 31 + ord(ch)) % 2147483647
-        return h
-
-    for row, (s,) in zip(got, [("abc",), ("hello world",), ("",)]):
-        assert row.h == fold(s)
-
-
-def test_simhash_portable_bands_consistent(spark):
-    """Band columns must be exact 16-bit slices of the signature, and
-    identical docs must collide on every band."""
+def test_simhash_bands_consistent(spark):
+    """Band columns must be exact 16-bit slices of the 63-bit signature,
+    and identical docs must collide on every band."""
     df = spark.createDataFrame(
         [(1, "the quick brown fox"), (2, "the quick brown fox"), (3, "completely different text here")],
         "doc_id bigint, text string",
     )
-    sim = {r.doc_id: r for r in dedup.simhash_portable(df).collect()}
+    sim = {r.doc_id: r for r in dedup.simhash(df).collect()}
     for r in sim.values():
+        assert 0 <= r.simhash < 1 << 63
         for b in range(4):
             assert getattr(r, f"band{b}") == (r.simhash >> (16 * b)) & 0xFFFF
     assert sim[1].simhash == sim[2].simhash

@@ -97,7 +97,8 @@ def main() -> int:
     con = duck_con(sf_dir)
     qs = entry_mod.queries()
     osql = entry_mod.oracle_sql()
-    n_pass = n_fail = n_noracle = 0
+    n_pass = n_fail = 0
+    rows_only = []
     for name, fn in qs.items():
         if filters and not any(f in name for f in filters):
             continue
@@ -110,7 +111,7 @@ def main() -> int:
             continue
         if name not in osql:
             print(f"—     {name}: no oracle ({len(spdf)} rows, {time.time()-t0:.1f}s)")
-            n_noracle += 1
+            rows_only.append(name)
             continue
         try:
             opdf = con.execute(osql[name]).df()
@@ -127,7 +128,8 @@ def main() -> int:
         else:
             n_pass += 1
             print(f"pass  {name} ({len(spdf)} rows, {time.time()-t0:.1f}s)")
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} rows-only")
+    names = f" ({', '.join(rows_only)})" if rows_only else ""
+    print(f"\n{n_pass} pass, {n_fail} fail, {len(rows_only)} rows-only{names}")
     return 1 if n_fail else 0
 
 

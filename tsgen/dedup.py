@@ -7,14 +7,15 @@ Four tiers, each with a different cost/recall point:
 - MinHash + LSH: shingle→minhash signatures→banded bucket join; candidate
   pairs are generated by an equi-join on (band, band_signature) — the
   100 TB-safe path (no quadratic blowup; shuffle keys are uniform hashes).
-- SimHash: 64-bit sign-of-weighted-votes fingerprint; near-dups agree on
+- SimHash: 63-bit sign-of-weighted-votes fingerprint; near-dups agree on
   most bits; banded by 16-bit chunks for candidate generation.
 
-All computed with Catalyst built-ins (xxhash64, explode, groupBy, bit ops);
-no Python in the hot path. MinHash/SimHash use Spark's xxhash64 → engine
-specific → rows-only driver checks + property tests (tests/test_pipeline.py).
-`minhash_portable_pairs` swaps xxhash64 for an engine-portable polynomial
-fold so the WHOLE LSH pipeline is DuckDB-oracle-checkable bit-for-bit.
+All computed with Catalyst built-ins (md5, explode, groupBy, bit ops); no
+Python in the hot path. MinHash, SimHash and text.feature_hash hash each
+shingle or token with ONE md5-prefix expression that Spark and DuckDB both
+evaluate (HASH_SPARK/HASH_DUCK, HASH63_SPARK/HASH63_DUCK), so every
+signature, band bucket and verified pair is DuckDB-oracle-checked
+bit-for-bit (minhash_lsh_sql, simhash_sql, simhash_pairs_sql).
 """
 from __future__ import annotations
 
@@ -23,6 +24,19 @@ from pyspark.sql import DataFrame, Window, functions as F
 from .text import fingerprint
 
 HASH_P = (1 << 31) - 1  # keep a*x+b < 2^62 under ANSI overflow checks
+
+# The one shingle and token hash, as SQL text both engines parse: a hex
+# prefix of md5 over the string's UTF-8 bytes. MinHash and feature hashing
+# read 15 hex chars (60 bits) reduced mod HASH_P, so x spreads over
+# [0, HASH_P) and the small odd multipliers of _mins_sql wrap it (a
+# narrower prefix that never wraps gives h0..h3 one shared minimizer).
+# SimHash reads all 16 hex chars — signed in Spark's conv, unsigned in
+# DuckDB, the same 64 bits — and drops the lowest so the 63 bits left fit
+# a non-negative BIGINT on both engines.
+HASH_SPARK = f"pmod(CAST(conv(substring(md5({{c}}), 1, 15), 16, 10) AS BIGINT), {HASH_P})"
+HASH_DUCK = f"(CAST(('0x' || substr(md5({{c}}), 1, 15)) AS BIGINT) % {HASH_P})"
+HASH63_SPARK = "shiftrightunsigned(CAST(conv(substring(md5({c}), 1, 16), 16, -10) AS BIGINT), 1)"
+HASH63_DUCK = "CAST((CAST(('0x' || substr(md5({c}), 1, 16)) AS UBIGINT) >> 1) AS BIGINT)"
 
 
 def exact_dedup(df: DataFrame, text: str = "text") -> DataFrame:
@@ -46,6 +60,16 @@ def shingles(df: DataFrame, text: str = "text", k: int = 3) -> DataFrame:
         "ELSE array(concat_ws(' ', _toks)) END"
     )
     return df.withColumn("shingles", sh).drop("_toks")
+
+
+def _shingles_sql(k: int) -> str:
+    """DuckDB twin of shingles() over a `toks` list (1-based slicing)."""
+    return (
+        f"CASE WHEN len(toks) >= {k} THEN "
+        f"list_distinct(list_transform(range(1, len(toks) - {k} + 2), "
+        "i -> array_to_string(toks[i:i+%d], ' '))) " % (k - 1)
+        + "ELSE [array_to_string(toks, ' ')] END"
+    )
 
 
 def jaccard_pairs(
@@ -144,12 +168,7 @@ def jaccard_pairs_sql(
     exploded-join + df-cap formulation so both engines agree exactly."""
     cols = ", ".join(block_cols)
     block_on = " AND ".join(f"a.{c} = b.{c}" for c in block_cols)
-    sh = (
-        f"CASE WHEN len(toks) >= {k} THEN "
-        f"list_distinct(list_transform(range(1, len(toks) - {k} + 2), "
-        "i -> array_to_string(toks[i:i+%d], ' '))) " % (k - 1)
-        + "ELSE [array_to_string(toks, ' ')] END"
-    )
+    sh = _shingles_sql(k)
     cap_cte = (
         f"capped AS (SELECT {cols}, shingle FROM ex GROUP BY {cols}, shingle "
         f"HAVING count(*) <= {df_cap}),\n"
@@ -181,25 +200,31 @@ WHERE CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) >= {threshold:.9
 """
 
 
-def _min_exprs(n_hashes: int) -> list:
-    """The n_hashes min-hash aggregate columns h_i = min((x·(2i+1) + b_i)
-    mod p), each built from ONE SQL string. The Column-API loop this
-    replaces cost ~9 py4j round trips per hash (~1.4 ms each) at every
-    query build — ~0.2-0.4 s of pure driver time per minhash query (r14
-    build/exec split). Same expression tree, same values."""
-    return [
-        F.expr(f"min((x * {2 * i + 1} + {7919 * i + 12345}) % {HASH_P})").alias(f"h{i}")
-        for i in range(n_hashes)
-    ]
+def _mins_sql(n_hashes: int) -> list[str]:
+    """The n_hashes min-hash aggregates h_i = min((x·(2i+1) + b_i) mod p),
+    as text both engines run."""
+    return [f"min((x * {2 * i + 1} + {7919 * i + 12345}) % {HASH_P})" for i in range(n_hashes)]
+
+
+def _shingle_table(df: DataFrame, text: str, k: int) -> DataFrame:
+    """(doc_id, shingles), pinned lazily (persist on a cluster): the
+    signature build and the exact-Jaccard verify both read it; without the
+    pin the corpus is scanned and re-shingled once per reader."""
+    return shingles(df, text, k).select("doc_id", "shingles").localCheckpoint(eager=False)
 
 
 def _signatures_from_shingled(sh_table: DataFrame, n_hashes: int) -> DataFrame:
-    """MinHash signatures from a pre-shingled (doc_id, shingles) table."""
+    """MinHash signatures (doc_id, sig) from a pre-shingled (doc_id,
+    shingles) table: one explode + one partial-agg min groupBy."""
     # explode_outer: shingles is never null/empty; plain explode's implicit
     # filter re-evaluates the shingling expression when the input is lazy
     sh = sh_table.select("doc_id", F.explode_outer("shingles").alias("shingle"))
-    sh = sh.withColumn("x", F.pmod(F.xxhash64("shingle"), F.lit(HASH_P)))
-    g = sh.groupBy("doc_id").agg(*_min_exprs(n_hashes))
+    sh = sh.withColumn("x", F.expr(HASH_SPARK.format(c="shingle")))
+    # each h_i from ONE SQL string: the Column-API loop this replaced cost
+    # ~9 py4j round trips per hash (~1.4 ms each) at every query build
+    g = sh.groupBy("doc_id").agg(
+        *[F.expr(m).alias(f"h{i}") for i, m in enumerate(_mins_sql(n_hashes))]
+    )
     return g.select("doc_id", F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig"))
 
 
@@ -216,14 +241,27 @@ def minhash_lsh_pairs(
     Band the signature (rows = n_hashes/bands per band); docs sharing any
     band bucket become candidates (equi-join on (band, band_sig) — uniform
     hash keys, no skew); candidates are verified with exact Jaccard.
+    DuckDB replays the whole pipeline bit-for-bit (minhash_lsh_sql).
     """
-    rows = n_hashes // bands
-    # Shingle ONCE (persist on a cluster): both the signature build and the
-    # exact-Jaccard verify need the shingle sets; without this the corpus is
-    # scanned and re-shingled three times.
-    sh_table = shingles(df, text, k).select("doc_id", "shingles").localCheckpoint(eager=False)
+    sh_table = _shingle_table(df, text, k)
     sig = _signatures_from_shingled(sh_table, n_hashes)
-    return _lsh_band_verify(sig, sh_table, bands, rows, verify_threshold)
+    return _lsh_band_verify(sig, sh_table, bands, n_hashes // bands, verify_threshold)
+
+
+def _band_explode(sig: DataFrame, bands: int, rows: int) -> DataFrame:
+    """(doc_id, band, bsig): one row per band, bsig = the band's `rows`
+    signature slots joined by ','. ONE F.expr string (the element_at/
+    concat_ws Column loop cost ~6 py4j calls per band slot at build time)."""
+    bsigs = ", ".join(
+        "named_struct('band', {b}, 'bsig', concat_ws(',', {slots}))".format(
+            b=b,
+            slots=", ".join(f"sig[{b * rows + r}]" for r in range(rows)),
+        )
+        for b in range(bands)
+    )
+    return sig.select(
+        "doc_id", F.expr(f"explode(array({bsigs}))").alias("bb")
+    ).select("doc_id", "bb.band", "bb.bsig")
 
 
 def _lsh_band_verify(
@@ -236,22 +274,11 @@ def _lsh_band_verify(
 ) -> DataFrame:
     """Shared LSH tail: band the signature array, equi-join band buckets for
     candidates, verify candidates with exact Jaccard over the shingle sets.
-    The banding explode is ONE F.expr string (the element_at/concat_ws
-    Column loop cost ~6 py4j calls per band slot at build time), and the
-    verify joins move xxhash64'd shingle arrays instead of raw strings —
+    The verify joins move xxhash64'd shingle arrays instead of raw strings —
     |A∩B|/|A∪B| is unchanged absent a 64-bit collision within one pair's
     union (the standing adjudication; see prefix_jaccard's corpus-scale
     math) and every consumer stays green against the string-keyed oracle."""
-    bsigs = ", ".join(
-        "named_struct('band', {b}, 'bsig', concat_ws(',', {slots}))".format(
-            b=b,
-            slots=", ".join(f"sig[{b * rows + r}]" for r in range(rows)),
-        )
-        for b in range(bands)
-    )
-    banded = sig.select(
-        "doc_id", F.expr(f"explode(array({bsigs}))").alias("bb")
-    ).select("doc_id", "bb.band", "bb.bsig")
+    banded = _band_explode(sig, bands, rows)
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (
@@ -281,90 +308,60 @@ def _lsh_band_verify(
     return cand
 
 
-# Engine-portable shingle hash: polynomial fold over codepoints mod 2^31-1.
-# Spark `ascii` and DuckDB `ord` both return the codepoint of the first char
-# (DuckDB ord('') is -1 vs Spark ascii('') = 0, hence the greatest() guard on
-# the DuckDB side); the fold keeps every intermediate < 2^36, exact in BIGINT
-# on both engines.
-_FOLD_SPARK = "aggregate(split({c}, ''), 0L, (acc, ch) -> (acc * 31 + ascii(ch)) % 2147483647)"
-_FOLD_DUCK = (
-    "list_reduce(list_prepend(0, list_transform(split({c}, ''), "
-    "ch -> greatest(ord(ch), 0))), (a, b) -> (a * 31 + b) % 2147483647)"
+# Exact Jaccard of two shingle lists `sa`/`sb` in the DuckDB oracles.
+_JAC_SQL = (
+    "CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)"
+    " / len(list_distinct(list_concat(sa.shingles, sb.shingles)))"
 )
 
 
-def minhash_portable_pairs(
-    df: DataFrame,
-    n_hashes: int = 16,
-    bands: int = 4,
-    text: str = "text",
+def minhash_ctes_sql(
+    n_hashes: int,
+    band_configs: tuple[tuple[int, int], ...],
     k: int = 3,
-    verify_threshold: float = 0.3,
-) -> DataFrame:
-    """Oracle-checkable MinHash-LSH: identical banding + exact-Jaccard verify
-    to minhash_lsh_pairs, but the shingle hash is the portable polynomial
-    fold instead of xxhash64, so DuckDB replays the ENTIRE pipeline —
-    signatures, band buckets, candidate join, verify — bit-for-bit
-    (minhash_portable_sql). Same scale shape: one explode + one partial-agg
-    min groupBy, band equi-join on uniform keys, no quadratic blowup.
-
-    Reference parity: covers the same near-dup contract as the xxhash64 path
-    (kept as the throughput headline); jaccard is rounded to 6dp for stable
-    cross-engine value hashes."""
-    rows = n_hashes // bands
-    sh_table = shingles(df, text, k).select("doc_id", "shingles").localCheckpoint(eager=False)
-    ex = sh_table.select("doc_id", F.explode_outer("shingles").alias("shingle"))
-    hx = ex.withColumn("x", F.expr(_FOLD_SPARK.format(c="shingle")))
-    sig = hx.groupBy("doc_id").agg(*_min_exprs(n_hashes)).select(
-        "doc_id", F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig")
+    materialized: tuple[str, ...] = ("sh",),
+) -> str:
+    """The CTEs every DuckDB MinHash oracle starts from: sh (doc_id,
+    shingles), ex (one row per shingle), hx (x = HASH_DUCK), sig (doc_id,
+    h0..h{n_hashes-1}) and banded (doc_id, [bands,] band, bsig) for each
+    (bands, rows) in band_configs — the `bands` column only when there is
+    more than one config. `materialized` names the CTEs DuckDB must
+    compute once."""
+    mat = {c: " MATERIALIZED" if c in materialized else "" for c in ("sh", "sig")}
+    mins = ",\n       ".join(f"{m} AS h{i}" for i, m in enumerate(_mins_sql(n_hashes)))
+    multi = len(band_configs) > 1
+    band_sel = "\n  UNION ALL ".join(
+        f"SELECT doc_id, {f'{bands} AS bands, ' if multi else ''}{b} AS band, concat_ws(',', "
+        + ", ".join(f"h{b * rows + r}" for r in range(rows))
+        + ") AS bsig FROM sig"
+        for bands, rows in band_configs
+        for b in range(bands)
     )
-    return _lsh_band_verify(sig, sh_table, bands, rows, verify_threshold, round6=True)
+    return f"""sh AS{mat["sh"]} (
+  SELECT doc_id, {_shingles_sql(k)} AS shingles
+  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
+ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
+hx AS (SELECT doc_id, {HASH_DUCK.format(c="shingle")} AS x FROM ex),
+sig AS{mat["sig"]} (SELECT doc_id, {mins} FROM hx GROUP BY doc_id),
+banded AS ({band_sel})"""
 
 
-def minhash_portable_sql(
-    n_hashes: int = 16,
-    bands: int = 4,
+def minhash_lsh_sql(
+    n_hashes: int = 32,
+    bands: int = 8,
     k: int = 3,
     verify_threshold: float = 0.3,
 ) -> str:
-    """DuckDB oracle twin of minhash_portable_pairs (1-based list slicing)."""
-    rows = n_hashes // bands
-    sh = (
-        f"CASE WHEN len(toks) >= {k} THEN "
-        f"list_distinct(list_transform(range(1, len(toks) - {k} + 2), "
-        "i -> array_to_string(toks[i:i+%d], ' '))) " % (k - 1)
-        + "ELSE [array_to_string(toks, ' ')] END"
-    )
-    mins = ",\n       ".join(
-        f"min((x * {2 * i + 1} + {7919 * i + 12345}) % {HASH_P}) AS h{i}"
-        for i in range(n_hashes)
-    )
-    band_sel = "\n  UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, concat_ws(','," \
-        + ", ".join(f"h{b * rows + r}" for r in range(rows)) \
-        + ") AS bsig FROM sig"
-        for b in range(bands)
-    )
-    jac = (
-        "CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)"
-        " / len(list_distinct(list_concat(sa.shingles, sb.shingles)))"
-    )
-    fold = _FOLD_DUCK.format(c="shingle")
+    """DuckDB oracle twin of minhash_lsh_pairs with jaccard rounded to 6dp."""
     return f"""
-WITH sh AS (
-  SELECT doc_id, {sh} AS shingles
-  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-hx AS (SELECT doc_id, {fold} AS x FROM ex),
-sig AS (SELECT doc_id, {mins} FROM hx GROUP BY doc_id),
-banded AS ({band_sel}),
+WITH {minhash_ctes_sql(n_hashes, ((bands, n_hashes // bands),), k, materialized=())},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM banded a JOIN banded b ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id)
 SELECT doc_a, doc_b,
-       (round(({jac}) + 1.0e-9, 6)+0.0e0) AS jaccard
+       (round(({_JAC_SQL}) + 1.0e-9, 6)+0.0e0) AS jaccard
 FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-WHERE {jac} >= {verify_threshold:.9e}
+WHERE {_JAC_SQL} >= {verify_threshold:.9e}
 """
 
 
@@ -492,15 +489,15 @@ def connected_components(
     return lab
 
 
-def simhash(df: DataFrame, text: str = "text", bits: int = 64, hash_expr=None) -> DataFrame:
-    """SimHash fingerprint: per token hash, vote +1/−1 per bit, sign → bit.
+def simhash(df: DataFrame, text: str = "text") -> DataFrame:
+    """63-bit SimHash fingerprint: per token hash (HASH63_SPARK), vote
+    +1/−1 per bit, sign → bit.
 
     Implemented as explode → per-bit vote sums (partial-aggregated) → bit
     assembly. → (doc_id, simhash BIGINT, plus 4×16-bit band columns for
-    candidate blocking). hash_expr overrides the default xxhash64 token
-    hash (simhash_portable passes the engine-portable fold)."""
+    candidate blocking). DuckDB replays it bit-for-bit (simhash_sql)."""
     toks = df.select("doc_id", F.explode(F.split(F.col(text), " ")).alias("token"))
-    toks = toks.withColumn("h", F.xxhash64("token") if hash_expr is None else hash_expr)
+    toks = toks.withColumn("h", F.expr(HASH63_SPARK.format(c="token")))
     # SWAR vote packing: the ±1 vote for bit i is equivalent to
     # "2*popcount_i > n", so only the per-bit 0/1 POPCOUNTS are aggregated —
     # packed 4 lanes of 16 bits per 64-bit word. 16 plain sums + 1 count
@@ -524,14 +521,12 @@ def simhash(df: DataFrame, text: str = "text", bits: int = 64, hash_expr=None) -
         for w in range(16)
     ]
     g = toks.groupBy("doc_id").agg(F.count("*").alias("_n"), *packs)
-    terms = []
-    for i in range(bits):
-        w, k = i % 16, i // 16
-        weight = f"{2**i}L" if i < 63 else "(CAST(-9223372036854775807 AS BIGINT) - 1L)"
-        terms.append(
-            f"CASE WHEN (shiftrightunsigned(p{w}, {16 * k}) & 65535) * 2 > _n "
-            f"THEN {weight} ELSE 0L END"
-        )
+    # bit 63 of h is always 0, so its vote never wins: 63 terms
+    terms = [
+        f"CASE WHEN (shiftrightunsigned(p{i % 16}, {16 * (i // 16)}) & 65535) * 2 > _n "
+        f"THEN {2**i}L ELSE 0L END"
+        for i in range(63)
+    ]
     out = g.select("doc_id", F.expr(" + ".join(terms)).alias("simhash"))
     for band in range(4):
         out = out.withColumn(
@@ -540,79 +535,36 @@ def simhash(df: DataFrame, text: str = "text", bits: int = 64, hash_expr=None) -
     return out
 
 
-# Multipliers for the four independent 16-bit fold lanes of the portable
-# 64-bit token hash (any small coprime-ish odd constants work).
-_FOLD_MULTS = (31, 37, 41, 43)
-
-
-# Lane 3 keeps 15 bits (63-bit total hash): a full 64th bit would make the
-# signature negative in a signed BIGINT, which DuckDB rejects as left-shift
-# overflow while Spark silently wraps — 63 bits sidesteps the divergence.
-_LANE_MASKS = (0xFFFF, 0xFFFF, 0xFFFF, 0x7FFF)
-
-
-def _portable_hash63_spark(col: str):
-    """63-bit engine-portable token hash: four polynomial folds (distinct
-    multipliers) contribute 16+16+16+15 bits. All four lanes advance in ONE
-    aggregate() pass over the char array (struct accumulator) — the lanes
-    are independent, so the DuckDB twin may still fold them separately and
-    produce identical bits. The bit assembly runs in aggregate()'s FINISH
-    lambda: the old form read four getField()s of the fold result in one
-    projection, and interpreted HOFs get no subexpression elimination, so
-    the whole char fold evaluated FOUR times per token (the r13
-    CollapseProject trap); one finish lambda evaluates it once."""
-    lanes = ", ".join(
-        f"'l{i}', (acc.l{i} * {mult} + ascii(ch)) % 2147483647"
-        for i, mult in enumerate(_FOLD_MULTS)
-    )
-    init = ", ".join(f"'l{i}', 0L" for i in range(len(_FOLD_MULTS)))
-    assemble = " + ".join(
-        f"shiftleft(CAST((acc.l{lane} & {mask}) AS BIGINT), {16 * lane})"
-        for lane, mask in enumerate(_LANE_MASKS)
-    )
-    return F.expr(
-        f"aggregate(split({col}, ''), named_struct({init}), "
-        f"(acc, ch) -> named_struct({lanes}), acc -> {assemble})"
-    )
-
-
-def _portable_hash63_duck(col: str) -> str:
-    terms = []
-    for lane, (mult, mask) in enumerate(zip(_FOLD_MULTS, _LANE_MASKS)):
-        fold = _FOLD_DUCK.format(c=col).replace("* 31", f"* {mult}")
-        terms.append(f"((CAST(({fold}) AS BIGINT) & {mask}) << {16 * lane})")
-    return " + ".join(terms)
-
-
-def simhash_portable(df: DataFrame, text: str = "text") -> DataFrame:
-    """Oracle-checkable 63-bit SimHash: identical vote/band/verify pipeline
-    to simhash() but the per-token hash is the portable 4-lane polynomial
-    fold instead of xxhash64, so DuckDB replays signatures, 16-bit banding,
-    and the hamming verify exactly (simhash_portable_sql). The xxhash64
-    path stays as the throughput headline."""
-    return simhash(df, text, bits=63, hash_expr=_portable_hash63_spark("token"))
-
-
-def simhash_portable_sql(max_dist: int = 20) -> str:
-    """DuckDB oracle twin of simhash_portable → hamming_pairs."""
+def _simhash_ctes_sql() -> str:
+    """DuckDB CTEs of simhash(): toks, hx (x = HASH63_DUCK), votes and sig
+    (doc_id, simhash)."""
     votes = ",\n       ".join(f"sum((x >> {i}) & 1) AS c{i}" for i in range(63))
-    sig_terms = [
+    sig = " + ".join(
         f"(CASE WHEN 2 * c{i} > n THEN CAST({1 << i} AS BIGINT) ELSE 0 END)"
         for i in range(63)
-    ]
-    sig = " + ".join(sig_terms)
+    )
+    return f"""toks AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
+hx AS (
+  SELECT doc_id, {HASH63_DUCK.format(c="token")} AS x
+  FROM toks),
+votes AS (SELECT doc_id, count(*) AS n, {votes} FROM hx GROUP BY doc_id),
+sig AS (SELECT doc_id, {sig} AS simhash FROM votes)"""
+
+
+def simhash_sql() -> str:
+    """DuckDB oracle twin of simhash(...).select("doc_id", "simhash")."""
+    return f"\nWITH {_simhash_ctes_sql()}\nSELECT doc_id, simhash FROM sig\n"
+
+
+def simhash_pairs_sql(max_dist: int = 20) -> str:
+    """DuckDB oracle twin of simhash → hamming_pairs."""
     band_sel = "\n  UNION ALL ".join(
         f"SELECT doc_id, {b} AS band_id, (simhash >> {b * 16}) & 65535 AS bk FROM sig"
         for b in range(4)
     )
     return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-hx AS (
-  SELECT doc_id, {_portable_hash63_duck("token")} AS x
-  FROM toks),
-votes AS (SELECT doc_id, count(*) AS n, {votes} FROM hx GROUP BY doc_id),
-sig AS (SELECT doc_id, {sig} AS simhash FROM votes),
+WITH {_simhash_ctes_sql()},
 banded AS ({band_sel}),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -794,12 +746,7 @@ def prefix_jaccard_sql(k: int = 3, threshold: float = PREFIX_T, sized: bool = Fa
     from . import expr as E
 
     T = E.NUM(threshold)
-    sh = (
-        f"CASE WHEN len(toks) >= {k} THEN "
-        f"list_distinct(list_transform(range(1, len(toks) - {k} + 2), "
-        "i -> array_to_string(toks[i:i+%d], ' '))) " % (k - 1)
-        + "ELSE [array_to_string(toks, ' ')] END"
-    )
+    sh = _shingles_sql(k)
     return f"""
 WITH toks AS MATERIALIZED (
   SELECT doc_id, unnest({sh}) AS token
@@ -845,40 +792,32 @@ def lsh_recall_eval(docs: DataFrame, threshold: float = EVAL_T) -> DataFrame:
     band collisions. This is the eval that justifies (or indicts) a
     bands/rows configuration BEFORE running it over a petabyte — recall
     says what the banding misses, precision says how much verify work
-    collisions cost. Both pipelines use the portable hash, so the whole
-    eval is engine-replayable.
+    collisions cost. The hash is HASH_SPARK, so the whole eval is
+    engine-replayable.
 
     Scale shape: composes two already-bounded pipelines (prefix join +
-    banded LSH); the eval itself is three counts."""
-    truth = prefix_jaccard(docs, threshold=threshold).select("doc_a", "doc_b")
-    cand = minhash_portable_pairs(docs, verify_threshold=0.0)
-    n_truth = truth.count()
-    n_cand = cand.count()
-    n_hit = cand.filter(F.col("jaccard") >= threshold).count()
-    spark = docs.sparkSession
-    out = spark.createDataFrame(
-        [(n_truth, n_cand, n_hit)], "n_truth bigint, n_cand bigint, n_hits bigint"
+    banded 16x4 LSH); the eval itself is one aggregate over the candidates
+    (n_cand, n_hits) cross-joined with the truth count — one lazy plan, no
+    job at build time."""
+    n_truth = prefix_jaccard(docs, threshold=threshold).agg(F.count("*").alias("n_truth"))
+    sh_table = _shingle_table(docs, "text", 3)
+    sig = _signatures_from_shingled(sh_table, 16)
+    cand = _lsh_band_verify(sig, sh_table, 4, 4, verify_threshold=0.0, round6=True)
+    counts = cand.agg(
+        F.count("*").alias("n_cand"),
+        F.count(F.when(F.col("jaccard") >= threshold, 1)).alias("n_hits"),
     )
-    return out.select(
+
+    def ratio(den: str) -> F.Column:
+        q = F.col("n_hits").cast("double") / F.greatest(F.col(den), F.lit(1))
+        return F.round(q + F.lit(1e-9), 6) + F.lit(0.0)
+
+    return counts.crossJoin(F.broadcast(n_truth)).select(
         "n_truth",
         "n_cand",
         "n_hits",
-        (
-            F.round(
-                F.col("n_hits").cast("double") / F.greatest(F.col("n_truth"), F.lit(1))
-                + F.lit(1e-9),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("recall"),
-        (
-            F.round(
-                F.col("n_hits").cast("double") / F.greatest(F.col("n_cand"), F.lit(1))
-                + F.lit(1e-9),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("precision"),
+        ratio("n_truth").alias("recall"),
+        ratio("n_cand").alias("precision"),
     )
 
 
@@ -887,7 +826,7 @@ def lsh_recall_eval_sql(threshold: float = EVAL_T) -> str:
 
     T = E.NUM(threshold)
     truth = prefix_jaccard_sql(threshold=threshold)
-    cand = minhash_portable_sql(verify_threshold=0.0)
+    cand = minhash_lsh_sql(16, 4, verify_threshold=0.0)
     return f"""
 WITH truth AS MATERIALIZED ({truth}),
 cand AS MATERIALIZED ({cand}),
@@ -988,7 +927,7 @@ def minhash_band_frontier(
     docs: DataFrame, text: str = "text", k: int = 3, threshold: float = EVAL_T
 ) -> DataFrame:
     """MinHash banding frontier: recall/precision of EVERY (bands, rows)
-    split of ONE 16-hash portable signature table, against the exact
+    split of ONE 16-hash signature table, against the exact
     PPJoin truth at the eval threshold. This is the LSH S-curve as a
     table: more rows/band -> fewer, cleaner candidates; fewer rows/band
     -> higher recall at quadratic verify cost. lsh_recall_eval is the
@@ -1008,12 +947,8 @@ def minhash_band_frontier(
     this table exists to expose before a petabyte run.
     -> (bands, rows_per_band, n_cand, n_hits, n_truth, recall, precision)."""
     n_hashes = 16
-    sh_table = (
-        shingles(docs, text, k).select("doc_id", "shingles").localCheckpoint(eager=False)
-    )
-    ex = sh_table.select("doc_id", F.explode_outer("shingles").alias("shingle"))
-    hx = ex.withColumn("x", F.expr(_FOLD_SPARK.format(c="shingle")))
-    sig = hx.groupBy("doc_id").agg(*_min_exprs(n_hashes))
+    sh_table = _shingle_table(docs, text, k)
+    sig = _signatures_from_shingled(sh_table, n_hashes)
     # Candidate sets are NESTED, so only the FINEST banding (16 bands of 1
     # row) needs a self-join: a pair collides in config (bands, rows) iff
     # some aligned run of `rows` consecutive single-hash positions all
@@ -1023,19 +958,16 @@ def minhash_band_frontier(
     # 16-bit position-collision MASK with exact integer arithmetic — no
     # per-config distinct, no second join of candidates against the
     # verified jaccards (opt guide §2.3/§2.4: fewer and narrower shuffle
-    # bytes, shuffles removed outright). coalesce(h, -1) reproduces the old
-    # concat_ws null behavior (a doc's h columns are all-null or all-set,
-    # so empty-shingle docs still collide with each other, never with a
-    # real hash — HASH_P hashes are nonnegative). Counts are provably
-    # identical: mask bit b set <=> old single-row band b bsig equality,
-    # and old multi-row bsig equality <=> all member positions equal
-    # (concat_ws is unambiguous here because mixed null/non-null rows
-    # cannot occur).
+    # bytes, shuffles removed outright). coalesce(h, -1) reproduces the
+    # oracle's concat_ws null behavior (a doc's slots are all-null or
+    # all-set, so empty-shingle docs still collide with each other, never
+    # with a real hash — HASH_P hashes are nonnegative). Counts are provably
+    # identical: mask bit b set <=> single-row band b bsig equality, and
+    # multi-row bsig equality <=> all member positions equal (concat_ws is
+    # unambiguous here because mixed null/non-null rows cannot occur).
     banded = sig.select(
         "doc_id",
-        F.posexplode(
-            F.array(*[F.coalesce(F.col(f"h{i}"), F.lit(-1)) for i in range(n_hashes)])
-        ).alias("band", "bk"),
+        F.posexplode(F.expr("transform(sig, h -> coalesce(h, -1L))")).alias("band", "bk"),
     )
     a = banded.alias("a")
     b = banded.alias("b")
@@ -1069,8 +1001,8 @@ def minhash_band_frontier(
         .select(
             "mask",
             # 6dp-rounded with the house idiom so the hit test below sees the
-            # SAME jaccard lsh_recall_eval filters (minhash_portable_pairs
-            # emits round6=True) — keeps the tested "bands=4 row IS
+            # SAME jaccard lsh_recall_eval filters (its _lsh_band_verify
+            # runs with round6=True) — keeps the tested "bands=4 row IS
             # lsh_recall_eval" invariant exact on boundary corpora (ADVICE r10).
             F.round(
                 F.size(F.array_intersect("sh_a", "sh_b"))
@@ -1153,38 +1085,10 @@ def minhash_band_frontier_sql(k: int = 3, threshold: float = EVAL_T) -> str:
 
     n_hashes = 16
     T = E.NUM(threshold)
-    sh = (
-        f"CASE WHEN len(toks) >= {k} THEN "
-        f"list_distinct(list_transform(range(1, len(toks) - {k} + 2), "
-        "i -> array_to_string(toks[i:i+%d], ' '))) " % (k - 1)
-        + "ELSE [array_to_string(toks, ' ')] END"
-    )
-    mins = ",\n       ".join(
-        f"min((x * {2 * i + 1} + {7919 * i + 12345}) % {HASH_P}) AS h{i}"
-        for i in range(n_hashes)
-    )
-    band_sel = "\n  UNION ALL ".join(
-        f"SELECT doc_id, {bands} AS bands, {b} AS band, concat_ws(',', "
-        + ", ".join(f"h{b * rows + r}" for r in range(rows))
-        + ") AS bsig FROM sig"
-        for bands, rows in BAND_CONFIGS
-        for b in range(bands)
-    )
     cfg_list = ", ".join(str(bb) for bb, _ in BAND_CONFIGS)
-    jac = (
-        "CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)"
-        " / len(list_distinct(list_concat(sa.shingles, sb.shingles)))"
-    )
-    fold = _FOLD_DUCK.format(c="shingle")
     truth = prefix_jaccard_sql(k=k, threshold=threshold)
     return f"""
-WITH sh AS MATERIALIZED (
-  SELECT doc_id, {sh} AS shingles
-  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-hx AS (SELECT doc_id, {fold} AS x FROM ex),
-sig AS (SELECT doc_id, {mins} FROM hx GROUP BY doc_id),
-banded AS ({band_sel}),
+WITH {minhash_ctes_sql(n_hashes, BAND_CONFIGS, k)},
 bcand AS MATERIALIZED (
   SELECT DISTINCT a.bands, a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM banded a JOIN banded b
@@ -1192,7 +1096,7 @@ bcand AS MATERIALIZED (
    AND a.doc_id < b.doc_id),
 pairs AS (SELECT DISTINCT doc_a, doc_b FROM bcand),
 ver AS (
-  SELECT doc_a, doc_b, round({jac} + 1.0e-9, 6) AS jaccard
+  SELECT doc_a, doc_b, round({_JAC_SQL} + 1.0e-9, 6) AS jaccard
   FROM pairs JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b),
 per_cfg AS (
   SELECT c.bands, count(*) AS n_cand,
@@ -1243,34 +1147,12 @@ def dedup_incremental_lsh(
     Scale shape: signatures are one explode + one partial-agg min groupBy
     over the full corpus (the signature store, computed once and stored
     in a real deployment); the candidate join filters ONE side to the new
-    shard before joining; verify is linear in |candidates|. Same portable
-    hash as minhash_portable_pairs, so DuckDB replays it bit-for-bit."""
-    rows = n_hashes // bands
+    shard before joining; verify is linear in |candidates|. Same
+    signatures and banding as minhash_lsh_pairs, so DuckDB replays it
+    bit-for-bit."""
     is_new = (F.col("doc_id") % mod) == 0
-    sh_table = (
-        shingles(docs, text, k).select("doc_id", "shingles").localCheckpoint(eager=False)
-    )
-    ex = sh_table.select("doc_id", F.explode_outer("shingles").alias("shingle"))
-    hx = ex.withColumn("x", F.expr(_FOLD_SPARK.format(c="shingle")))
-    sig = hx.groupBy("doc_id").agg(*_min_exprs(n_hashes)).select(
-        "doc_id", F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig")
-    )
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ",", *[F.element_at("sig", b * rows + r + 1) for r in range(rows)]
-                        ).alias("bsig"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bsig")
+    sh_table = _shingle_table(docs, text, k)
+    banded = _band_explode(_signatures_from_shingled(sh_table, n_hashes), bands, n_hashes // bands)
     nb = banded.filter(is_new).select(
         F.col("doc_id").alias("new_id"), "band", "bsig"
     )
@@ -1338,37 +1220,9 @@ def dedup_incremental_lsh_sql(
 ) -> str:
     from . import expr as E
 
-    rows = n_hashes // bands
     T = E.NUM(threshold)
-    sh = (
-        f"CASE WHEN len(toks) >= {k} THEN "
-        f"list_distinct(list_transform(range(1, len(toks) - {k} + 2), "
-        "i -> array_to_string(toks[i:i+%d], ' '))) " % (k - 1)
-        + "ELSE [array_to_string(toks, ' ')] END"
-    )
-    mins = ",\n       ".join(
-        f"min((x * {2 * i + 1} + {7919 * i + 12345}) % {HASH_P}) AS h{i}"
-        for i in range(n_hashes)
-    )
-    band_sel = "\n  UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, concat_ws(','," \
-        + ", ".join(f"h{b * rows + r}" for r in range(rows)) \
-        + ") AS bsig FROM sig"
-        for b in range(bands)
-    )
-    jac = (
-        "CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)"
-        " / len(list_distinct(list_concat(sa.shingles, sb.shingles)))"
-    )
-    fold = _FOLD_DUCK.format(c="shingle")
     return f"""
-WITH sh AS MATERIALIZED (
-  SELECT doc_id, {sh} AS shingles
-  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-hx AS (SELECT doc_id, {fold} AS x FROM ex),
-sig AS (SELECT doc_id, {mins} FROM hx GROUP BY doc_id),
-banded AS ({band_sel}),
+WITH {minhash_ctes_sql(n_hashes, ((bands, n_hashes // bands),), k)},
 icand AS (
   SELECT DISTINCT n.doc_id AS new_id, b.doc_id AS other_id
   FROM banded n JOIN banded b ON n.band = b.band AND n.bsig = b.bsig
@@ -1378,7 +1232,7 @@ ver AS (
   SELECT c.new_id, c.other_id % {mod} <> 0 AS other_is_base
   FROM icand c JOIN sh sa ON sa.doc_id = c.new_id
                JOIN sh sb ON sb.doc_id = c.other_id
-  WHERE {jac} >= {T}),
+  WHERE {_JAC_SQL} >= {T}),
 flags AS (
   SELECT new_id,
          max(CASE WHEN other_is_base THEN 1 ELSE 0 END) AS f_base,
@@ -1404,7 +1258,7 @@ def minhash_size_frontier(
     docs: DataFrame, text: str = "text", k: int = 3, n_hashes: int = 16, bands: int = 4
 ) -> DataFrame:
     """Signature-storage frontier: Jaccard estimation error of EVERY
-    signature length from ONE 16-hash portable signature table — the
+    signature length from ONE 16-hash signature table — the
     first L hash slots of an independent-hash minhash ARE a valid
     L-hash minhash, so the 4/8/16-hash estimators share one computation.
     At 100 TB the signature store is n_hashes longs per doc; this table
@@ -1417,17 +1271,8 @@ def minhash_size_frontier(
     from the certified (4x4) banding. Emits mean absolute error and mean
     signed bias per L. -> (sig_len, n_pairs, mean_abs_err, mean_bias)."""
     rows = n_hashes // bands
-    sh_table = (
-        shingles(docs, text, k).select("doc_id", "shingles").localCheckpoint(eager=False)
-    )
-    ex = sh_table.select("doc_id", F.explode_outer("shingles").alias("shingle"))
-    hx = ex.withColumn("x", F.expr(_FOLD_SPARK.format(c="shingle")))
-    sig = (
-        hx.groupBy("doc_id")
-        .agg(*_min_exprs(n_hashes))
-        .select("doc_id", F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig"))
-        .localCheckpoint(eager=False)
-    )
+    sh_table = _shingle_table(docs, text, k)
+    sig = _signatures_from_shingled(sh_table, n_hashes).localCheckpoint(eager=False)
     pairs = _lsh_band_verify(sig, sh_table, bands, rows, verify_threshold=0.0, round6=True)
     joined = (
         pairs.join(
@@ -1462,28 +1307,6 @@ def minhash_size_frontier(
 
 
 def minhash_size_frontier_sql(k: int = 3, n_hashes: int = 16, bands: int = 4) -> str:
-    rows = n_hashes // bands
-    sh = (
-        f"CASE WHEN len(toks) >= {k} THEN "
-        f"list_distinct(list_transform(range(1, len(toks) - {k} + 2), "
-        "i -> array_to_string(toks[i:i+%d], ' '))) " % (k - 1)
-        + "ELSE [array_to_string(toks, ' ')] END"
-    )
-    mins = ",\n       ".join(
-        f"min((x * {2 * i + 1} + {7919 * i + 12345}) % {HASH_P}) AS h{i}"
-        for i in range(n_hashes)
-    )
-    band_sel = "\n  UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, concat_ws(','," \
-        + ", ".join(f"h{b * rows + r}" for r in range(rows)) \
-        + ") AS bsig FROM sig"
-        for b in range(bands)
-    )
-    jac = (
-        "CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)"
-        " / len(list_distinct(list_concat(sa.shingles, sb.shingles)))"
-    )
-    fold = _FOLD_DUCK.format(c="shingle")
     est_cols = []
     for L in SIG_LENGTHS:
         m = " + ".join(
@@ -1501,21 +1324,15 @@ def minhash_size_frontier_sql(k: int = 3, n_hashes: int = 16, bands: int = 4) ->
     )
     est_sel = ",\n         ".join(est_cols)
     return f"""
-WITH sh AS MATERIALIZED (
-  SELECT doc_id, {sh} AS shingles
-  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-hx AS (SELECT doc_id, {fold} AS x FROM ex),
-sig AS MATERIALIZED (SELECT doc_id, {mins} FROM hx GROUP BY doc_id),
-banded AS ({band_sel}),
+WITH {minhash_ctes_sql(n_hashes, ((bands, n_hashes // bands),), k, materialized=("sh", "sig"))},
 bcand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM banded a JOIN banded b
     ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id),
 pairs AS (
-  SELECT doc_a, doc_b, (round(({jac}) + 1.0e-9, 6)+0.0e0) AS jaccard
+  SELECT doc_a, doc_b, (round(({_JAC_SQL}) + 1.0e-9, 6)+0.0e0) AS jaccard
   FROM bcand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-  WHERE {jac} >= 0.0e0),
+  WHERE {_JAC_SQL} >= 0.0e0),
 est AS (
   SELECT p.jaccard,
          {est_sel}

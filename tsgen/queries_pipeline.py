@@ -207,20 +207,10 @@ def _q_containment(spark, sf_dir):
 
 
 def _q_minhash(spark, sf_dir):
-    # xxhash64-based → engine-specific → rows-only; recall asserted in tests
+    # md5-prefix hash (dedup.HASH_SPARK) → DuckDB replays it (minhash_lsh_sql)
     docs = read_table(spark, sf_dir, "documents", fanout=True)
     out = dedup.minhash_lsh_pairs(docs, verify_threshold=0.05)
     return round6(out, "jaccard")
-
-
-def _q_minhash_portable(spark, sf_dir):
-    docs = read_table(spark, sf_dir, "documents", fanout=True)
-    return dedup.minhash_portable_pairs(docs, verify_threshold=0.05)
-
-
-def _q_simhash_portable(spark, sf_dir):
-    sim = dedup.simhash_portable(read_table(spark, sf_dir, "documents", fanout=True))
-    return dedup.hamming_pairs(sim, max_dist=20)
 
 
 def _q_simhash(spark, sf_dir):
@@ -965,21 +955,19 @@ _REGISTRY.update(
             dedup.jaccard_pairs_sql(["lang", "source"], threshold=0.01, containment=True),
             ("dedup",),
         ),
-        "minhash_lsh": Query("minhash_lsh", _q_minhash, None, ("dedup",)),
-        "minhash_lsh_portable": Query(
-            "minhash_lsh_portable",
-            _q_minhash_portable,
-            dedup.minhash_portable_sql(verify_threshold=0.05),
+        "minhash_lsh": Query(
+            "minhash_lsh",
+            _q_minhash,
+            dedup.minhash_lsh_sql(verify_threshold=0.05),
             ("dedup",),
         ),
-        "simhash": Query("simhash", _q_simhash, None, ("dedup",)),
-        "simhash_portable": Query(
-            "simhash_portable",
-            _q_simhash_portable,
-            dedup.simhash_portable_sql(max_dist=20),
+        "simhash": Query("simhash", _q_simhash, dedup.simhash_sql(), ("dedup",)),
+        "simhash_pairs": Query(
+            "simhash_pairs",
+            _q_simhash_pairs,
+            dedup.simhash_pairs_sql(max_dist=20),
             ("dedup",),
         ),
-        "simhash_pairs": Query("simhash_pairs", _q_simhash_pairs, None, ("dedup",)),
         "embed_trunc_recall": Query(
             "embed_trunc_recall",
             _q_trunc_recall,

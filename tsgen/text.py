@@ -225,11 +225,11 @@ def feature_hash(
     without any global vocabulary build — the property that makes the
     hashing trick THE featurizer at 100 TB: one explode + one partial-agged
     groupBy, no vocab broadcast, no second pass. Emits (doc_id, bucket, w)
-    for w != 0; the hash is the engine-portable polynomial codepoint fold
-    so DuckDB replays it exactly."""
-    from .dedup import _FOLD_SPARK
+    for w != 0; the hash is the md5-prefix shingle hash of MinHash
+    (dedup.HASH_SPARK), so DuckDB replays it exactly."""
+    from .dedup import HASH_SPARK
 
-    h = F.expr(_FOLD_SPARK.format(c="token"))
+    h = F.expr(HASH_SPARK.format(c="token"))
     toks = with_tokens(df, text).select(
         "doc_id", F.explode("tokens").alias("token")
     )
@@ -247,9 +247,9 @@ def feature_hash(
 
 
 def feature_hash_sql(n_buckets: int = FEATURE_HASH_BUCKETS) -> str:
-    from .dedup import _FOLD_DUCK
+    from .dedup import HASH_DUCK
 
-    h = _FOLD_DUCK.format(c="token")
+    h = HASH_DUCK.format(c="token")
     return f"""
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
